@@ -10,6 +10,7 @@ import os
 import pytest
 
 from udacitydatawarehouseprj_spark import pipeline
+from udacitydatawarehouseprj_spark import session as S
 from udacitydatawarehouseprj_spark.sources import json_source, sinks
 from tests import sparkify_fixtures as fx
 
@@ -57,6 +58,54 @@ def test_read_songs_json_recursive(spark, json_data):
     assert {r.song_id for r in df.collect()} == {"SO001", "SO002", "SO003", "SO004"}
 
 
+def test_glob_read_defines_without_a_spark_job(spark, tmp_path):
+    """A glob over more than 32 files (Spark's parallel-listing threshold)
+    is listed on the driver of the engine's local session: defining the
+    read schedules no Spark job."""
+    n_files = 40
+    for i in range(n_files):
+        day = tmp_path / "log_data" / "2018" / f"{11 + i // 30}"
+        day.mkdir(parents=True, exist_ok=True)
+        with open(day / f"2018-{11 + i // 30}-{1 + i % 30:02d}-events.json", "w") as f:
+            for row in fx.EVENTS_ROWS:
+                f.write(json.dumps(dict(zip(fx.EVENTS_COLUMNS, row))) + "\n")
+    glob = str(tmp_path / "log_data" / "*" / "*" / "*-events.json")
+
+    sc = spark.sparkContext
+    group = f"glob-read-{tmp_path.name}"
+    sc.setJobGroup(group, "define a glob read")
+    try:
+        df = json_source.read_events_json(spark, glob, corrupt_col=None)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() == n_files * len(fx.EVENTS_ROWS)
+
+
+def test_listing_threshold_only_on_sessions_built_for_local(spark):
+    """Driver-side listing is a build-time conf of local sessions: a
+    cluster master keeps Spark's default and configure() never sets it,
+    so an external session is left as it was built."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert key in S.build_conf("local[4]") and key in S.build_conf("local")
+    assert key not in S.build_conf("spark://driver:7077")
+    assert key not in S.build_conf("local-cluster[2,1,1024]")
+    assert key not in S.RUNTIME_CONF
+    other = spark.newSession()
+    other.conf.unset(key)
+    S.configure(other)
+    assert other.conf.get(key) == "32"
+
+
+def test_runtime_confs_are_all_modifiable(spark):
+    """configure() sets only confs a live session accepts; the build-only
+    ones still reach every session get_spark builds."""
+    assert [k for k in S.RUNTIME_CONF if not spark.conf.isModifiable(k)] == []
+    conf = spark.sparkContext.getConf()
+    assert {k: conf.get(k) for k in S.BUILD_CONF} == S.BUILD_CONF
+
+
 def test_run_etl_end_to_end(spark, json_data, tmp_path):
     events_dir, songs_dir, _ = json_data
     out = pipeline.run_etl(spark, events_dir, songs_dir, str(tmp_path / "warehouse"))
@@ -70,6 +119,8 @@ def test_run_etl_end_to_end(spark, json_data, tmp_path):
     assert counts["dim_artists"] == 3
     assert counts["dim_users"] == 5   # quirk Q3 preserved
     assert counts["dim_time_dimensions"] == 7
+    # the declared-schema read-back counts what an inferred read counts
+    assert counts == {n: spark.read.parquet(p).count() for n, p in out.items()}
     # fact ↔ time-dim referential integrity (quirk Q2 fixed)
     star = pipeline.load_star(spark, out)
     fact_keys = {r.time_key for r in star["fct_song_plays"].select("time_key").collect()}
@@ -102,8 +153,6 @@ def test_bucketed_table_write(spark):
 def test_catalog_introspection(spark, sf_dir):
     """S6: pg_table_def catalog listing (reference Fiddle.ipynb cell 19) →
     spark.catalog.listTables."""
-    from udacitydatawarehouseprj_spark import session as S
-
     S.load_tables(spark, sf_dir, names=("region", "nation"))
     names = {t.name for t in spark.catalog.listTables()}
     assert {"region", "nation"} <= names
@@ -133,8 +182,6 @@ def test_write_compacted_caps_file_size_and_count(spark, sf_dir, tmp_path):
     import glob
 
     import pyarrow.parquet as pq
-
-    from udacitydatawarehouseprj_spark import session as S
 
     ev = S.load_table(spark, sf_dir, "events").select("event_id", "event_type")
     out = str(tmp_path / "compacted")

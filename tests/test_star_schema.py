@@ -2,8 +2,30 @@
 
 from __future__ import annotations
 
+import pytest
+
+from udacitydatawarehouseprj_spark import schemas
 from udacitydatawarehouseprj_spark.plans import star_schema
 from tests import sparkify_fixtures as fx
+
+
+@pytest.mark.parametrize(
+    "options", [{}, {"dedupe_users": True, "time_dim_limit": 3}],
+    ids=["default", "dedupe_users+time_dim_limit"],
+)
+def test_declared_star_schemas_match_build(spark, options):
+    """schemas.STAR is what the ETL's read-back imposes on the written
+    tables; a COUNT reads no column, so a type drift between the build and
+    the declaration would otherwise go unnoticed. Nullability is ignored:
+    Spark reads every parquet column back as nullable."""
+    built = star_schema.build_star_schema(
+        fx.make_events(spark), fx.make_songs(spark), **options
+    )
+    assert set(built) == set(schemas.STAR)
+    for name, df in built.items():
+        got = [(f.name, f.dataType) for f in df.schema]
+        want = [(f.name, f.dataType) for f in schemas.STAR[name]]
+        assert got == want, name
 
 
 def test_fact_preserves_all_plays(spark):

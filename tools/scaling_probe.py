@@ -52,7 +52,7 @@ def main() -> None:
         t0 = time.perf_counter()
         run_one(registry[name](spark, sf_dir))
         sec = time.perf_counter() - t0
-        spark.sparkContext.setJobGroup(None, None)
+        spark.sparkContext._jsc.clearJobGroup()  # pyspark wraps no clearJobGroup
         dedup.release_caches()
         job_ids = st.getJobIdsForGroup(group)
         n_stages = 0

@@ -19,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from udacitydatawarehouseprj_spark import schemas
 from udacitydatawarehouseprj_spark.plans import star_schema
 from udacitydatawarehouseprj_spark.sources import json_source, sinks
 
@@ -58,13 +59,16 @@ def run_etl(
 def validation_counts(spark: SparkSession, table_paths: dict[str, str]) -> dict[str, int]:
     """The reference's manual notebook validation (Fiddle.ipynb cells
     44-50): one COUNT per output table."""
-    return {
-        name: spark.read.parquet(path).count() for name, path in table_paths.items()
-    }
+    return {name: df.count() for name, df in load_star(spark, table_paths).items()}
 
 
 def load_star(spark: SparkSession, table_paths: dict[str, str]) -> dict[str, DataFrame]:
-    return {n: spark.read.parquet(p) for n, p in table_paths.items()}
+    """Read star-schema tables back with their declared schemas
+    (``schemas.STAR``), so no parquet schema-inference job runs."""
+    return {
+        name: spark.read.schema(schemas.STAR[name]).parquet(path)
+        for name, path in table_paths.items()
+    }
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -118,3 +118,13 @@ DIM_TIME_DIMENSIONS = T.StructType(
         T.StructField("special_event", T.StringType()),  # NULL placeholder
     ]
 )
+
+#: The star schema by output table name. The ETL's read-back passes these
+#: to ``spark.read.schema`` so reading a table runs no schema-inference job.
+STAR = {
+    "fct_song_plays": FCT_SONG_PLAYS,
+    "dim_users": DIM_USERS,
+    "dim_songs": DIM_SONGS,
+    "dim_artists": DIM_ARTISTS,
+    "dim_time_dimensions": DIM_TIME_DIMENSIONS,
+}

@@ -10,6 +10,11 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
 * shuffle partitions sized from the env (local) — on a real cluster this
   should be ~2-3x total cores or left to AQE's coalescing.
 * Arrow on for any pandas interchange (``toPandas``, pandas UDFs).
+* file discovery on the driver for a local master: Spark otherwise lists
+  more than 32 input paths with a Spark job, which on a local master is
+  one task per path in this same JVM — ~25x the CPU of a driver listing
+  for a 182-file glob. A cluster master keeps Spark's parallel listing,
+  which spreads a huge landing zone over executors.
 * session timezone pinned to UTC so timestamp-derived columns (time_key,
   hour, week...) are deterministic and match the DuckDB oracle, which
   operates on naive UTC timestamps.
@@ -54,12 +59,25 @@ RUNTIME_CONF = {
     # Python DataSource filter pushdown (sources/python_source.py
     # implements pushFilters; the API refuses to plan without the flag)
     "spark.sql.python.filterPushdown.enabled": "true",
+}
+
+# Confs only the sessions get_spark builds receive: Spark refuses them on
+# a live session (CANNOT_MODIFY_CONFIG), so configure() never tries.
+BUILD_CONF = {
     # A round-11 sf100 run lost a Python worker to a silent crash
     # (segfault, no traceback) and the executor waited on the dead
     # worker's socket indefinitely; faulthandler makes any future
     # worker crash print a Python-level traceback instead of hanging
     # the stage silently. Negligible overhead (a signal handler).
     "spark.python.worker.faulthandler.enabled": "true",
+}
+
+# Build-time confs for a local master only; a cluster keeps Spark's defaults.
+LOCAL_BUILD_CONF = {
+    # List input files on the driver: a local "parallel" listing job runs
+    # one task per path in this same JVM (a 182-file glob cost ~3.0 s CPU
+    # per read as a job vs ~0.1 s listed on the driver, 4 cores).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
 }
 
 
@@ -201,9 +219,17 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in RUNTIME_CONF.items():
+    for k, v in build_conf(master).items():
         builder = builder.config(k, v)
     return configure(builder.getOrCreate())
+
+
+def build_conf(master: str) -> dict[str, str]:
+    """Every conf get_spark sets on a session it builds for ``master``."""
+    conf = {**RUNTIME_CONF, **BUILD_CONF}
+    if master == "local" or master.startswith("local["):
+        conf.update(LOCAL_BUILD_CONF)
+    return conf
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -19,7 +19,12 @@ million-small-files catalog layout, per-file task overhead dominates;
 ``wholeTextFiles``-style coalescing is unnecessary here because the JSON
 reader already packs small files into shared partitions
 (spark.sql.files.openCostInBytes), but at 100 TB the right fix is
-compacting the landing zone, not tuning the reader.
+compacting the landing zone, not tuning the reader. Defining a read lists
+its files: past 32 paths (a daily-file glob) Spark lists them with a
+Spark job, so ``session.get_spark`` keeps listing on the driver for a
+local master, where that job's one task per path runs in the same JVM and
+cost ~25x the CPU of a driver listing. A cluster master keeps the
+parallel listing, which spreads a huge landing zone over executors.
 """
 
 from __future__ import annotations
