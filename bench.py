@@ -1,4 +1,5 @@
-"""Benchmark harness: runs the engine's headline queries at
+"""Benchmark harness: runs every registered query (``run_order()``:
+HEADLINE first, then the rest in registry order) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
@@ -10,9 +11,10 @@ plan — unlike count(), which lets Catalyst prune unreferenced projections).
 Noise control (round-6 verdict: single-run box noise was ±8-15%, making
 sub-1.5 s/query deltas unresolvable round-over-round): every query is
 timed SPARK_GRAFT_BENCH_REPEATS times (default 3) and the MEDIAN is
-reported. Streaming/phased queries run once — their cost is dominated
-by real stream execution with checkpoints, and repeating them triples
-wall-clock for a number that is harness-floor-bound anyway (the ~10 s
+reported. A query that records harness phases on its first run
+(queries.PHASE_TIMINGS — the streaming proofs) runs once: its cost is
+dominated by real stream execution with checkpoints, and repeating it
+triples wall-clock for a number that is harness-floor-bound anyway (the ~10 s
 per-batch plan-construction floor, measured round 4). The full report
 (BENCH_full_latest.json) also records each query's min-max spread so a
 noisy box is visible in the record itself.
@@ -30,7 +32,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from udacitydatawarehouseprj_spark import queries as Q  # noqa: E402
 from udacitydatawarehouseprj_spark import session as S  # noqa: E402
-from udacitydatawarehouseprj_spark.operators import dedup  # noqa: E402
 
 #: benched subset: every operator family, weighted toward the
 #: shuffle/join/explode-heavy queries that dominate at scale.
@@ -81,502 +82,69 @@ HEADLINE = [
     "multimodal_byte_features",
 ]
 
-#: queries added after BENCH_r01 — timed separately so the headline total
-#: stays comparable round-over-round; value_all includes everything.
-NEW_QUERIES_R02 = [
-    "embedding_near_dup_bcast",
-    "ann_lsh_recall_check",
-    "ann_ivf_recall_check",
-    "approx_distinct_check",
-    "simhash_band_complete_check",
-    "json_ingest_events_log",
-    "json_ingest_songs_catalog",
-    "multimodal_image_decode",
-    "streaming_hourly_sink_readback",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q10_returned_items",
-    "tpch_q18_large_volume_customer",
-    "pivot_event_type_daily",
-    "agg_cube",
-    "exists_customers_with_orders",
-    "window_rolling_hour_stats",
-    "merge_upsert_customers",
-    "array_functions_suite",
-    "dedup_near_dup_clusters",
-    "corpus_clean_pipeline",
-    "doc_length_histogram",
-    "pack_context_windows",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q22_global_sales_opportunity",
-    "text_pii_redact",
-    "text_repetition_gopher",
-    "train_val_test_split",
-    "training_shuffle_buckets",
-    "tpch_q4_order_priority",
-    "tpch_q12_ship_class_priority",
-    "tpch_q15_top_supplier",
-    "tpch_q21_waiting_supplier",
-    "incremental_dedup_new_docs",
-    "text_trigram_lm_score",
-    "zorder_key_orders",
-    "streaming_corpus_dedup_readback",
-    "heavy_hitters_check",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_part_count",
-    "tpch_q20_promotion_candidates",
-    "window_functions_suite",
-    "unpivot_lineitem_measures",
-    "join_full_outer",
-    "agg_argmax_suite",
-    "chunk_documents_windows",
-    "vocab_build_topk",
-    "embedding_quantize_int8",
-    "weighted_sample_chars",
-    "knn_label_vote",
-]
 
-#: queries added in round 3 — their own bucket (value_new_r03) so every
-#: round's totals stay comparable to its predecessor's.
-NEW_QUERIES_R03 = [
-    "bpe_learn_merges",
-    "mix_sources_weighted",
-    "pack_bins_ffd_check",
-    "corpus_stats_by_source",
-    "semantic_dedup_kmeans",
-    "semantic_dedup_check",
-    "span_dedup_global",
-    "dedup_keep_best_quality",
-    "approx_percentile_check",
-    "decontaminate_bloom",
-    "quality_filter_top_pct",
-    "length_bucket_batches",
-    "bpe_tokenize_corpus",
-    "mmr_rerank_diversified",
-    "mmr_rerank_check",
-    "gap_fill_forward",
-    "delete_propagate_index",
-    "corpus_diff_snapshots",
-    "csv_ingest_roundtrip",
-    "orc_ingest_roundtrip",
-    "multimodal_audio_decode",
-    "scd2_dim_customers",
-    "constraint_audit_star",
-]
-
-#: queries added in round 4 — their own bucket (value_new_r04).
-NEW_QUERIES_R04 = [
-    "source_cap_topn",
-    "funnel_signup_purchase",
-    "retention_cohorts",
-    "winsorize_event_values",
-    "truncate_token_budget",
-    "contamination_fraction",
-    "cluster_size_histogram",
-    # wave 2
-    "text_normalize_nfc",
-    "dsir_importance_weights",
-    "curriculum_order_shards",
-    "reservoir_sample_per_group",
-    "random_projection_embeddings",
-    "jl_distortion_check",
-    # wave 3
-    "dedup_exact_substring",
-    "partitioned_ingest_pruned",
-    "record_linkage_blocked",
-    "text_char_entropy",
-    # wave 4
-    "streaming_stateful_sessions_readback",
-    "incremental_rollup_maintain",
-    "profile_table_stats",
-    "pagerank_similarity_graph",
-    # wave 13
-    "agg_modern_suite",
-    "null_semantics_suite",
-    "lateral_join_top_lineitems",
-    # wave 12
-    "sql_scripting_control_flow",
-    "pipeline_observe_metrics",
-    # wave 10
-    "python_datasource_scan",
-    "python_datasink_roundtrip",
-    "dpp_partitioned_join",
-    "map_functions_suite",
-    "array_hof_suite",
-    # wave 9
-    "streaming_running_totals_readback",
-    "cooccurrence_event_pairs",
-    "key_skew_report",
-    "rfm_customer_segments",
-    # wave 8
-    "multimodal_image_resize",
-    "hll_sketch_rollup",
-    # wave 7
-    "dedup_ngram_containment",
-    "count_min_heavy_hitters",
-    "tokenizer_oov_rate",
-    "retrieval_mrr_eval",
-    # wave 6
-    "ann_pq_topk",
-    "ann_pq_recall_check",
-    "histogram_quantile_sketch",
-    "json_variant_shred",
-    "cross_source_overlap",
-    # wave 5
-    "linreg_by_group",
-    "event_transition_matrix",
-    "ewma_user_value",
-    "mad_outlier_filter",
-    "triangle_count_similarity",
-    "schema_evolution_read",
-    "bootstrap_ci_mean",
-    "grouped_topk_salted",
-]
-
-#: queries added in round 5 — their own bucket (value_new_r05).
-NEW_QUERIES_R05 = [
-    "profile_table_stats_approx",
-    "dim_users_build",
-    "dim_users_build_deduped",
-    "catalog_introspection",
-    "bpe_learn_merges_batched",
-    "equidepth_value_buckets",
-    "ngram_pmi_collocations",
-    "bm25_topk",
-    "matryoshka_prefix_ann",
-    "matryoshka_recall_check",
-    "temperature_mix_sources",
-    "bloom_prefilter_join",
-    "skyline_orders_pareto",
-    "label_propagation_communities",
-    "streaming_attribution_readback",
-    "inverted_index_postings",
-    "quantile_normalize_by_group",
-    "recursive_cte_reachability",
-    "python_udtf_token_windows",
-    "pca_project_embeddings",
-    "pca_variance_check",
-    "classifier_eval_suite",
-    "resample_interpolate_hourly",
-    "xml_ingest_roundtrip",
-    "leakage_safe_split",
-    "distinct_ngram_diversity",
-    "zipf_law_fit",
-    "compact_small_files",
-    "hopping_window_counts",
-    "k_anonymity_audit",
-    "modern_sql_syntax_suite",
-    "moments_rollup_mergeable",
-    "benford_digit_audit",
-    "surrogate_keys_dense",
-]
-
-NEW_QUERIES_R06 = [
-    "connected_components_minlabel",
-    "skipgram_pairs",
-    "cdc_apply_changes",
-    "stratified_exact_n_sample",
-    "json_malformed_recovery",
-    "fuzzy_match_blocked_levenshtein",
-    "anomaly_seasonal_residuals",
-    "ks_drift_test",
-    "l_diversity_audit",
-    "hard_negative_mining",
-    "multimodal_video_frames",
-    "lines_ingest_roundtrip",
-    "binary_files_ingest",
-    "sparse_tfidf_allpairs",
-    "url_canonicalize_dedup",
-    "annotator_agreement_kappa",
-    "streaming_static_join_readback",
-    "python_datasource_stream_scan",
-    "psi_drift_bins",
-    "calibration_curve_deciles",
-    "dp_noisy_counts_seeded",
-    "ab_test_two_proportion",
-    "k_core_similarity_graph",
-    "minhash_banding_sweep",
-    "entity_resolution_pipeline",
-    "collation_aware_grouping",
-    "sql_udf_suite",
-    "scd2_point_in_time_join",
-    "ratio_to_report_share",
-    "gini_concentration",
-    "json_schema_profile",
-    "sequence_pattern_match",
-]
-
-#: queries added in round 7 — their own bucket (value_new_r07).
-NEW_QUERIES_R07 = [
-    "table_ddl_lifecycle",
-    "sequence_pattern_compile",
-    "er_survivorship_scored",
-    "chi_square_independence",
-    "welch_t_test",
-    "spearman_rank_correlation",
-    "mann_whitney_u",
-    "gaps_islands_streaks",
-    "max_concurrent_sessions",
-    "autocorrelation_hourly",
-    "cusum_changepoint",
-    "personalized_pagerank_seeded",
-    "running_distinct_users",
-    "t_closeness_audit",
-    "randomized_response_seeded",
-    "streaming_stream_join_readback",
-    "domain_blocklist_filter",
-    "holt_exponential_smoothing",
-    "theil_sen_slope",
-    "sequential_pattern_support",
-    "rolling_regression_slope",
-    "anova_oneway_f",
-    "fleiss_kappa_multi_rater",
-    "conversion_latency_percentiles",
-    "dedup_shard_locality_audit",
-    "target_encoding_loo",
-    "mutual_information_bands",
-    "time_weighted_average",
-    "embedding_class_separability",
-    "cluster_medoid_selection",
-    "weighted_jaccard_allpairs",
-    "embedding_standardize_check",
-    "degree_assortativity",
-    "forecast_baseline_mase",
-    "interval_integrity_audit",
-    "sliding_window_distinct_users",
-    "jackknife_ratio_variance",
-    "funnel_three_step_ordered",
-    "heaps_law_fit",
-    "ivm_delta_aggregate",
-    "seasonality_strength",
-    "table_checksum_portable",
-    "weighted_median_exact",
-    "diff_in_diff_estimator",
-    "negative_sampling_unigram",
-    "ablation_nested_subsets",
-    "simpsons_paradox_audit",
-    "late_dimension_backfill",
-    "scd3_previous_value",
-    "cuped_variance_reduction",
-    "message_passing_two_hop",
-    "bom_quantity_rollup",
-    "bitemporal_snapshot_read",
-    "control_chart_xbar",
-    "minhash_overlap_estimate",
-    "covariate_balance_smd",
-    "probabilistic_forecast_eval",
-    "luhn_checksum_audit",
-    "market_basket_lift",
-    "ltv_cohort_curve",
-    "token_diversity_by_source",
-    "duplicate_transaction_flags",
-    "term_trend_log_odds",
-    "pr_auc_average_precision",
-    "kruskal_wallis_test",
-    "bh_fdr_correction",
-    "jaro_winkler_linkage",
-    "kaplan_meier_survival",
-    "mantel_haenszel_or",
-    "adamic_adar_link_prediction",
-    "dbscan_grid_clusters",
-    "levene_brown_forsythe",
-    "mcnemar_paired_test",
-    "kendall_tau_daily",
-    "chao1_vocab_richness",
-    "ridge_regression_closed_form",
-    "mixture_epoch_plan",
-    "qte_decile_effects",
-    "logrank_survival_test",
-    "modularity_components",
-    "cka_embedding_views",
-    "huber_irls_regression",
-    "rbo_rank_agreement",
-    "weighted_sample_no_replacement",
-    "permutation_test_seeded",
-    "clustering_coefficient_local",
-    "langid_confusion_matrix",
-    "audio_frame_energy",
-    "wasserstein_1d_distance",
-    "mann_kendall_trend",
-    "isotonic_calibration_fit",
-    "rmst_survival_auc",
-    "exponential_gof_interarrivals",
-    "ensemble_dedup_consensus",
-    "eb_shrinkage_rates",
-    "tukey_pairwise_contrasts",
-    "markov_attribution_removal",
-    "shapley_attribution_exact",
-    "ipw_ate_stratified",
-    "feature_hashing_collisions",
-    "power_iteration_top_eigen",
-    "aipw_doubly_robust_ate",
-    "qini_uplift_curve",
-    "sprt_sequential_ab",
-    "fairness_parity_audit",
-    "split_half_reliability",
-    "conformal_interval_coverage",
-    "mahalanobis_outliers_2d",
-    "capture_recapture_dups",
-    "cvar_tail_risk",
-    "overdispersion_index",
-]
-
-#: queries added in round 8 — their own bucket (value_new_r08).
-NEW_QUERIES_R08 = [
-    "power_iteration_blas_production",
-    "cka_blas_production",
-    "capture_recapture_loglinear",
-    "streaming_crash_recovery_readback",
-    "effect_size_suite",
-    "wald_iv_estimator",
-    "regression_discontinuity_local",
-    "woe_information_value",
-    "jarque_bera_normality",
-    "ndcg_retrieval_eval",
-    "ngram_novelty_rate",
-    "hits_bipartite_integer",
-    "lift_gain_deciles",
-    "functional_dependency_audit",
-    "inclusion_dependency_audit",
-    "neyman_allocation_sample",
-    "holt_winters_seasonal",
-    "cramers_v_association",
-    "cochran_q_test",
-    "page_hinkley_drift",
-    "tokenizer_fertility_by_lang",
-    "shuffle_quality_audit",
-    "did_placebo_pretrend",
-    "yuen_trimmed_t_test",
-    "holm_bonferroni_stepdown",
-    "median_of_means_estimator",
-    "hill_tail_index",
-    "rolling_origin_backtest",
-    "dawid_skene_one_step",
-    "brier_decomposition",
-    "dp_quantile_exponential_seeded",
-    "doremi_domain_reweight_step",
-]
-
-#: queries added in round 9 — their own bucket (value_new_r09).
-NEW_QUERIES_R09 = [
-    "capture_recapture_lsh",
-    "doremi_lm_loss_reweight",
-    "rrf_hybrid_fusion",
-    "ann_filtered_topk",
-]
-
-#: round-10 bucket: the 12 registry members that predated the bucket
-#: system and were silently absent from every list (VERDICT r9 gap #2 —
-#: all trivial/sub-second, but the absence was unpinned). A test now
-#: asserts registry == union(bench lists), so future registrations
-#: cannot silently skip the bench.
-NEW_QUERIES_R10 = [
-    "filter_eq",
-    "filter_null_probe",
-    "agg_count_star",
-    "agg_groupby_count",
-    "distinct_multi",
-    "epoch_millis_roundtrip",
-    "ann_ivf_topk",
-    "agg_approx_distinct",
-    "systematic_sample",
-    "dedup_ngram_prefix",
-    "decontaminate_overlap",
-    "stratified_sample",
-    # round-10 wave (2 oracled additions)
-    "rerank_cross_encoder_eval",
-    "ann_filtered_topk_composite",
-]
-
-#: round-11 wave (2 oracled additions — batch ANN serving economics,
-#: VERDICT r10 item 5).
-NEW_QUERIES_R11 = [
-    "ann_batch_serving_ivf",
-    "ann_batch_serving_brute",
-]
-
-#: round-12 wave (1 oracled addition — the VERDICT r11 item 6
-#: candidate: the neural-scorer pandas-UDF swap-in at the rerank
-#: cascade's documented seam).
-NEW_QUERIES_R12 = [
-    "rerank_neural_scorer_eval",
-]
-
-#: round-13 wave (1 oracled addition — the VERDICT r12 item 7
-#: candidate: the LEARNED-weight scorer exercising the neural swap
-#: seam end-to-end, training + serving both under the hash gate).
-NEW_QUERIES_R13 = [
-    "rerank_learned_weights_eval",
-]
-
-#: noise quarantine (round 11, VERDICT r10 item 3): queries whose
-#: per-query bench ratio is ATTRIBUTED (controlled interleaved A/B of
-#: HEAD vs the r9-close code, SCALE.md round-11 section) to box state,
-#: not code — shuffle/Arrow-heavy shapes that swing up to ~2× between
-#: box days while the code is untouched. They run and report like every
-#: other query; this list exists so a round-over-round per-query drift
-#: in exactly these names is read against the A/B evidence instead of
-#: re-litigated. The median-ratio headline is robust to them.
-NOISE_QUARANTINE = [
-    "minhash_overlap_estimate",
-    "doremi_lm_loss_reweight",
-]
-
-#: every bench list, in bucket order — the single source of truth for
-#: what runs (main()) and for the registry-completeness test.
-ALL_BUCKETS = [
-    ("headline", HEADLINE),
-    ("new_r02", NEW_QUERIES_R02),
-    ("new_r03", NEW_QUERIES_R03),
-    ("new_r04", NEW_QUERIES_R04),
-    ("new_r05", NEW_QUERIES_R05),
-    ("new_r06", NEW_QUERIES_R06),
-    ("new_r07", NEW_QUERIES_R07),
-    ("new_r08", NEW_QUERIES_R08),
-    ("new_r09", NEW_QUERIES_R09),
-    ("new_r10", NEW_QUERIES_R10),
-    ("new_r11", NEW_QUERIES_R11),
-    ("new_r12", NEW_QUERIES_R12),
-    ("new_r13", NEW_QUERIES_R13),
-]
-
-#: queries whose bench time is dominated by fixture orchestration, not
-#: the operator: queries.PHASE_TIMINGS records their harness phases
-#: (landing-zone write, stream run) so the report splits harness cost
-#: from the readback/operator cost.
-PHASED = {"streaming_hourly_sink_readback", "streaming_corpus_dedup_readback",
-          "streaming_stateful_sessions_readback",
-          "streaming_running_totals_readback",
-          "streaming_attribution_readback",
-          "streaming_static_join_readback",
-          "python_datasource_stream_scan",
-          "streaming_stream_join_readback",
-          "streaming_crash_recovery_readback"}
+def run_order() -> list[str]:
+    """What bench runs, in order: HEADLINE, then every other registered
+    query in registry order. Registry order, not ``queries()`` order —
+    the driver window at the front of ``queries()`` rotates each round
+    and would reshuffle the bench."""
+    headline = set(HEADLINE)
+    return HEADLINE + [n for n in Q.REGISTRY if n not in headline]
 
 
 def run_one(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def warmup(spark, sf_dir: str) -> None:
+    """Unmeasured warmup: JVM/codegen via a small query, plus one trivial
+    mapInPandas pass so the Arrow serializers and the pool of Python
+    worker processes exist before any timed query — otherwise the first
+    Pandas-UDF query is charged ~7 s of interpreter spawn that has
+    nothing to do with the operator being measured."""
+    run_one(Q.REGISTRY["agg_count_star"].fn(spark, sf_dir))
+    run_one(spark.range(0, 1000, 1, spark.sparkContext.defaultParallelism)
+            .mapInPandas(lambda it: it, schema="id long"))
+
+
+def timed_run(spark, query, sf_dir: str) -> float:
+    """Build and run ``query`` once; return its wall time. The per-query
+    operator caches are released after the timer stops, so the unpersist
+    is not charged to the next query's build."""
+    t0 = time.perf_counter()
+    run_one(query(spark, sf_dir))
+    elapsed = time.perf_counter() - t0
+    S.release_tracked_caches()
+    return elapsed
+
+
+def time_query(spark, name: str, query, sf_dir: str, repeats: int):
+    """Time ``repeats`` runs of one query, sorted. A query whose first run
+    records harness phases in ``queries.PHASE_TIMINGS`` (the streaming
+    proofs: landing-zone write, stream run) runs once, and that run must
+    not build a shared cache: its one sample would absorb the build.
+    Returns (sorted run seconds, the recorded phases or None)."""
+    Q.PHASE_TIMINGS.pop(name, None)
+    builds_before = dict(S.SHARED_BUILD_SECONDS)
+    runs = [timed_run(spark, query, sf_dir)]
+    phases = Q.PHASE_TIMINGS.get(name)
+    if phases is None:
+        runs += [timed_run(spark, query, sf_dir) for _ in range(repeats - 1)]
+    elif S.SHARED_BUILD_SECONDS != builds_before:
+        raise RuntimeError(
+            f"{name} runs once but built a shared cache in its timed run")
+    return sorted(runs), phases
+
+
 #: Noise-floor anchor (round 12, VERDICT r11 item 5): a fixed, cheap,
 #: shuffle-exercising workload timed once right after warmup and once
-#: after the last bucket query. Both values land in the report so a run
+#: after the last benched query. Both values land in the report so a run
 #: whose box state CHANGED mid-run (the CLEAN-but-poisoned class: a
 #: disturbance covering all repeats of some queries uniformly, invisible
 #: to the spread rule) is detectable at commit time without a second
-#: full run — bench_guard applies the two-sided drift test. Round-13
-#: change (round-12 advice): the anchor is a DEDICATED synthetic
-#: workload, not a registry query — the old anchor (ann_filtered_topk)
-#: was itself benched in the r09 bucket, so its unmeasured anchor
-#: executions gave its in-bucket median a one-time warm bias vs sibling
-#: queries measured cold.
+#: full run — bench_guard applies the two-sided drift test. The anchor
+#: is a dedicated synthetic workload, not a registry query: unmeasured
+#: anchor executions of a benched query would warm its median.
 ANCHOR_NAME = "synthetic_shuffle_anchor"
 
 
@@ -667,16 +235,7 @@ def main() -> None:
     # are unchanged; the block makes a build-time regression visible.
     S.TIME_SHARED_BUILDS = True
     registry = Q.queries()
-
-    # Unmeasured warmup: JVM/codegen via a small query, plus one trivial
-    # mapInPandas pass so the Arrow serializers and the pool of Python
-    # worker processes exist before any timed query — otherwise the first
-    # Pandas-UDF query is charged ~7 s of interpreter spawn that has
-    # nothing to do with the operator being measured.
-    run_one(registry["agg_count_star"](spark, sf_dir))
-    spark.range(0, 1000, 1, int(spark.sparkContext.defaultParallelism)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    warmup(spark, sf_dir)
 
     # Warm-until-stable anchor sample (round-12 advice): the first
     # execution carries codegen cost and even the second may not be
@@ -688,21 +247,13 @@ def main() -> None:
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     phases: dict[str, dict[str, float]] = {}
-    for name in [n for _, bucket in ALL_BUCKETS for n in bucket]:
-        n_runs = 1 if name in PHASED else repeats
-        runs: list[float] = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            run_one(registry[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-            dedup.release_caches()  # drop per-query shingle caches
-        runs.sort()
+    for name in run_order():
+        runs, ph = time_query(spark, name, registry[name], sf_dir, repeats)
         timings[name] = round(statistics.median(runs), 3)
         spreads[name] = round(runs[-1] - runs[0], 3)
-        if name in PHASED and name in Q.PHASE_TIMINGS:
-            ph = dict(Q.PHASE_TIMINGS[name])
-            ph["readback_agg"] = round(timings[name] - sum(ph.values()), 3)
-            phases[name] = ph
+        if ph is not None:
+            phases[name] = dict(ph, readback_agg=round(
+                timings[name] - sum(ph.values()), 3))
 
     anchor_last = _time_anchor(spark)
 
@@ -757,9 +308,6 @@ def build_reports(timings, spreads, phases, shared_builds, anchor,
         "n_all": len(timings),
         "repeats": repeats,
     }
-    for bucket_name, bucket in ALL_BUCKETS[1:]:
-        report[f"value_{bucket_name}"] = round(
-            sum(timings[n] for n in bucket), 3)
     report_full = dict(
         report, spreads=spreads, phases=phases, shared_builds=shared_builds,
         anchor=anchor,

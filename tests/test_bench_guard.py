@@ -8,7 +8,10 @@ or straggler fails the run (round-11 verdict: the spread rule cannot
 see a disturbance covering all three repeats uniformly)."""
 
 import importlib.util
+import json
 import os
+
+import pytest
 
 
 def _guard():
@@ -245,5 +248,30 @@ def test_anchor_workload_is_not_a_registry_query():
     from udacitydatawarehouseprj_spark import queries as Q
 
     assert bench.ANCHOR_NAME not in Q.REGISTRY
-    listed = {n for _, bucket in bench.ALL_BUCKETS for n in bucket}
-    assert bench.ANCHOR_NAME not in listed
+    assert bench.ANCHOR_NAME not in bench.run_order()
+
+
+
+@pytest.mark.parametrize("same_run", [True, False])
+def test_side_file_recovery_is_reported(monkeypatch, tmp_path, capsys,
+                                        same_run):
+    """The stdout-line report lacks spreads/anchor; they come from the
+    side file only when it records the same run. A side file from another
+    run is reported on stderr and in the report, not a silent null."""
+    g = _guard()
+    new = {"value": 2.0, "queries": {"a": 1.0, "b": 1.0}}
+    side = dict(new, spreads={"a": 0.0, "b": 0.0},
+                anchor={"drift_ratio": 1.0}, shared_builds={"k": 1.0})
+    if not same_run:
+        side["queries"] = {"a": 9.0}
+    (tmp_path / g.LATEST_FILE).write_text(json.dumps(side))
+    (tmp_path / "new.json").write_text(json.dumps(new))
+    monkeypatch.setattr(g, "_repo_root", lambda: str(tmp_path))
+    monkeypatch.setattr(g, "committed_record", lambda rev: (dict(new), "ref"))
+    monkeypatch.setattr("sys.argv", ["bench_guard", str(tmp_path / "new.json")])
+    g.main()
+    out, err = capsys.readouterr()
+    report = json.loads(out)
+    assert report["recovered_from_side_file"] is same_run
+    assert report["anchor"] == (side["anchor"] if same_run else None)
+    assert ("records a different run" in err) is not same_run

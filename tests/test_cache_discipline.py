@@ -10,6 +10,8 @@ cumulative across a query sequence.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from udacitydatawarehouseprj_spark import queries as Q
 from udacitydatawarehouseprj_spark import session as S
 
@@ -90,3 +92,49 @@ def test_shared_cache_memoizes_across_query_boundaries(spark, sf_dir):
     fresh = qs["dedup_minhash_lsh"](spark, sf_dir)
     assert sorted(map(tuple, fresh.collect())) == sorted(map(tuple, a.collect()))
     S.release_shared_caches()
+
+
+
+class _OtherApp:
+    """The test session, its context reporting another application id."""
+
+    def __init__(self, spark):
+        self._spark = spark
+        self.sparkContext = self
+
+    def __getattr__(self, name):
+        sc = self._spark.sparkContext
+        value = getattr(sc if hasattr(sc, name) else self._spark, name)
+        app_id = self._spark.conf.get("spark.app.id")
+        return value + "-other" if value == app_id else value
+
+
+def test_shared_build_key_is_stable_across_app_ids(spark, sf_dir, monkeypatch):
+    """A registry helper records its shared build under a key naming what
+    was computed, never the application id, so bench_guard can match
+    shared builds across runs."""
+    key = f"shingle_pair_counts:3:{sf_dir}"
+    S.release_shared_caches()
+    monkeypatch.setattr(S, "TIME_SHARED_BUILDS", True)
+    try:
+        first = Q._shingle_pair_counts_shared(spark, sf_dir)
+        assert list(S.SHARED_BUILD_SECONDS) == list(S._SHARED_CACHES) == [key]
+        assert spark.conf.get("spark.app.id") not in key
+        assert Q._shingle_pair_counts_shared(_OtherApp(spark), sf_dir) is first
+    finally:
+        S.release_shared_caches()
+
+
+def test_shared_cache_rebuilds_entry_from_a_stopped_context(spark):
+    """An entry whose SparkContext is no longer the active one is never
+    served; the same key is rebuilt on the live context."""
+    stale = SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=object()))
+    S.release_shared_caches()
+    S._SHARED_CACHES["k"] = stale
+    try:
+        df = S.shared_cache("k", lambda: spark.range(3))
+        assert df is not stale and S._SHARED_CACHES["k"] is df
+        assert S.shared_cache("k", lambda: spark.range(9)) is df
+        assert df.count() == 3
+    finally:
+        S.release_shared_caches()

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row
 
+from udacitydatawarehouseprj_spark import session as S
 from udacitydatawarehouseprj_spark.operators import dedup
 
 
@@ -138,17 +139,15 @@ def test_prefix_circuit_breaker_falls_back(spark):
     assert {(r.doc_a, r.doc_b) for r in guarded.collect()} == {
         (r.doc_a, r.doc_b) for r in naive.collect()
     }
-    dedup.release_caches()
+    S.release_tracked_caches()
 
 
 def test_release_caches_unpersists(spark, sf_dir):
-    from udacitydatawarehouseprj_spark import session as S
-
     S.release_tracked_caches()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
     assert len(S._TRACKED_CACHES) >= 1
-    dedup.release_caches()
+    S.release_tracked_caches()
     assert S._TRACKED_CACHES == []
 
 

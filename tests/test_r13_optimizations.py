@@ -16,6 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from udacitydatawarehouseprj_spark import session as S
 from udacitydatawarehouseprj_spark.operators import dedup, graph
 
 
@@ -52,7 +53,7 @@ def test_pair_counts_front_half_matches_direct_detectors(docs):
     assert _pairs_as_set(con_split, "containment_a_in_b") == _pairs_as_set(
         con_direct, "containment_a_in_b"
     )
-    dedup.release_caches()
+    S.release_tracked_caches()
 
 
 def test_pair_counts_values(docs):
@@ -64,7 +65,7 @@ def test_pair_counts_values(docs):
     assert (row13["n_inter"], row13["n_a"], row13["n_b"]) == (7, 7, 7)
     row15 = counts.filter((F.col("doc_a") == 1) & (F.col("doc_b") == 5)).collect()[0]
     assert (row15["n_inter"], row15["n_b"]) == (1, 1)
-    dedup.release_caches()
+    S.release_tracked_caches()
 
 
 def test_shared_front_halves_memoize_and_match_fresh_build(spark, sf_dir):
@@ -73,7 +74,6 @@ def test_shared_front_halves_memoize_and_match_fresh_build(spark, sf_dir):
     shared entry each, reused — not rebuilt — by their second consumer,
     and (b) serve values identical to a fresh, uncached build."""
     from udacitydatawarehouseprj_spark import queries as Q
-    from udacitydatawarehouseprj_spark import session as S
 
     S.release_tracked_caches()
     S.release_shared_caches()
@@ -112,7 +112,6 @@ def test_rerank_feats_tokenize_after_join_is_value_identical(spark, sf_dir):
     from pyspark.sql.window import Window
 
     from udacitydatawarehouseprj_spark import queries as Q
-    from udacitydatawarehouseprj_spark import session as S
 
     S.release_shared_caches()
     new = Q._rerank_base_feats(spark, sf_dir)

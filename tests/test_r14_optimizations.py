@@ -18,7 +18,7 @@ from udacitydatawarehouseprj_spark import session as S  # noqa: E402
 
 
 def _worst_case_reports():
-    timings = {n: 9999.999 for _, b in bench.ALL_BUCKETS for n in b}
+    timings = {n: 9999.999 for n in bench.run_order()}
     return bench.build_reports(
         timings,
         {n: 99.999 for n in timings},
@@ -120,3 +120,32 @@ def test_parity_subset_is_deterministic_and_gated():
     assert names == [n for n in sorted(top.ORACLES) if top._fast_subset(n)]
     if not top.FULL_PARITY:
         assert top.PARITY_NAMES == names
+
+
+@pytest.mark.parametrize("phases,builds,n_runs", [
+    (None, False, 3),                # an ordinary query: `repeats` runs
+    ({"stream_run": 1.0}, False, 1),  # records harness phases: one run
+    ({"stream_run": 1.0}, True, None),  # ...that built a shared cache
+])
+def test_time_query_works_out_single_run_queries(monkeypatch, phases,
+                                                 builds, n_runs):
+    """bench runs a query once when its first run records harness phases,
+    and refuses such a run if it absorbed a shared-cache build."""
+    monkeypatch.setattr(bench, "run_one", lambda df: None)
+    monkeypatch.setattr(bench.Q, "PHASE_TIMINGS", {})
+    monkeypatch.setattr(S, "SHARED_BUILD_SECONDS", {})
+    calls = []
+
+    def query(spark, sf_dir):
+        calls.append(sf_dir)
+        if phases:
+            bench.Q.PHASE_TIMINGS["q"] = dict(phases)
+        if builds:
+            S.SHARED_BUILD_SECONDS["k"] = 0.1
+
+    if n_runs is None:
+        with pytest.raises(RuntimeError, match="q runs once"):
+            bench.time_query(None, "q", query, "sf", 3)
+        return
+    runs, ph = bench.time_query(None, "q", query, "sf", 3)
+    assert (len(calls), len(runs), ph) == (n_runs, n_runs, phases)

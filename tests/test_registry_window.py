@@ -134,22 +134,13 @@ def test_readme_counts_match_registry():
 
 
 def test_registry_bench_completeness():
-    """Every registered query appears in exactly one bench.py bucket
-    (VERDICT r9 gap #2: 12 early registrations were silently absent
-    from every list — no perf signal could have surfaced for them).
-    New registrations must be added to a NEW_QUERIES_R* list or this
-    fails the suite."""
+    """bench runs HEADLINE first, then every other registered query
+    exactly once — the registry is the only list of queries."""
     import bench
 
-    listed = [n for _, bucket in bench.ALL_BUCKETS for n in bucket]
-    assert len(listed) == len(set(listed)), (
-        "duplicated across buckets: "
-        + str(sorted({n for n in listed if listed.count(n) > 1}))
-    )
-    missing = sorted(set(Q.REGISTRY) - set(listed))
-    assert not missing, f"registered but in no bench bucket: {missing}"
-    unknown = sorted(set(listed) - set(Q.REGISTRY))
-    assert not unknown, f"benched but not registered: {unknown}"
+    order = bench.run_order()
+    assert order[:len(bench.HEADLINE)] == bench.HEADLINE
+    assert sorted(order) == sorted(Q.REGISTRY)
 
 
 def test_scale_smoke_rosters_resolve():

@@ -79,10 +79,11 @@ used to overwrite CONTAMINATED, losing the stronger signal):
 ``verdict`` is the contamination call, ``record_verdict`` /
 ``record_reasons`` the promotion call.
 
-If the new report lacks "spreads", they are recovered from
-``BENCH_full_latest.json`` at the REPO ROOT (resolved from this
-script's location, regardless of CWD) when that file records the same
-run.
+If the new report lacks "spreads" or "anchor", they and
+"shared_builds" are recovered from ``BENCH_full_latest.json`` at the
+REPO ROOT (resolved from this script's location, regardless of CWD)
+when that file records the same run. Otherwise a warning goes to
+stderr and the report says ``"recovered_from_side_file": false``.
 
 Usage:
   python tools/bench_guard.py /tmp/bench_new.json            # vs HEAD
@@ -237,6 +238,31 @@ def record_bar(n_outliers: int, n_stragglers, median_ratio=None,
     return not reasons, reasons
 
 
+def recover_from_side_file(new) -> bool | None:
+    """Fill the stdout-line report's missing spreads/anchor/shared_builds
+    from the side file when it records the same run. Returns None when
+    nothing was missing, else whether the blocks were recovered; a
+    failure is also reported on stderr."""
+    if new.get("spreads") is not None and new.get("anchor") is not None:
+        return None
+    try:
+        with open(os.path.join(_repo_root(), LATEST_FILE),
+                  encoding="utf-8") as fh:
+            full = json.load(fh)
+    except (OSError, ValueError) as exc:
+        failure = str(exc)
+    else:
+        if full.get("queries") == new.get("queries"):
+            for block in ("spreads", "anchor", "shared_builds"):
+                if new.get(block) is None:
+                    new[block] = full.get(block)
+            return True
+        failure = "it records a different run (its queries differ)"
+    print(f"WARNING: spreads/anchor/shared_builds not recovered from "
+          f"{LATEST_FILE}: {failure}", file=sys.stderr)
+    return False
+
+
 def main() -> int:
     args = sys.argv[1:]
     if not args:
@@ -263,24 +289,8 @@ def main() -> int:
     if med > 1.15 or frac_out > 0.02:
         verdict = "CONTAMINATED"
 
+    recovered = recover_from_side_file(new)
     spreads = new.get("spreads")
-    # round-14: the stdout line no longer carries spreads/anchor/
-    # shared_builds (it outgrew the driver's capture — r10-r12 parsed
-    # null); recover all three from the side file when it is the same run
-    if spreads is None or new.get("anchor") is None:
-        try:
-            full = json.load(
-                open(os.path.join(_repo_root(), LATEST_FILE)))
-            # only trust the side file if it is the same run
-            if full.get("queries") == new.get("queries"):
-                if spreads is None:
-                    spreads = full.get("spreads")
-                if new.get("anchor") is None:
-                    new["anchor"] = full.get("anchor")
-                if new.get("shared_builds") is None:
-                    new["shared_builds"] = full.get("shared_builds")
-        except Exception:
-            pass
     stragglers, spready_ok, spready_new = classify_spreads(
         spreads, new["queries"], ref["queries"]
     )
@@ -331,6 +341,7 @@ def main() -> int:
         "spready_new": spready_new[:8],
         "anchor": anchor,
         "anchor_drift": drift,
+        "recovered_from_side_file": recovered,
         "n_shared_build_regressions": len(build_regressions),
         "shared_build_regressions": build_regressions[:8],
         "record_mode": record_mode,

@@ -30,14 +30,12 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from udacitydatawarehouseprj_spark import queries as Q  # noqa: E402
 from udacitydatawarehouseprj_spark import session as S  # noqa: E402
-from udacitydatawarehouseprj_spark.operators import dedup  # noqa: E402
 
 
 def main() -> None:
@@ -49,12 +47,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry = Q.queries()
 
-    # same unmeasured warmup as bench.py: JVM/codegen + Arrow workers
-    bench.run_one(registry["agg_count_star"](spark, sf_dir))
-    spark.range(0, 1000, 1, int(
-        spark.sparkContext.defaultParallelism)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    bench.warmup(spark, sf_dir)
     # One unmeasured anchor pass first (round-12 advice: bench.py
     # discards the anchor's compile cost before sampling; the probe
     # must sample the same steady-state quantity or cross-tool floor
@@ -62,12 +55,8 @@ def main() -> None:
     bench._time_anchor(spark)
     anchor_sec = bench._time_anchor(spark)
 
-    runs: list[float] = []
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        bench.run_one(registry[name](spark, sf_dir))
-        runs.append(round(time.perf_counter() - t0, 3))
-        dedup.release_caches()
+    runs = [round(bench.timed_run(spark, registry[name], sf_dir), 3)
+            for _ in range(repeats)]
     srt = sorted(runs)
     print(json.dumps({
         "query": name,

@@ -32,7 +32,6 @@ sys.path.insert(0, ".")
 
 from udacitydatawarehouseprj_spark import queries as Q  # noqa: E402
 from udacitydatawarehouseprj_spark import session as S  # noqa: E402
-from udacitydatawarehouseprj_spark.operators import dedup  # noqa: E402
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -139,7 +138,7 @@ def main() -> int:
             failures += 1
             continue
         finally:
-            dedup.release_caches()  # per-query shingle caches
+            S.release_tracked_caches()  # per-query shingle caches
         if name not in oracles:
             print(f"skip  {name}: no oracle (rows-only) — {len(sdf)} rows")
             continue

@@ -17,13 +17,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
+import bench  # noqa: E402
 from udacitydatawarehouseprj_spark import queries as Q  # noqa: E402
 from udacitydatawarehouseprj_spark import session as S  # noqa: E402
-from udacitydatawarehouseprj_spark.operators import dedup  # noqa: E402
 
 
 def main() -> None:
@@ -32,28 +31,17 @@ def main() -> None:
     spark = S.get_spark("scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
     registry = Q.queries()
-
-    def run_one(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    run_one(registry["agg_count_star"](spark, sf_dir))
-    spark.range(0, 1000, 1, int(spark.sparkContext.defaultParallelism)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    bench.warmup(spark, sf_dir)
 
     st = spark.sparkContext.statusTracker()
     out = {}
     for name in names:
         # warm pass: shared-cache builds + codegen land here
-        run_one(registry[name](spark, sf_dir))
-        dedup.release_caches()
+        bench.timed_run(spark, registry[name], sf_dir)
         group = f"probe-{name}"
         spark.sparkContext.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        run_one(registry[name](spark, sf_dir))
-        sec = time.perf_counter() - t0
+        sec = bench.timed_run(spark, registry[name], sf_dir)
         spark.sparkContext._jsc.clearJobGroup()  # pyspark wraps no clearJobGroup
-        dedup.release_caches()
         job_ids = st.getJobIdsForGroup(group)
         n_stages = 0
         n_tasks = 0

@@ -4,8 +4,8 @@ sink, N repeats, median) without running the whole bench.
 Usage: python tools/time_queries.py [-r REPEATS] <query> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 
-Same warmup as bench.py (one trivial query + one mapInPandas pass) so the
-first timed query is not charged JVM/Arrow startup. Shared session caches
+Same warmup and timing as bench.py (bench.warmup, bench.time_query) so
+the first timed query is not charged JVM/Arrow startup. Shared session caches
 are NOT released between repeats — matching bench.py, where a shared
 relation's build cost lands in its first consumer's first repeat and the
 median reflects the steady state.
@@ -16,13 +16,12 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
+import bench  # noqa: E402
 from udacitydatawarehouseprj_spark import queries as Q  # noqa: E402
 from udacitydatawarehouseprj_spark import session as S  # noqa: E402
-from udacitydatawarehouseprj_spark.operators import dedup  # noqa: E402
 
 
 def main() -> None:
@@ -35,27 +34,14 @@ def main() -> None:
     spark = S.get_spark("time-queries")
     spark.sparkContext.setLogLevel("ERROR")
     registry = Q.queries()
-
-    def run_one(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    run_one(registry["agg_count_star"](spark, sf_dir))
-    spark.range(0, 1000, 1, int(spark.sparkContext.defaultParallelism)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    bench.warmup(spark, sf_dir)
 
     for name in args:
-        runs = []
-        for _ in range(repeats):
-            spark.sparkContext.setJobDescription(f"time: {name}")
-            t0 = time.perf_counter()
-            run_one(registry[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-            dedup.release_caches()
-        runs.sort()
+        spark.sparkContext.setJobDescription(f"time: {name}")
+        runs, _ = bench.time_query(spark, name, registry[name], sf_dir, repeats)
         print(
             f"{name}: median {statistics.median(runs):.3f}s "
-            f"(min {runs[0]:.3f} max {runs[-1]:.3f}, n={repeats})"
+            f"(min {runs[0]:.3f} max {runs[-1]:.3f}, n={len(runs)})"
         )
     S.release_shared_caches()
 

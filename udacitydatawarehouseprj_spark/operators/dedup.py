@@ -41,12 +41,9 @@ DEFAULT_SHINGLE = 3
 # Shingle relations are cached because they feed several subplans (sizes +
 # both join sides). Caching is routed through session.track_cache so the
 # query registry auto-releases them at the next query boundary; callers
-# that loop over corpora outside the registry call release_caches() after
-# each final action.
-from udacitydatawarehouseprj_spark.session import (  # noqa: E402
-    release_tracked_caches as release_caches,
-    track_cache as _cache,
-)
+# that loop over corpora outside the registry call
+# session.release_tracked_caches() after each final action.
+from udacitydatawarehouseprj_spark.session import track_cache as _cache  # noqa: E402
 #: MinHash parameters: 64 permutations → 32 bands × 2 rows. At Jaccard 0.5
 #: the per-pair miss probability is (1 - 0.5²)³² ≈ 1e-4.
 NUM_PERM = 64

@@ -25,6 +25,7 @@ from __future__ import annotations
 import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -143,9 +144,13 @@ def shared_cache(key: str, build) -> DataFrame:
     """Memoize ``build()`` under ``key``, persisted, across query
     boundaries. The first consumer's action materializes it; later
     queries in the same session reuse the cached relation instead of
-    re-running the build pipeline."""
+    re-running the build pipeline. An entry built on a SparkContext that
+    is no longer the active one (a stopped and restarted session) is
+    rebuilt, so ``key`` names only what was computed — callers never
+    scope it to a context."""
     df = _SHARED_CACHES.get(key)
-    if df is None:
+    if df is None or (df.sparkSession.sparkContext
+                      is not SparkContext._active_spark_context):
         df = build().persist()
         _SHARED_CACHES[key] = df
         if TIME_SHARED_BUILDS:

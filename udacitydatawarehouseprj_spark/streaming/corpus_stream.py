@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
+from udacitydatawarehouseprj_spark import session as S
 from udacitydatawarehouseprj_spark.operators import dedup
 
 DOCS_STREAM_SCHEMA = T.StructType(
@@ -111,7 +112,7 @@ def run_incremental_dedup_stream(
         )
         survivors.unpersist()
         docs.unpersist()
-        dedup.release_caches()
+        S.release_tracked_caches()
 
     if fmt == "json":
         src = spark.readStream.schema(DOCS_STREAM_SCHEMA).json(source_dir)
