@@ -1,19 +1,21 @@
-"""DuckDB differential oracle in pytest form (the driver's t2 gate,
-SURVEY §5.1), at sf0.001 for speed. Strict: exact values, not hashes.
-``tools/parity.py`` runs the same comparison standalone at any sf.
+"""One sweep over the query registry, at sf0.001 for speed. Each
+registered query is built ONCE and that one DataFrame is checked three
+ways by ``check_build``:
 
-Round-14 (VERDICT r13 item 3): the FULL ~400-query sweep pushed the
-suite past the driver's pytest budget (r13: zero failures but killed at
-~76%), so by default this file runs a deterministic 1-in-8 subset
-(~50 queries, stable across runs — hash of the name, not random) plus
-every rows-only query. Set SPARK_GRAFT_FULL_PARITY=1 for the full
-sweep (used before committing behavioural changes; ``tools/parity.py``
-remains the standalone full-coverage gate at any sf)."""
+1. building it runs no more SQL executions than its budget in
+   ``BUILD_ACTION_WHITELIST`` (the streaming proofs are exempt);
+2. its formatted physical plan has no ``CartesianProduct``;
+3. it matches its DuckDB oracle by exact value, not by hash (the
+   driver's t2 gate, SURVEY §5.1); a rows-only query has no oracle and
+   must instead run with a non-empty schema.
+
+Every oracled query is compared on every run. ``tools/parity.py`` runs
+the same comparison standalone at any sf."""
 
 from __future__ import annotations
 
-import hashlib
-import os
+import functools
+import sys
 
 import duckdb
 import pytest
@@ -21,49 +23,193 @@ import pytest
 from udacitydatawarehouseprj_spark import queries as Q
 from udacitydatawarehouseprj_spark import session as S
 
-import sys
-
 sys.path.insert(0, "tools")
 from parity import compare  # noqa: E402
 
+ORACLES = Q.oracle_sql()
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
+
+# --- single-action discipline (VERDICT r8 item 8) ----------------------
+#
+# Building a query's DataFrame must not execute anything: the ONE action
+# belongs to the caller (driver/bench/parity). Rounds 7-8 folded every
+# stray driver-side .count()/.collect() into the plan; this test pins
+# the discipline registry-wide so a refactor can't silently reintroduce
+# one. Build-phase SQL executions are counted via the SQL status store
+# (each action = one execution), after draining the async listener bus.
+#
+# Whitelisted builders run a DOCUMENTED bounded driver-side action
+# during construction; the value is that query's measured sf0.001
+# budget — EXACT executions observed at calibration. A query exceeding
+# its budget (a new stray .count()/.collect()) or a query not listed
+# here doing ANY build-phase execution fails the test. Categories:
+# [fixture] writes a landing zone / table / files the query then reads;
+# [iter]    fixed-round iterative trainer or graph algorithm whose
+#           rounds run bounded actions (k-means, BPE merges, PageRank,
+#           CC, label propagation, ER);
+# [seed]    documented bounded collect of a small relation into the
+#           plan (nation seed, hyperplane words, n_blocks totals,
+#           centroids, medoids, merge tables);
+# [sqltxt]  spark.sql text suites where statements execute eagerly
+#           (DDL, scripting control flow, catalog introspection).
+BUILD_ACTION_WHITELIST: dict[str, int] = {
+    "bom_quantity_rollup": 1,              # [seed] depth probe
+    "dbscan_grid_clusters": 7,             # [iter] expansion rounds +
+                                           # r13 CC edge-count sizing
+    "modularity_components": 11,           # [iter] CC rounds over pairs
+                                           # + r13 CC edge-count sizing
+    "agg_grouping_sets": 1,                # [sqltxt]
+    "cte_hourly_active_users": 1,          # [sqltxt]
+    "catalog_introspection": 10,           # [sqltxt] SHOW/DESCRIBE set
+    "ann_cosine_topk_blas": 1,             # [seed] query-vector panel
+    "ann_cosine_topk_lsh": 1,              # [seed] hyperplane words
+    "ann_ivf_topk": 5,                     # [iter] k-means training
+    "ann_batch_serving_ivf": 6,            # [iter] k-means train (4) +
+                                           # cell sizes + query batch
+    "ann_batch_serving_brute": 1,          # [seed] query-batch collect
+    "embedding_near_dup_bcast": 1,         # [seed] broadcast side
+    "dedup_ngram_prefix": 2,               # [seed] df-cap circuit breaker
+    "time_rollup_multigrain": 1,           # [sqltxt]
+    "ann_lsh_recall_check": 1,             # [seed] hyperplane words
+    "ann_ivf_recall_check": 5,             # [iter] k-means training
+    "json_ingest_events_log": 1,           # [fixture] JSON landing write
+    "json_ingest_songs_catalog": 1,        # [fixture]
+    "dedup_near_dup_clusters": 5,          # [iter] CC min-label rounds
+    "heavy_hitters_check": 1,              # [seed] sketch threshold
+    # tpch_q2/q9/q11/q16/q20 share the _partsupp fixture (3 actions,
+    # FIRST caller pays) — the test warms it before counting so the
+    # budget stays 0 for all five regardless of registry/window order
+    # (round 12: the window rotation moved q16 ahead of q2 and the
+    # fixture cost silently migrated whitelists).
+    "bpe_learn_merges": 12,                # [iter] merge loop
+    "bpe_learn_merges_batched": 6,         # [iter] batched merge loop
+    "semantic_dedup_kmeans": 4,            # [iter] k-means training
+    "semantic_dedup_check": 4,             # [iter]
+    "dedup_keep_best_quality": 5,          # [iter] CC keeper rounds
+    "bpe_tokenize_corpus": 13,             # [iter] merge loop + table
+    "mmr_rerank_diversified": 1,           # [seed] candidate panel
+    "mmr_rerank_check": 1,                 # [seed]
+    "csv_ingest_roundtrip": 1,             # [fixture]
+    "orc_ingest_roundtrip": 1,             # [fixture]
+    "cluster_size_histogram": 5,           # [iter] CC rounds
+    "partitioned_ingest_pruned": 2,        # [fixture] partitioned write
+    "incremental_rollup_maintain": 1,      # [fixture] base table write
+    "pagerank_similarity_graph": 10,       # [iter] unrolled PR rounds +
+                                           # r13 dangling-set checkpoint
+    "triangle_count_similarity": 1,        # [seed] edge relation probe
+    "schema_evolution_read": 2,            # [fixture] two schema writes
+    "ann_pq_topk": 5,                      # [iter] codebook k-means
+    "ann_pq_recall_check": 5,              # [iter]
+    "dpp_partitioned_join": 1,             # [fixture] partitioned write
+    "python_datasink_roundtrip": 1,        # [fixture] sink write
+    "sql_scripting_control_flow": 32,      # [sqltxt] scripting suite
+    "pipeline_observe_metrics": 1,         # observed-metrics collect
+    "lateral_join_top_lineitems": 2,       # [sqltxt]
+    "bloom_prefilter_join": 1,             # [seed] bloom build
+    "label_propagation_communities": 5,    # [iter] LP rounds
+    "recursive_cte_reachability": 2,       # [sqltxt]
+    "python_udtf_token_windows": 1,        # [sqltxt] UDTF registration
+    "pca_project_embeddings": 1,           # [seed] gram collect
+    "pca_variance_check": 3,               # [seed]
+    "xml_ingest_roundtrip": 1,             # [fixture]
+    "leakage_safe_split": 5,               # [iter] CC rounds
+    "compact_small_files": 2,              # [fixture] small-file write
+    "modern_sql_syntax_suite": 1,          # [sqltxt]
+    "connected_components_minlabel": 7,    # [iter] CC rounds +
+                                           # r13 CC edge-count sizing
+    "lines_ingest_roundtrip": 1,           # [fixture]
+    "k_core_similarity_graph": 6,          # [iter] peel rounds
+    "entity_resolution_pipeline": 19,      # [iter] ER index + CC +
+                                           # r13 CC edge-count sizing
+    "collation_aware_grouping": 1,         # [sqltxt]
+    "sql_udf_suite": 3,                    # [sqltxt] UDF DDL
+    "table_ddl_lifecycle": 7,              # [fixture] create/append/drop
+    "er_survivorship_scored": 19,          # [iter] ER graph + CC +
+                                           # r13 CC edge-count sizing
+    "personalized_pagerank_seeded": 11,    # [iter] unrolled PPR rounds +
+                                           # r13 dangling-set checkpoint
+    "cluster_medoid_selection": 5,         # [iter] k-means + medoid
+    "power_iteration_blas_production": 1,  # [seed] gram partials collect
+    "cka_blas_production": 1,              # [seed] gram partials collect
+}
+
+
+def _executions(spark) -> int:
+    """SQL executions so far; the store is fed by the async listener
+    bus, so drain it first."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore().executionsCount()
+
+
+def formatted_plan(spark, df) -> str:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    return df._jdf.queryExecution().explainString(mode)
+
+
+@functools.lru_cache(maxsize=None)
+def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in S.TESTDATA_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{S.table_path(sf_dir, t)}'")
     return con
 
 
-ORACLES = Q.oracle_sql()
+def check_build(spark, sf_dir, name, fn):
+    """Build ``fn(spark, sf_dir)`` once and run the three checks on it.
+    Returns the DataFrame and the violations found (empty when clean)."""
+    errors: list[str] = []
+    n0 = _executions(spark)
+    df = fn(spark, sf_dir)
+    n_build = _executions(spark) - n0
+    budget = BUILD_ACTION_WHITELIST.get(name, 0)
+    # streaming proofs orchestrate (landing-zone writes, stream runs)
+    # during build by design
+    streaming = name.startswith("streaming_") or name == "python_datasource_stream_scan"
+    if n_build > budget and not streaming:
+        errors.append(f"{name}: {n_build} SQL executions during build "
+                      f"(budget {budget})")
+    if "CartesianProduct" in formatted_plan(spark, df):
+        errors.append(f"{name}: plan has a CartesianProduct")
+    if name in ORACLES:
+        errors += compare(
+            name, df.toPandas(), _duck(sf_dir).sql(ORACLES[name]).fetchdf()
+        )
+    else:
+        df.count()
+        if not df.schema.fields:
+            errors.append(f"{name}: rows-only query has an empty schema")
+    return df, errors
 
-FULL_PARITY = os.environ.get("SPARK_GRAFT_FULL_PARITY", "") == "1"
+
+@pytest.fixture(scope="module")
+def partsupp_warm(spark, sf_dir):
+    Q._partsupp(spark, sf_dir)  # shared fixture: first caller pays 3
 
 
-def _fast_subset(name: str) -> bool:
-    """Deterministic 1-in-8 sample — stable across runs/machines (md5 of
-    the name, not Python's salted hash), so the default suite always
-    checks the SAME ~50 queries and a failure reproduces."""
-    return int(hashlib.md5(name.encode()).hexdigest(), 16) % 8 == 0
+@pytest.mark.usefixtures("partsupp_warm")
+@pytest.mark.parametrize("name", list(Q.queries()))
+def test_query_matches_oracle(spark, sf_dir, name):
+    _, errors = check_build(spark, sf_dir, name, Q.queries()[name])
+    assert not errors, errors
 
 
-PARITY_NAMES = sorted(
-    n for n in ORACLES if FULL_PARITY or _fast_subset(n)
-)
+def test_check_build_reports_planted_violations(spark, sf_dir):
+    """A query that collects while it is built and returns a cartesian
+    product is reported for both."""
 
+    def planted(spark, sf_dir):
+        spark.range(3).collect()
+        return spark.range(3).crossJoin(spark.range(3).withColumnRenamed("id", "j"))
 
-@pytest.mark.parametrize("name", PARITY_NAMES)
-def test_query_matches_oracle(spark, sf_dir, duck, name):
-    sdf = Q.queries()[name](spark, sf_dir).toPandas()
-    ddf = duck.sql(ORACLES[name]).fetchdf()
-    errs = compare(name, sdf, ddf)
-    assert not errs, errs
-
-
-@pytest.mark.parametrize(
-    "name", sorted(set(Q.queries()) - set(ORACLES))
-)
-def test_rows_only_queries_run(spark, sf_dir, name):
-    df = Q.queries()[name](spark, sf_dir)
-    assert df.count() >= 0  # executes without error, stable schema
-    assert len(df.schema.fields) > 0
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # a broadcast side would plan a nested-loop join
+    try:
+        df, errors = check_build(spark, sf_dir, "planted_violation", planted)
+        assert "CartesianProduct" in formatted_plan(spark, df)
+    finally:
+        spark.conf.set(key, old)
+    assert [e for e in errors if "SQL executions during build" in e], errors
+    assert [e for e in errors if "CartesianProduct" in e], errors

@@ -3,8 +3,10 @@
 At 100 TB a correct-but-mis-planned query is a failure. These tests pin the
 plan properties that matter at scale so a refactor can't silently regress
 them: filter/column pushdown into the parquet scan, broadcast joins for
-dimensions, no cartesian products, single-shuffle aggregations, and
-TakeOrderedAndProject (not global sort) for top-k.
+dimensions, single-shuffle aggregations, and TakeOrderedAndProject (not
+global sort) for top-k. The registry-wide rules (no cartesian product,
+per-query build-action budgets) run in ``test_oracle_parity``'s sweep,
+which builds each query once.
 """
 
 from __future__ import annotations
@@ -81,12 +83,6 @@ def test_fingerprint_is_pure_projection(spark, sf_dir):
     assert count_exchanges(plan) <= 1
     assert "Generate explode" not in plan
     assert "HashAggregate" not in plan  # no per-character aggregation
-
-
-def test_no_cartesian_products_anywhere(spark, sf_dir):
-    for name in Q.queries():
-        plan = plan_of(spark, sf_dir, name)
-        assert "CartesianProduct" not in plan, name
 
 
 def test_whole_stage_codegen_on_relational_path(spark, sf_dir):
@@ -241,11 +237,6 @@ def test_zorder_key_is_scan_side(spark, sf_dir):
     """The Z-key is pure projection arithmetic — no exchange at all."""
     plan = plan_of(spark, sf_dir, "zorder_key_orders")
     assert count_exchanges(plan) == 0, plan
-
-
-def test_incremental_dedup_no_cartesian_no_corpus_rescan_explosion(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "incremental_dedup_new_docs")
-    assert "CartesianProduct" not in plan
 
 
 def test_q2_min_cost_broadcasts_dims_topk_no_global_sort(spark, sf_dir):
@@ -864,146 +855,6 @@ def test_rd_bandwidth_filter_pushed_to_scan(spark, sf_dir):
     )
 
 
-# --- single-action discipline (VERDICT r8 item 8) ----------------------
-#
-# Building a query's DataFrame must not execute anything: the ONE action
-# belongs to the caller (driver/bench/parity). Rounds 7-8 folded every
-# stray driver-side .count()/.collect() into the plan; this test pins
-# the discipline registry-wide so a refactor can't silently reintroduce
-# one. Build-phase SQL executions are counted via the SQL status store
-# (each action = one execution), after draining the async listener bus.
-#
-# Whitelisted builders run a DOCUMENTED bounded driver-side action
-# during construction; the value is that query's measured sf0.001
-# budget — EXACT executions observed at calibration. A query exceeding
-# its budget (a new stray .count()/.collect()) or a query not listed
-# here doing ANY build-phase execution fails the test. Categories:
-# [fixture] writes a landing zone / table / files the query then reads;
-# [iter]    fixed-round iterative trainer or graph algorithm whose
-#           rounds run bounded actions (k-means, BPE merges, PageRank,
-#           CC, label propagation, ER);
-# [seed]    documented bounded collect of a small relation into the
-#           plan (nation seed, hyperplane words, n_blocks totals,
-#           centroids, medoids, merge tables);
-# [sqltxt]  spark.sql text suites where statements execute eagerly
-#           (DDL, scripting control flow, catalog introspection).
-BUILD_ACTION_WHITELIST: dict[str, int] = {
-    "bom_quantity_rollup": 1,              # [seed] depth probe
-    "dbscan_grid_clusters": 7,             # [iter] expansion rounds +
-                                           # r13 CC edge-count sizing
-    "modularity_components": 11,           # [iter] CC rounds over pairs
-                                           # + r13 CC edge-count sizing
-    "agg_grouping_sets": 1,                # [sqltxt]
-    "cte_hourly_active_users": 1,          # [sqltxt]
-    "catalog_introspection": 10,           # [sqltxt] SHOW/DESCRIBE set
-    "ann_cosine_topk_blas": 1,             # [seed] query-vector panel
-    "ann_cosine_topk_lsh": 1,              # [seed] hyperplane words
-    "ann_ivf_topk": 5,                     # [iter] k-means training
-    "ann_batch_serving_ivf": 6,            # [iter] k-means train (4) +
-                                           # cell sizes + query batch
-    "ann_batch_serving_brute": 1,          # [seed] query-batch collect
-    "embedding_near_dup_bcast": 1,         # [seed] broadcast side
-    "dedup_ngram_prefix": 2,               # [seed] df-cap circuit breaker
-    "time_rollup_multigrain": 1,           # [sqltxt]
-    "ann_lsh_recall_check": 1,             # [seed] hyperplane words
-    "ann_ivf_recall_check": 5,             # [iter] k-means training
-    "json_ingest_events_log": 1,           # [fixture] JSON landing write
-    "json_ingest_songs_catalog": 1,        # [fixture]
-    "dedup_near_dup_clusters": 5,          # [iter] CC min-label rounds
-    "heavy_hitters_check": 1,              # [seed] sketch threshold
-    # tpch_q2/q9/q11/q16/q20 share the _partsupp fixture (3 actions,
-    # FIRST caller pays) — the test warms it before counting so the
-    # budget stays 0 for all five regardless of registry/window order
-    # (round 12: the window rotation moved q16 ahead of q2 and the
-    # fixture cost silently migrated whitelists).
-    "bpe_learn_merges": 12,                # [iter] merge loop
-    "bpe_learn_merges_batched": 6,         # [iter] batched merge loop
-    "semantic_dedup_kmeans": 4,            # [iter] k-means training
-    "semantic_dedup_check": 4,             # [iter]
-    "dedup_keep_best_quality": 5,          # [iter] CC keeper rounds
-    "bpe_tokenize_corpus": 13,             # [iter] merge loop + table
-    "mmr_rerank_diversified": 1,           # [seed] candidate panel
-    "mmr_rerank_check": 1,                 # [seed]
-    "csv_ingest_roundtrip": 1,             # [fixture]
-    "orc_ingest_roundtrip": 1,             # [fixture]
-    "cluster_size_histogram": 5,           # [iter] CC rounds
-    "partitioned_ingest_pruned": 2,        # [fixture] partitioned write
-    "incremental_rollup_maintain": 1,      # [fixture] base table write
-    "pagerank_similarity_graph": 10,       # [iter] unrolled PR rounds +
-                                           # r13 dangling-set checkpoint
-    "triangle_count_similarity": 1,        # [seed] edge relation probe
-    "schema_evolution_read": 2,            # [fixture] two schema writes
-    "ann_pq_topk": 5,                      # [iter] codebook k-means
-    "ann_pq_recall_check": 5,              # [iter]
-    "dpp_partitioned_join": 1,             # [fixture] partitioned write
-    "python_datasink_roundtrip": 1,        # [fixture] sink write
-    "sql_scripting_control_flow": 32,      # [sqltxt] scripting suite
-    "pipeline_observe_metrics": 1,         # observed-metrics collect
-    "lateral_join_top_lineitems": 2,       # [sqltxt]
-    "bloom_prefilter_join": 1,             # [seed] bloom build
-    "label_propagation_communities": 5,    # [iter] LP rounds
-    "recursive_cte_reachability": 2,       # [sqltxt]
-    "python_udtf_token_windows": 1,        # [sqltxt] UDTF registration
-    "pca_project_embeddings": 1,           # [seed] gram collect
-    "pca_variance_check": 3,               # [seed]
-    "xml_ingest_roundtrip": 1,             # [fixture]
-    "leakage_safe_split": 5,               # [iter] CC rounds
-    "compact_small_files": 2,              # [fixture] small-file write
-    "modern_sql_syntax_suite": 1,          # [sqltxt]
-    "connected_components_minlabel": 7,    # [iter] CC rounds +
-                                           # r13 CC edge-count sizing
-    "lines_ingest_roundtrip": 1,           # [fixture]
-    "k_core_similarity_graph": 6,          # [iter] peel rounds
-    "entity_resolution_pipeline": 19,      # [iter] ER index + CC +
-                                           # r13 CC edge-count sizing
-    "collation_aware_grouping": 1,         # [sqltxt]
-    "sql_udf_suite": 3,                    # [sqltxt] UDF DDL
-    "table_ddl_lifecycle": 7,              # [fixture] create/append/drop
-    "er_survivorship_scored": 19,          # [iter] ER graph + CC +
-                                           # r13 CC edge-count sizing
-    "personalized_pagerank_seeded": 11,    # [iter] unrolled PPR rounds +
-                                           # r13 dangling-set checkpoint
-    "cluster_medoid_selection": 5,         # [iter] k-means + medoid
-    "power_iteration_blas_production": 1,  # [seed] gram partials collect
-    "cka_blas_production": 1,              # [seed] gram partials collect
-}
-
-
-def test_single_action_discipline(spark, sf_dir):
-    registry = Q.queries()
-    Q._partsupp(spark, sf_dir)  # shared fixture: first caller pays 3
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def executions() -> int:
-        try:
-            bus.waitUntilEmpty()
-        except TypeError:  # older signature takes a timeout
-            bus.waitUntilEmpty(10_000)
-        return store.executionsCount()
-
-    violations: dict[str, int] = {}
-    for name, fn in registry.items():
-        if name.startswith("streaming_") or name == "python_datasource_stream_scan":
-            continue  # streaming proofs orchestrate by design
-        n0 = executions()
-        fn(spark, sf_dir)
-        n_build = executions() - n0
-        if n_build > BUILD_ACTION_WHITELIST.get(name, 0):
-            violations[name] = n_build
-    assert not violations, (
-        "queries executing driver-side actions during DataFrame build "
-        f"(beyond their documented whitelist): {violations}"
-    )
-
-
-def test_capture_lsh_no_cartesian_all_equi(spark, sf_dir):
-    # every detector is a band/bucket equi-join; the estimator is a
-    # single-row aggregate — nothing may plan cartesian
-    plan = plan_of(spark, sf_dir, "capture_recapture_lsh")
-    assert "CartesianProduct" not in plan
-
-
 def test_doremi_lm_model_join_is_broadcast(spark, sf_dir):
     # the trigram model joins back to doc-grams via broadcast (the
     # model is |V|³-bounded); no global sort anywhere
@@ -1020,13 +871,6 @@ def test_ann_filtered_semi_join_is_broadcast(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "ann_filtered_topk")
     assert "BroadcastHashJoin" in plan
     assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_rrf_fusion_no_cartesian(spark, sf_dir):
-    # both arms are candidate-bounded rankings; the fusion is a
-    # full-outer join of two tiny relations — nothing may plan cartesian
-    plan = plan_of(spark, sf_dir, "rrf_hybrid_fusion")
     assert "CartesianProduct" not in plan
 
 

@@ -55,6 +55,15 @@ def test_empty_range_yields_no_rows(spark):
     assert df.count() == 0
 
 
+def test_register_on_a_second_session(spark):
+    """A session of the same application registers the format even after
+    another session did."""
+    ps.register(spark)
+    other = spark.newSession()
+    ps.register(other)
+    assert other.read.format("synthcorpus").option("n_rows", 100).load().count() == 100
+
+
 def test_scan_values_match_formula(spark):
     ps.register(spark)
     rows = (

@@ -1,5 +1,5 @@
 """Round-14 optimization pins: bench stdout-line size (driver-capture
-contract), shared-build visibility, and the parity-sweep gating."""
+contract) and shared-build visibility."""
 
 from __future__ import annotations
 
@@ -107,19 +107,6 @@ def test_shared_build_timing_flag(spark, sf_dir):
         S.TIME_SHARED_BUILDS = False
         S.release_shared_caches()
     assert S.SHARED_BUILD_SECONDS == {}  # teardown clears the block
-
-
-def test_parity_subset_is_deterministic_and_gated():
-    """VERDICT r13 item 3: the default suite runs a stable ~1-in-8
-    subset of the oracle sweep; SPARK_GRAFT_FULL_PARITY=1 restores the
-    full sweep. The subset must be non-trivial and reproducible."""
-    import test_oracle_parity as top
-
-    names = [n for n in sorted(top.ORACLES) if top._fast_subset(n)]
-    assert 20 <= len(names) <= len(top.ORACLES) // 4
-    assert names == [n for n in sorted(top.ORACLES) if top._fast_subset(n)]
-    if not top.FULL_PARITY:
-        assert top.PARITY_NAMES == names
 
 
 @pytest.mark.parametrize("phases,builds,n_runs", [

@@ -10,6 +10,7 @@ import os
 import pytest
 
 from udacitydatawarehouseprj_spark import pipeline
+from udacitydatawarehouseprj_spark import queries as Q
 from udacitydatawarehouseprj_spark import session as S
 from udacitydatawarehouseprj_spark.sources import json_source, sinks
 from tests import sparkify_fixtures as fx
@@ -96,6 +97,17 @@ def test_listing_threshold_only_on_sessions_built_for_local(spark):
     other.conf.unset(key)
     S.configure(other)
     assert other.conf.get(key) == "32"
+
+
+def test_registry_boundary_configures_the_session(spark, sf_dir):
+    """The registry configures the session a query is given at the query
+    boundary. python_datasource_scan loads no table, so load_table's own
+    configure() cannot stand in for it."""
+    key = "spark.sql.session.timeZone"
+    other = spark.newSession()
+    other.conf.set(key, "America/Los_Angeles")
+    Q.queries()["python_datasource_scan"](other, sf_dir)
+    assert other.conf.get(key) == "UTC"
 
 
 def test_runtime_confs_are_all_modifiable(spark):

@@ -24,8 +24,9 @@ are deliberate —
   static count cannot see.
 
 So the committed baseline (``SCAN_BASELINE.json``) records today's
-count per (query, table), and the test
-(tests/test_plan_quality.py::test_scan_counts_never_ratchet_up) fails
+count per (query, table), and the tests
+(tests/test_plan_quality.py::test_scan_ratchet_logic and
+::test_production_flagships_hold_scan_baseline) fail
 only when a query's count INCREASES — the learned-weights shape: a
 refactor that quietly adds another pass over a source. Decreases are
 improvements; run this tool with --rebaseline to lock them in.

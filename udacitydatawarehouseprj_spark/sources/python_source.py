@@ -122,9 +122,26 @@ class SynthCorpusDataSource(DataSource):
         return SynthCorpusReader(self.options)
 
 
+def _register(spark, source) -> None:
+    """Register ``source`` on ``spark``, idempotently. Spark also refuses a
+    name that the thread's ACTIVE session already has, so a second
+    session of one application could never register a source the first
+    one had; ``spark`` is made the active session for the call."""
+    jsession = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    previous = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(source)
+    finally:
+        if previous.isDefined():
+            jsession.setActiveSession(previous.get())
+        else:
+            jsession.clearActiveSession()
+
+
 def register(spark) -> None:
     """Idempotent registration of the synthcorpus format."""
-    spark.dataSource.register(SynthCorpusDataSource)
+    _register(spark, SynthCorpusDataSource)
 
 
 # --- Custom Python SINK: Arrow batches + a real commit protocol --------
@@ -245,7 +262,7 @@ class NdjsonAtomicDataSource(DataSource):
 
 
 def register_sink(spark) -> None:
-    spark.dataSource.register(NdjsonAtomicDataSource)
+    _register(spark, NdjsonAtomicDataSource)
 
 
 def read_committed(spark, path, schema):
@@ -324,4 +341,4 @@ class SynthCorpusStreamDataSource(DataSource):
 
 
 def register_stream(spark) -> None:
-    spark.dataSource.register(SynthCorpusStreamDataSource)
+    _register(spark, SynthCorpusStreamDataSource)
