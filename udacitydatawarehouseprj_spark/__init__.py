@@ -14,6 +14,7 @@ ETL for the "Sparkify" music-streaming dataset), re-expressed Spark-first:
 
 Layout:
     session.py    SparkSession factory + testdata table registry
+    pyworker.py   Python worker daemon for the sessions session.py builds
     schemas.py    explicit StructTypes (Sparkify staging/star + testdata)
     functions/    scalar Column-level function library (datetime semantics)
     operators/    relational + dedup + similarity + text + multimodal operators
