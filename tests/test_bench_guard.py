@@ -275,3 +275,22 @@ def test_side_file_recovery_is_reported(monkeypatch, tmp_path, capsys,
     assert report["recovered_from_side_file"] is same_run
     assert report["anchor"] == (side["anchor"] if same_run else None)
     assert ("records a different run" in err) is not same_run
+
+
+def test_report_at_another_scale_is_refused(monkeypatch, tmp_path, capsys):
+    """A report taken at sf0.01 reads as a fast run against the sf0.1
+    record; the guard refuses it instead of calling it CLEAN."""
+    g = _guard()
+    ref = {"value": 20.0, "sf": 0.1, "queries": {"a": 10.0, "b": 10.0}}
+    new = dict(ref, value=2.0, sf=0.01, queries={"a": 1.0, "b": 1.0})
+    (tmp_path / "new.json").write_text(json.dumps(new))
+    monkeypatch.setattr(g, "_repo_root", lambda: str(tmp_path))
+    monkeypatch.setattr(g, "committed_record", lambda rev: (ref, "ref"))
+    monkeypatch.setattr("sys.argv", ["bench_guard", str(tmp_path / "new.json")])
+    assert g.main() == 1
+    out, err = capsys.readouterr()
+    assert out == ""
+    assert "sf 0.01" in err and "sf 0.1" in err
+    monkeypatch.setattr(g, "committed_record",
+                        lambda rev: (dict(ref, sf=0.01), "ref"))
+    assert g.main() == 0

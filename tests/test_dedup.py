@@ -151,28 +151,6 @@ def test_release_caches_unpersists(spark, sf_dir):
     assert S._TRACKED_CACHES == []
 
 
-def test_connected_components_transitive_chain(spark):
-    """A~B, B~C, D~E: components {A,B,C} and {D,E}, labels = min id —
-    the transitive collapse pair-level dedup can't do."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    out = {r.doc_id: r.cluster_id
-           for r in dedup.connected_components(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_connected_components_long_path_converges(spark):
-    """A 12-node path graph needs diameter-many propagation rounds —
-    exercises the convergence loop, not just one round."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(20, 32)], "doc_a long, doc_b long"
-    )
-    out = {r.doc_id: r.cluster_id
-           for r in dedup.connected_components(pairs).collect()}
-    assert set(out.values()) == {20} and len(out) == 13
-
-
 def test_incremental_dedup_kill_rules(spark):
     """One batch doc per kill rule: exact-vs-corpus, near-vs-corpus,
     within-batch exact (larger id dies), plus a unique survivor."""

@@ -54,10 +54,8 @@ ORACLES = Q.oracle_sql()
 #           (DDL, scripting control flow, catalog introspection).
 BUILD_ACTION_WHITELIST: dict[str, int] = {
     "bom_quantity_rollup": 1,              # [seed] depth probe
-    "dbscan_grid_clusters": 7,             # [iter] expansion rounds +
-                                           # r13 CC edge-count sizing
-    "modularity_components": 11,           # [iter] CC rounds over pairs
-                                           # + r13 CC edge-count sizing
+    "dbscan_grid_clusters": 5,             # [iter] CC seed + rounds
+    "modularity_components": 9,            # [iter] CC rounds over pairs
     "agg_grouping_sets": 1,                # [sqltxt]
     "cte_hourly_active_users": 1,          # [sqltxt]
     "catalog_introspection": 10,           # [sqltxt] SHOW/DESCRIBE set
@@ -115,17 +113,14 @@ BUILD_ACTION_WHITELIST: dict[str, int] = {
     "leakage_safe_split": 5,               # [iter] CC rounds
     "compact_small_files": 2,              # [fixture] small-file write
     "modern_sql_syntax_suite": 1,          # [sqltxt]
-    "connected_components_minlabel": 7,    # [iter] CC rounds +
-                                           # r13 CC edge-count sizing
+    "connected_components_minlabel": 5,    # [iter] CC seed + rounds
     "lines_ingest_roundtrip": 1,           # [fixture]
     "k_core_similarity_graph": 6,          # [iter] peel rounds
-    "entity_resolution_pipeline": 19,      # [iter] ER index + CC +
-                                           # r13 CC edge-count sizing
+    "entity_resolution_pipeline": 17,      # [iter] ER index + CC
     "collation_aware_grouping": 1,         # [sqltxt]
     "sql_udf_suite": 3,                    # [sqltxt] UDF DDL
     "table_ddl_lifecycle": 7,              # [fixture] create/append/drop
-    "er_survivorship_scored": 19,          # [iter] ER graph + CC +
-                                           # r13 CC edge-count sizing
+    "er_survivorship_scored": 17,          # [iter] ER graph + CC
     "personalized_pagerank_seeded": 11,    # [iter] unrolled PPR rounds +
                                            # r13 dangling-set checkpoint
     "cluster_medoid_selection": 5,         # [iter] k-means + medoid

@@ -6,9 +6,9 @@ the optimization round restructured, on purpose-built fixtures:
 
 1. ``dedup.shingle_pair_counts`` + the ``jaccard/containment`` filter
    split (one shared self-join front half for both detectors);
-2. ``graph.pagerank_integer`` / ``personalized_pagerank_integer``'s
-   loop-invariant dangling-node precompute (the dangling aggregate must
-   still see exactly the no-out-edge nodes every round).
+2. ``graph.pagerank_integer``'s loop-invariant dangling-node
+   precompute, uniform and seeded (the dangling aggregate must still
+   see exactly the no-out-edge nodes every round).
 """
 
 from __future__ import annotations
@@ -212,8 +212,19 @@ def test_personalized_pagerank_dangling_precompute_exact(spark):
     sdf = spark.createDataFrame([(v,) for v in seeds], ["n"])
     out = {
         row["n"]: row["rank_unit"]
-        for row in graph.personalized_pagerank_integer(
-            ndf, edf, sdf, iterations=4
+        for row in graph.pagerank_integer(
+            ndf, edf, iterations=4, seeds=sdf
         ).collect()
     }
     assert out == r
+
+
+def test_pagerank_every_node_a_seed_equals_uniform(spark):
+    """``seeds=None`` (uniform teleport, no seed-marking checkpoint) is
+    the seeded recurrence with S = every node, row for row — on a graph
+    whose node 3 is dangling."""
+    ndf = spark.createDataFrame([(v,) for v in [1, 2, 3, 4]], ["n"])
+    edf = spark.createDataFrame([(1, 2), (2, 3), (4, 2)], ["a", "b"])
+    uniform = graph.pagerank_integer(ndf, edf, iterations=4).collect()
+    seeded = graph.pagerank_integer(ndf, edf, iterations=4, seeds=ndf).collect()
+    assert sorted(map(tuple, uniform)) == sorted(map(tuple, seeded))

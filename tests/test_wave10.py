@@ -345,16 +345,13 @@ def test_interpolation_brackets_and_bounds(spark, sf_dir):
 
 
 def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):
-    from udacitydatawarehouseprj_spark.operators import dedup as dd
-
     agg = {r.split: r for r in Q.leakage_safe_split(spark, sf_dir).collect()}
     docs = Q._t(spark, sf_dir, "documents")
     n = docs.count()
     assert sum(r.n_docs for r in agg.values()) == n
     # rebuild the per-doc assignment and assert no cluster spans splits
-    pairs = Q._lsh_pairs_05(spark, sf_dir)
     cc = {r.doc_id: r.cluster_id
-          for r in dd.connected_components(pairs).collect()}
+          for r in Q._lsh_cc_labels(spark, sf_dir).collect()}
     p = 999999937
     splits = {}
     for r in docs.select("doc_id").collect():

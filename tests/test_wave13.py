@@ -12,7 +12,7 @@ def test_ppr_empty_seeds_raises(spark):
     edges = spark.createDataFrame([Row(a=1, b=2)])
     empty_seeds = nodes.where(F.lit(False))
     with pytest.raises(ValueError, match="seeds must be non-empty"):
-        G.personalized_pagerank_integer(nodes, edges, empty_seeds)
+        G.pagerank_integer(nodes, edges, seeds=empty_seeds)
 
 
 def test_symbol_expr_empty_defs_raises():

@@ -92,6 +92,8 @@ Usage:
   python tools/bench_guard.py new.json --record --promote    # + write
       BENCH_record.json if (and only if) every record rule passes
 Exit code 0 = clean (and record bar passed, if --record), 1 otherwise.
+A report at a different scale factor (``sf``) than the reference is
+refused with exit code 1 before any comparison.
 """
 
 from __future__ import annotations
@@ -273,6 +275,12 @@ def main() -> int:
     record_mode = "--record" in args
     promote = "--promote" in args
     ref, ref_source = committed_record(rev)
+    if new.get("sf") != ref.get("sf"):
+        print(f"REFUSED: the report is at sf {new.get('sf')} but the "
+              f"reference ({rev}:{ref_source}) is at sf {ref.get('sf')}; "
+              "per-query times compare only at one scale factor",
+              file=sys.stderr)
+        return 1
 
     ratios = []
     outliers = []

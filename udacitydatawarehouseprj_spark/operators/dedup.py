@@ -669,84 +669,6 @@ def decontaminate_overlap(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over a near-duplicate pair relation:
-    (node, cluster_id) where cluster_id = min node id reachable through
-    the pair graph. This is the step that turns PAIR output into
-    CLUSTER-level dedup (keep one doc per duplicate cluster, not per
-    pair — transitive duplicates A~B~C collapse together even when A~C
-    was never emitted).
-
-    Algorithm: min-label propagation with POINTER DOUBLING — each round
-    every node takes min(own label, neighbors' labels, label-of-label).
-    The label-of-label jump halves the remaining distance to the
-    component minimum every round, so convergence is O(log diameter)
-    rounds, not O(diameter) — the difference between 6 and 60 shuffles
-    on a long duplicate chain. Each round is two joins + one
-    aggregation, all JVM; the iterative driver loop is the shape SQL
-    can't express (the oracle replays it as a recursive CTE).
-
-    Lineage is truncated every round with ``localCheckpoint`` —
-    without it each round's plan nests the previous one and the
-    analyzer stack-overflows by ~10 rounds (observed). On a real
-    cluster prefer reliable ``checkpoint`` (HDFS-backed) so executor
-    loss can't sever the truncated lineage; local mode has no such
-    failure domain.
-    """
-    # The pair relation is usually an expensive pipeline (LSH + exact
-    # verification); cache it BEFORE the symmetrization union, which
-    # otherwise evaluates the full pipeline twice (once per union arm).
-    pairs = _cache(pairs.select(a_col, b_col))
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    rev = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-    edges = fwd.union(rev).distinct().cache()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(
-                labels.select(F.col("node").alias("dst"), "label"), "dst"
-            )
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-            .withColumnRenamed("src", "node")
-        )
-        # pointer doubling: my label's current label (labels is total on
-        # nodes and label ≤ node, so the inner join always hits)
-        jump = labels.select(
-            F.col("node").alias("_via"), F.col("label").alias("jmin")
-        )
-        stepped = (
-            labels.join(neighbor_min, "node", "left")
-            .join(jump, labels["label"] == jump["_via"], "left")
-            .select(
-                "node",
-                F.col("label").alias("_old"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nmin"), F.col("label")),
-                    F.coalesce(F.col("jmin"), F.col("label")),
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = stepped.filter(F.col("label") != F.col("_old")).limit(1).count()
-        labels = stepped.drop("_old")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
 def build_dedup_index(
     corpus: DataFrame,
     id_col: str = "doc_id",

@@ -1,20 +1,21 @@
 """Iterative graph algorithms as join+aggregate rounds.
 
 Beyond-reference operators: the reference has no graph surface; this
-module hosts the iterative-algorithm family (connected components lives
-with its dedup consumers in ``operators/dedup.py``; PageRank here).
+module hosts the iterative-algorithm family — the engine's one
+connected-components operator (``connected_components_minlabel``) and
+its one PageRank loop (``pagerank_integer``, personalized when given
+seeds), plus label propagation, k-core and triangle counting.
 
 Scale design (100 TB): one iteration = ONE |E|-linear equi-join plus a
 hash aggregation on the destination key — the canonical distributed
 PageRank shape; no adjacency matrices, no driver-side graph. Lineage is
-truncated per round with ``localCheckpoint`` exactly like
-``dedup.connected_components``, so 10 iterations cost 10 shuffles, not
-an exponentially deep plan.
+truncated per round with ``localCheckpoint`` in every loop here, so 10
+iterations cost 10 shuffles, not an exponentially deep plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: fixed-point scale for integer PageRank (1.0 == 10^12 units)
@@ -27,6 +28,7 @@ def pagerank_integer(
     id_col: str = "n",
     iterations: int = 6,
     unit: int = PAGERANK_UNIT,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank with damping 0.85 in EXACT integer fixed-point.
 
@@ -34,12 +36,21 @@ def pagerank_integer(
     is integral floor division on positives, so the result is
     bit-identical across engines, partitionings, and summation orders —
     the property that lets a DuckDB oracle replay the full iteration
-    unrolled (no float accumulation anywhere). The recurrence:
+    unrolled (no float accumulation anywhere). With S the seed set
+    (every node when ``seeds`` is None), the recurrence:
 
-        r₀(v)    = unit // N
+        r₀(v)    = [v ∈ S] · unit // |S|
         contrib  = (r(u)·85) // (100·deg(u))        per edge u→v
         dangling = Σ_{deg(u)=0} (r(u)·85) // 100
-        r'(v)    = (15·unit)//(100·N) + Σ contrib + dangling//N
+        r'(v)    = [v ∈ S]·((15·unit)//(100·|S|) + dangling//|S|)
+                   + Σ contrib
+
+    ``seeds`` (rows keyed by ``id_col``, non-empty) gives Personalized
+    PageRank (random walk with restart): teleport and dangling mass
+    restart at the seed set, so rank concentrates in the seeds'
+    neighborhoods and nodes unreachable from any seed converge to
+    exactly 0 — a property the integer arithmetic preserves
+    bit-for-bit (float PPR leaks epsilon mass everywhere).
 
     Floor-division remainders leak a few units per node per round
     (deterministically), which is irrelevant to ranking and the price of
@@ -47,13 +58,24 @@ def pagerank_integer(
 
     ``edges`` is a directed (a, b) relation — pass both directions for an
     undirected graph. ``nodes`` must contain every vertex (isolated
-    vertices are dangling mass). N is one bounded driver scalar (the
+    vertices are dangling mass). |S| is one bounded driver scalar (the
     watermark pattern).
+
+    Returns (id_col, degree, rank_unit).
     """
     deg = edges.groupBy("a").agg(F.count("*").alias("d"))
-    n_nodes = nodes.count()
-    base = (15 * unit) // (100 * n_nodes)
+    n_seeds = (nodes if seeds is None else seeds).count()
+    if seeds is not None and n_seeds == 0:
+        raise ValueError("seeds must be non-empty")
     node_ids = nodes.select(F.col(id_col).alias("n"))
+    teleport = F.lit(1)
+    if seeds is not None:
+        seed_ids = seeds.select(F.col(id_col).alias("n"), F.lit(1).alias("s"))
+        node_ids = node_ids.join(F.broadcast(seed_ids), "n", "left").select(
+            "n", F.coalesce("s", F.lit(0)).alias("is_seed")
+        ).localCheckpoint(eager=True)
+        teleport = F.col("is_seed")
+    base = (15 * unit) // (100 * n_seeds)
     edges_d = edges.join(deg, "a").localCheckpoint(eager=True)
     # the dangling-node SET is loop-invariant — materialize it once so
     # each round's dangling-mass aggregate is a semi-join against a
@@ -64,7 +86,7 @@ def pagerank_integer(
     ).localCheckpoint(eager=True)
 
     r = node_ids.select(
-        "n", F.lit(unit // n_nodes).cast("long").alias("r")
+        "n", (teleport * F.lit(unit // n_seeds)).cast("long").alias("r")
     ).localCheckpoint(eager=True)
     for _ in range(iterations):
         contrib = (
@@ -87,9 +109,9 @@ def pagerank_integer(
             .select(
                 "n",
                 (
-                    F.lit(base)
+                    teleport
+                    * (F.lit(base) + F.expr(f"dang div {n_seeds}"))
                     + F.coalesce("c", F.lit(0))
-                    + F.expr(f"dang div {n_nodes}")
                 )
                 .cast("long")
                 .alias("r"),
@@ -250,7 +272,6 @@ def connected_components_minlabel(
     edges: DataFrame,
     id_col: str = "n",
     max_iterations: int = 20,
-    symmetrize: bool = True,
 ) -> DataFrame:
     """Connected components by min-label propagation with star
     shortcuts — the alternating-contraction family (Kiveris et al.,
@@ -273,51 +294,65 @@ def connected_components_minlabel(
     one left join; lineage truncated per round with localCheckpoint
     (the iterative-plan-growth guard the PageRank/LPA rounds use).
 
-    Labels propagate along STORED edge direction only (nbr_min
-    aggregates over a→b), so the edge set must contain BOTH directions
-    of every undirected edge or components fail to merge whenever the
-    smaller id has no in-edge (edge 2→1 alone would leave node 2 in
-    its own component). ``symmetrize=True`` (the default) unions the
-    reversed edges internally — a one-time lineage step before the
-    single checkpoint, NOT a per-round cost; pass ``symmetrize=False``
-    only when the input is already symmetric (skips doubling the
-    checkpointed edge relation).
+    ``edges`` (a, b) is undirected: each pair is stored in both
+    directions once, before the loop, because labels propagate along
+    stored direction only (edge 2→1 alone would leave node 2 in its own
+    component). ``nodes`` must contain every edge endpoint; a node
+    with no edge keeps its own id.
+
+    Actions: ONE SQL execution before the loop — one checkpoint that
+    holds both the label seed and the symmetric edges, with the edge
+    count observed on the way — then one checkpoint and one
+    convergence count per round.
 
     Returns (id_col, component) — component = min node id reachable.
     """
-    node_ids = nodes.select(F.col(id_col).alias("n")).distinct()
-    base = edges.select("a", "b")
-    if symmetrize:
-        base = base.unionByName(
-            base.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    spark = edges.sparkSession
+    # One job materializes the label seed and both directions of every
+    # edge in one checkpoint, rows tagged by ``edge``; an observation
+    # counts the stored edges on the way.
+    seen = Observation()
+    both = (
+        edges.select("a", "b")
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+        .select(
+            F.explode(
+                F.array(
+                    F.struct("a", "b"),
+                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
+                )
+            ).alias("r")
         )
-    base = base.localCheckpoint(eager=True)
-    # Size the loop's partitioning from the MATERIALIZED edge count
-    # (one cheap job over the checkpointed relation, the watermark
-    # pattern): the per-round joins/aggregates only need enough
-    # partitions to hold ~2M edges each, and a 13-round loop over a
-    # tiny graph otherwise pays 13 × (conf-many empty tasks + an AQE
-    # wave per exchange) of pure scheduling overhead — measured 14.7 s
-    # → 6.5 s at sf0.1 for modularity's 920-edge graph. On a real
-    # cluster the same formula yields conf-many partitions and the
-    # scoped setting is a no-op. Labels/base are narrowed with
-    # coalesce (no recompute of the checkpointed RDDs).
-    spark = base.sparkSession
-    n_edges = base.count()
-    par = int(spark.sparkContext.defaultParallelism)
-    n_parts = max(1, min(par, n_edges // 2_000_000 + 1))
-    if n_parts < base.rdd.getNumPartitions():
-        base = base.coalesce(n_parts)
-    # materialize the label seed BEFORE narrowing the shuffle conf: the
-    # caller's node pipeline (often a distinct/aggregate over a large
-    # relation) must run at full parallelism — only the per-round loop
-    # joins, whose inputs are the two checkpointed relations, get the
-    # size-derived partition count
-    labels = node_ids.select(
-        "n", F.col("n").cast("long").alias("lbl")
-    ).localCheckpoint(eager=True)
-    if n_parts < labels.rdd.getNumPartitions():
-        labels = labels.coalesce(n_parts)
+        .select(F.lit(True).alias("edge"), "r.*")
+        .unionByName(
+            nodes.select(
+                F.lit(False).alias("edge"),
+                F.col(id_col).alias("a"),
+                F.col(id_col).alias("b"),
+            ).distinct()
+        )
+        .localCheckpoint(eager=True)
+    )
+    # Size the loop's partitioning from the edge count: the per-round
+    # joins/aggregates only need enough partitions to hold ~2M edges
+    # each, and a 13-round loop over a tiny graph otherwise pays 13 ×
+    # (conf-many empty tasks + an AQE wave per exchange) of pure
+    # scheduling overhead — measured 14.7 s → 6.5 s at sf0.1 for
+    # modularity's 920-edge graph. On a real cluster the same formula
+    # yields conf-many partitions and the scoped setting is a no-op.
+    # The seed above ran at full parallelism; the loop's inputs are
+    # narrowed with coalesce (no recompute of the checkpoint).
+    n_parts = max(
+        1,
+        min(int(spark.sparkContext.defaultParallelism),
+            2 * seen.get["n"] // 2_000_000 + 1),
+    )
+    if n_parts < both.rdd.getNumPartitions():
+        both = both.coalesce(n_parts)
+    base = both.filter("edge").select("a", "b")
+    labels = both.filter(~F.col("edge")).select(
+        F.col("a").alias("n"), F.col("b").cast("long").alias("lbl")
+    )
     old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     try:
@@ -417,87 +452,3 @@ def k_core(
         .agg(F.count("*").cast("long").alias("core_degree"))
         .select(F.col("a").alias(id_col), "core_degree")
     )
-
-
-def personalized_pagerank_integer(
-    nodes: DataFrame,
-    edges: DataFrame,
-    seeds: DataFrame,
-    id_col: str = "n",
-    iterations: int = 6,
-    unit: int = PAGERANK_UNIT,
-) -> DataFrame:
-    """Personalized PageRank (random walk with restart) in the same
-    EXACT integer fixed-point as ``pagerank_integer`` — the
-    seed-relative importance measure behind 'related items' and
-    graph-local expansion: teleport mass restarts at the SEED SET, not
-    uniformly, so rank concentrates in the seeds' neighborhoods and
-    nodes unreachable from any seed converge to exactly 0 (a property
-    the integer arithmetic preserves bit-for-bit; float PPR leaks
-    epsilon mass everywhere).
-
-        r₀(v)    = [v ∈ S] · unit // |S|
-        contrib  = (r(u)·85) // (100·deg(u))     per edge u→v
-        dangling = Σ_{deg(u)=0} (r(u)·85) // 100
-        r'(v)    = [v ∈ S]·((15·unit)//(100·|S|) + dangling//|S|)
-                   + Σ contrib
-
-    Same per-round shape and cost as pagerank_integer (one |E| join +
-    aggregation + left join, lineage truncated per round); |S| is one
-    bounded driver scalar. ``edges`` directed — pass both directions
-    for an undirected graph.
-    """
-    deg = edges.groupBy("a").agg(F.count("*").alias("d"))
-    n_seeds = seeds.count()
-    if n_seeds == 0:
-        raise ValueError("seeds must be non-empty")
-    node_ids = nodes.select(F.col(id_col).alias("n"))
-    seed_ids = seeds.select(F.col(id_col).alias("n")).withColumn(
-        "is_seed", F.lit(1)
-    )
-    base = (15 * unit) // (100 * n_seeds)
-    marked = node_ids.join(F.broadcast(seed_ids), "n", "left").select(
-        "n", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
-    ).localCheckpoint(eager=True)
-    edges_d = edges.join(deg, "a").localCheckpoint(eager=True)
-    # loop-invariant dangling-node set, materialized once (see
-    # pagerank_integer)
-    dang_nodes = node_ids.join(
-        deg, F.col("n") == F.col("a"), "left_anti"
-    ).localCheckpoint(eager=True)
-
-    r = marked.select(
-        "n",
-        (F.col("is_seed") * F.lit(unit // n_seeds)).cast("long").alias("r"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iterations):
-        contrib = (
-            r.join(edges_d, F.col("n") == F.col("a"))
-            .select(
-                F.col("b").alias("dst"),
-                F.expr("(r * 85) div (100 * d)").alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("c"))
-        )
-        dang = r.join(dang_nodes, "n", "left_semi").agg(
-            F.coalesce(F.sum(F.expr("(r * 85) div 100")), F.lit(0)).alias(
-                "dang"
-            )
-        )
-        r = (
-            marked.join(contrib, F.col("n") == F.col("dst"), "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "n",
-                (
-                    F.col("is_seed")
-                    * (F.lit(base) + F.expr(f"dang div {n_seeds}"))
-                    + F.coalesce("c", F.lit(0))
-                )
-                .cast("long")
-                .alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return r.select(F.col("n").alias(id_col), F.col("r").alias("rank_unit"))

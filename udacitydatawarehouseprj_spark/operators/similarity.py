@@ -56,6 +56,24 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def _rank_topk(cands: DataFrame, k: int) -> DataFrame:
+    """Each query's k best candidates: rank by cosine desc, ties broken
+    by neighbor_id asc; rank as int, cosine rounded to 6 places."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        cands.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rank").cast("int").alias("rank"),
+            F.round("cosine", 6).alias("cosine"),
+        )
+    )
+
+
 def _pairs_with_cosine(corpus: DataFrame, queries: DataFrame,
                        id_col: str, vec_col: str,
                        extra_corpus_cols: tuple = ()) -> DataFrame:
@@ -131,19 +149,7 @@ def cosine_topk(
             yield carry
 
     cands = pairs.mapInPandas(partial_topk, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(cands, k)
 
 
 def cosine_pairs(
@@ -236,19 +242,7 @@ def cosine_topk_lsh(
             / (F.col("c_norm") * F.col("q_norm")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(pairs, k)
 
 
 def ivf_topk(
@@ -312,19 +306,7 @@ def ivf_topk(
             dot(F.col("c_emb"), F.col("q_emb")) / (F.col("c_norm") * F.col("q_norm")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(pairs, k)
 
 
 # =====================================================================
@@ -585,19 +567,7 @@ def cosine_topk_blas(
             )
 
     cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(cands, k)
 
 
 def cosine_topk_lsh_blas(
@@ -690,19 +660,7 @@ def cosine_topk_lsh_blas(
                 )
 
     cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(cands, k)
 
 
 def kmeans_centroids(
@@ -819,19 +777,7 @@ def ivf_topk_kmeans(
                 )
 
     cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(cands, k)
 
 
 def semantic_dedup(
@@ -1285,19 +1231,7 @@ def pq_topk(
                 )
 
     cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(cands, k)
 
 
 def pq_topk_reranked(
@@ -1348,19 +1282,7 @@ def pq_topk_reranked(
             / (F.col("c_norm") * F.col("q_norm")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def gram_partials(
@@ -1540,19 +1462,7 @@ def hard_negative_topk(
             yield carry
 
     cands = pairs.mapInPandas(partial_topk, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(cands, k)
 
 
 def cosine_topk_blas_batch(
@@ -1624,19 +1534,8 @@ def cosine_topk_blas_batch(
                 yield pd.concat(out)
 
     cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
+    return _rank_topk(
+        cands.filter(F.col("neighbor_id") != F.col("query_id")), k
     )
 
 
@@ -1770,19 +1669,8 @@ def _ivf_batch_serve(
                 yield pd.concat(out)
 
     cands = corpus.mapInPandas(serve, schema=_topk_candidates_schema())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    topk = (
-        cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
+    topk = _rank_topk(
+        cands.filter(F.col("neighbor_id") != F.col("query_id")), k
     )
     stats = {"mean_frac": mean_frac, "min_cand": min_cand}
     return topk, stats

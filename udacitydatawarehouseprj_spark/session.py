@@ -135,7 +135,7 @@ def release_tracked_caches() -> None:
 # are keyed so a different corpus/threshold builds its own entry, and
 # they hold only SMALL relations (candidate pairs, learned merge tables)
 # — never corpus-sized data. Released explicitly by harness teardown
-# (bench/parity end) or release_all_caches().
+# (bench/parity end) or release_shared_caches().
 _SHARED_CACHES: dict[str, DataFrame] = {}
 
 #: When True (set by bench.py), each shared-cache build is materialized
