@@ -4,9 +4,10 @@ truth vs MinHash LSH, SimHash invariants."""
 from __future__ import annotations
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from udacitydatawarehouseprj_spark import session as S
-from udacitydatawarehouseprj_spark.operators import dedup
+from udacitydatawarehouseprj_spark.operators import dedup, graph
 
 
 def _docs(spark, texts):
@@ -149,6 +150,36 @@ def test_release_caches_unpersists(spark, sf_dir):
     assert len(S._TRACKED_CACHES) >= 1
     S.release_tracked_caches()
     assert S._TRACKED_CACHES == []
+
+
+def _cluster_pairs(pairs):
+    """Near-dup pairs (doc_a, doc_b) -> {doc_id: cluster_id}, mapped onto
+    the connected-components operator the LSH cluster queries use."""
+    labels = graph.connected_components_minlabel(
+        pairs.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")),
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+        id_col="doc_id",
+    )
+    return {r.doc_id: r.component for r in labels.collect()}
+
+
+def test_connected_components_transitive_chain(spark):
+    """A~B, B~C, D~E: components {A,B,C} and {D,E}, labels = min id —
+    the transitive collapse pair-level dedup can't do."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
+    )
+    assert _cluster_pairs(pairs) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_connected_components_long_path_converges(spark):
+    """A 12-edge path graph needs more than one propagation round —
+    exercises the convergence loop, not just one round."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(20, 32)], "doc_a long, doc_b long"
+    )
+    out = _cluster_pairs(pairs)
+    assert set(out.values()) == {20} and len(out) == 13
 
 
 def test_incremental_dedup_kill_rules(spark):
