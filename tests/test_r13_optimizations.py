@@ -6,9 +6,9 @@ the optimization round restructured, on purpose-built fixtures:
 
 1. ``dedup.shingle_pair_counts`` + the ``jaccard/containment`` filter
    split (one shared self-join front half for both detectors);
-2. ``graph.pagerank_integer``'s loop-invariant dangling-node
-   precompute, uniform and seeded (the dangling aggregate must still
-   see exactly the no-out-edge nodes every round).
+2. ``graph.pagerank_integer``'s dangling mass, uniform and seeded:
+   rank rows carry their out-degree, and the dangling aggregate must
+   see exactly the no-out-edge nodes every round.
 """
 
 from __future__ import annotations
@@ -166,9 +166,9 @@ def _expected_integer_pagerank(nodes, edges, iterations, unit):
 
 
 def test_pagerank_dangling_precompute_exact(spark):
-    """Graph with a genuine dangling node (3 has no out-edge): the
-    precomputed dangling set must feed every round's dangling mass —
-    output equals the plain-Python replay of the integer recurrence."""
+    """Graph with a genuine dangling node (3 has no out-edge): its rank
+    must feed every round's dangling mass — output equals the
+    plain-Python replay of the integer recurrence."""
     nodes = [1, 2, 3, 4]
     edges = [(1, 2), (2, 3), (4, 2)]  # 3 dangling; 4 has no in-edge
     ndf = spark.createDataFrame([(v,) for v in nodes], ["n"])

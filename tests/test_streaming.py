@@ -37,16 +37,21 @@ def stream_rows():
     ]
 
 
-def test_available_now_hourly_rollup(spark, tmp_path, stream_rows):
-    src = str(tmp_path / "landing")
-    _write_events(src, stream_rows)
-    q = events_stream.run_hourly_stream(
-        spark, src, str(tmp_path / "ckpt"), sink_table="t_hourly",
-        watermark="2 hours",
+def _hourly_rollup(spark, tmp_path, rows):
+    """Drain ``rows`` through the hourly parquet sink; read it back as
+    {(hour_start, event_type): (n_events, total_value)}."""
+    src, out = str(tmp_path / "landing"), str(tmp_path / "hourly")
+    _write_events(src, rows)
+    q = events_stream.run_hourly_stream_to_parquet(
+        spark, src, str(tmp_path / "ckpt"), out
     )
     q.awaitTermination(120)
-    out = {(r.hour_start, r.event_type): (r.n_events, r.total_value)
-           for r in spark.sql("SELECT * FROM t_hourly").collect()}
+    return src, {(r.hour_start, r.event_type): (r.n_events, r.total_value)
+                 for r in spark.read.parquet(out).collect()}
+
+
+def test_available_now_hourly_rollup(spark, tmp_path, stream_rows):
+    _, out = _hourly_rollup(spark, tmp_path, stream_rows)
     h = lambda hh: datetime(2024, 3, 1, hh, 0)
     # duplicate event_id=2 dropped → hour 1 has 2 views, not 3
     assert out[(h(1), "view")] == (2, 3.0)
@@ -57,15 +62,7 @@ def test_available_now_hourly_rollup(spark, tmp_path, stream_rows):
 
 
 def test_batch_parity_for_closed_windows(spark, tmp_path, stream_rows):
-    src = str(tmp_path / "landing")
-    _write_events(src, stream_rows)
-    q = events_stream.run_hourly_stream(
-        spark, src, str(tmp_path / "ckpt"), sink_table="t_parity",
-        watermark="2 hours",
-    )
-    q.awaitTermination(120)
-    streamed = {(r.hour_start, r.event_type): (r.n_events, r.total_value)
-                for r in spark.sql("SELECT * FROM t_parity").collect()}
+    src, streamed = _hourly_rollup(spark, tmp_path, stream_rows)
     batch_df = events_stream.hourly_event_counts(
         spark.read.schema(events_stream.EVENTS_STREAM_SCHEMA)
         .json(src)
@@ -80,35 +77,14 @@ def test_batch_parity_for_closed_windows(spark, tmp_path, stream_rows):
     assert set(streamed) == closed
 
 
-def test_session_stream_closes_sessions(spark, tmp_path, stream_rows):
-    src = str(tmp_path / "landing")
-    _write_events(src, stream_rows)
-    q = events_stream.run_session_stream(
-        spark, src, str(tmp_path / "ckpt"), sink_table="t_sessions",
-        gap="30 minutes", watermark="1 hour",
-    )
-    q.awaitTermination(120)
-    out = {(r.user_id, r.session_start): r.n_events
-           for r in spark.sql("SELECT * FROM t_sessions").collect()}
-    # user 1: single event at 01:05 → closed 1-event session
-    assert out[(1, datetime(2024, 3, 1, 1, 5))] == 1
-    # user 2: event_id=2 arrives twice at 01:30 — no dedup in this stream,
-    # both rows land in one session
-    assert out[(2, datetime(2024, 3, 1, 1, 30))] == 2
-    # user 3 at 03:59: single closed session
-    assert out[(3, datetime(2024, 3, 1, 3, 59))] == 1
-    # user 1's 06:10 event: session not closed under the watermark
-    assert (1, datetime(2024, 3, 1, 6, 10)) not in out
-
-
 def test_running_totals_stateful_operator(spark, tmp_path, stream_rows):
     src = str(tmp_path / "landing")
     _write_events(src, stream_rows)
     q = events_stream.run_running_totals_stream(
-        spark, src, str(tmp_path / "ckpt"), sink_table="t_totals",
+        spark, src, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM t_totals").collect()
+    rows = spark.table(q.name).collect()
     # one availableNow drain → one update per user; dup event_id=2 is NOT
     # deduped here (raw running totals over arriving rows)
     by_user = {r.user_id: (r.n_events, r.total_value) for r in rows}
@@ -145,14 +121,17 @@ def test_stream_stream_attribution_join(spark, tmp_path):
         {"event_id": 4, "ts": ts(2, 0), "user_id": 2, "event_type": "view", "value": 1.0, "props": "{}"},
         {"event_id": 5, "ts": ts(4, 0), "user_id": 2, "event_type": "purchase", "value": 9.0, "props": "{}"},
     ]
+    # the attribution stream reads a parquet landing zone
+    _write_events(str(tmp_path / "json"), rows)
     src = str(tmp_path / "landing")
-    _write_events(src, rows)
+    spark.read.schema(events_stream.EVENTS_STREAM_SCHEMA).json(
+        str(tmp_path / "json")
+    ).write.parquet(src)
     q = events_stream.run_purchase_attribution_stream(
-        spark, src, str(tmp_path / "ckpt"), sink_table="t_attr",
+        spark, src, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    got = {(r.purchase_id, r.view_id)
-           for r in spark.sql("SELECT * FROM t_attr").collect()}
+    got = {(r.purchase_id, r.view_id) for r in spark.table(q.name).collect()}
     # purchase 3 attributes to both in-window views; purchase 5 to none
     assert got == {(3, 1), (3, 2)}
 

@@ -49,21 +49,25 @@ def test_connected_components_matches_union_find(spark):
 
 
 def test_connected_components_long_path_converges_fast(spark):
-    # a 64-node path has diameter 63; star shortcuts must close it in
-    # O(log n) rounds — well under the default max_iterations=20
-    n = 64
-    nodes_df = spark.createDataFrame([Row(n=i) for i in range(n)])
-    chain = [(i, i + 1) for i in range(n - 1)]
-    edges_df = spark.createDataFrame(
-        [Row(a=a, b=b) for a, b in chain] + [Row(a=b, b=a) for a, b in chain]
-    )
-    got = {
-        r.n: r.component
-        for r in graph.connected_components_minlabel(
-            nodes_df, edges_df, max_iterations=10
-        ).collect()
-    }
-    assert set(got.values()) == {0}
+    # a 64-node path 0–1–…–63, and a 41-node path 0–40–39–…–1 whose ids
+    # fall away from its minimum: every node ends in component 0
+    for chain in (
+        [(i, i + 1) for i in range(63)],
+        [(0, 40)] + [(i, i - 1) for i in range(40, 1, -1)],
+    ):
+        n = len(chain) + 1
+        nodes_df = spark.createDataFrame([Row(n=i) for i in range(n)])
+        edges_df = spark.createDataFrame(
+            [Row(a=a, b=b) for a, b in chain]
+            + [Row(a=b, b=a) for a, b in chain]
+        )
+        got = {
+            r.n: r.component
+            for r in graph.connected_components_minlabel(
+                nodes_df, edges_df
+            ).collect()
+        }
+        assert got == dict.fromkeys(range(n), 0)
 
 
 def test_skipgram_pairs_hand_checked(spark, tmp_path):

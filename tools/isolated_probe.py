@@ -14,8 +14,12 @@ Usage:
   python tools/isolated_probe.py QUERY [SF_DIR] [REPEATS]
   # defaults: SF_DIR=/root/testdata/sf0.1, REPEATS=3
 
-Output: {"query": ..., "sf_dir": ..., "runs": [...], "median": ...,
-         "spread": ..., "anchor_sec": ...}
+Output: {"query": ..., "sf_dir": ..., "runs": [...], "shared_builds": {...},
+         "median": ..., "spread": ..., "anchor_sec": ...}
+Runs are timed as bench.py times them (``bench.time_query``, sorted): a
+query that records harness phases runs once, and each session-shared
+cache is built and timed on its own (``S.TIME_SHARED_BUILDS``), so its
+seconds land in ``shared_builds`` rather than hiding in one repeat.
 The anchor (bench._anchor_workload — the dedicated synthetic shuffle
 anchor — timed once after warmup AND one unmeasured warm pass, so it
 samples the same steady-state quantity bench.py samples) records the
@@ -45,6 +49,7 @@ def main() -> None:
 
     spark = S.get_spark("isolated-probe")
     spark.sparkContext.setLogLevel("ERROR")
+    S.TIME_SHARED_BUILDS = True
     registry = Q.queries()
 
     bench.warmup(spark, sf_dir)
@@ -55,15 +60,15 @@ def main() -> None:
     bench._time_anchor(spark)
     anchor_sec = bench._time_anchor(spark)
 
-    runs = [round(bench.timed_run(spark, registry[name], sf_dir), 3)
-            for _ in range(repeats)]
-    srt = sorted(runs)
+    runs, _ = bench.time_query(spark, name, registry[name], sf_dir, repeats)
+    runs = [round(t, 3) for t in runs]
     print(json.dumps({
         "query": name,
         "sf_dir": sf_dir,
         "runs": runs,
+        "shared_builds": dict(S.SHARED_BUILD_SECONDS),
         "median": round(statistics.median(runs), 3),
-        "spread": round(srt[-1] - srt[0], 3),
+        "spread": round(runs[-1] - runs[0], 3),
         "anchor_sec": anchor_sec,
     }))
 

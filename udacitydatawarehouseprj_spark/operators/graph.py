@@ -63,34 +63,31 @@ def pagerank_integer(
 
     Returns (id_col, degree, rank_unit).
     """
-    deg = edges.groupBy("a").agg(F.count("*").alias("d"))
+    e = edges.select("a", "b").localCheckpoint(eager=True)
     n_seeds = (nodes if seeds is None else seeds).count()
     if seeds is not None and n_seeds == 0:
         raise ValueError("seeds must be non-empty")
-    node_ids = nodes.select(F.col(id_col).alias("n"))
+    # every rank row carries its node's out-degree ``d`` (and seed flag),
+    # so each round reads contributions and dangling mass off ``r`` alone
+    deg = e.groupBy(F.col("a").alias("n")).agg(F.count("*").alias("d"))
+    r = nodes.select(F.col(id_col).alias("n")).join(deg, "n", "left").select(
+        "n", F.coalesce("d", F.lit(0)).alias("d")
+    )
     teleport = F.lit(1)
     if seeds is not None:
         seed_ids = seeds.select(F.col(id_col).alias("n"), F.lit(1).alias("s"))
-        node_ids = node_ids.join(F.broadcast(seed_ids), "n", "left").select(
-            "n", F.coalesce("s", F.lit(0)).alias("is_seed")
-        ).localCheckpoint(eager=True)
+        r = r.join(F.broadcast(seed_ids), "n", "left").select(
+            "n", "d", F.coalesce("s", F.lit(0)).alias("is_seed")
+        )
         teleport = F.col("is_seed")
+    keep = r.columns
+    r = r.select(
+        *keep, (teleport * F.lit(unit // n_seeds)).cast("long").alias("r")
+    ).localCheckpoint(eager=True)
     base = (15 * unit) // (100 * n_seeds)
-    edges_d = edges.join(deg, "a").localCheckpoint(eager=True)
-    # the dangling-node SET is loop-invariant — materialize it once so
-    # each round's dangling-mass aggregate is a semi-join against a
-    # checkpointed id list instead of re-deriving deg from the caller's
-    # full edge pipeline every iteration
-    dang_nodes = node_ids.join(
-        deg, F.col("n") == F.col("a"), "left_anti"
-    ).localCheckpoint(eager=True)
-
-    r = node_ids.select(
-        "n", (teleport * F.lit(unit // n_seeds)).cast("long").alias("r")
-    ).localCheckpoint(eager=True)
     for _ in range(iterations):
         contrib = (
-            r.join(edges_d, F.col("n") == F.col("a"))
+            r.join(e, F.col("n") == F.col("a"))
             .select(
                 F.col("b").alias("dst"),
                 F.expr("(r * 85) div (100 * d)").alias("c"),
@@ -98,16 +95,16 @@ def pagerank_integer(
             .groupBy("dst")
             .agg(F.sum("c").alias("c"))
         )
-        dang = r.join(dang_nodes, "n", "left_semi").agg(
+        dang = r.filter(F.col("d") == 0).agg(
             F.coalesce(F.sum(F.expr("(r * 85) div 100")), F.lit(0)).alias(
                 "dang"
             )
         )
         r = (
-            node_ids.join(contrib, F.col("n") == F.col("dst"), "left")
+            r.join(contrib, F.col("n") == F.col("dst"), "left")
             .crossJoin(F.broadcast(dang))
             .select(
-                "n",
+                *keep,
                 (
                     teleport
                     * (F.lit(base) + F.expr(f"dang div {n_seeds}"))
@@ -118,13 +115,10 @@ def pagerank_integer(
             )
             .localCheckpoint(eager=True)
         )
-    return (
-        r.join(deg, F.col("n") == F.col("a"), "left")
-        .select(
-            F.col("n").alias(id_col),
-            F.coalesce("d", F.lit(0)).cast("long").alias("degree"),
-            F.col("r").alias("rank_unit"),
-        )
+    return r.select(
+        F.col("n").alias(id_col),
+        F.col("d").alias("degree"),
+        F.col("r").alias("rank_unit"),
     )
 
 
@@ -271,24 +265,23 @@ def connected_components_minlabel(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "n",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Connected components by min-label propagation with star
     shortcuts — the alternating-contraction family (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC 2014): each
     round every node adopts the minimum label among itself and its
     neighbors, and the label assignment itself is fed back as extra
-    (node → label) star edges, so reach DOUBLES per round and
-    convergence is O(log diameter) rounds instead of O(diameter) —
-    the property that makes the operator viable on a 100 TB graph
-    whose path diameter can be millions.
+    (node ↔ label) star edges: when node m takes a smaller label, every
+    node labelled m takes it the next round. Along a path a label still
+    moves one hop per round, so the round count grows with the length
+    of the paths a component's minimum must cross: the path 0–1–…–63
+    takes 8 rounds, but 0–40–39–…–1, whose ids fall away from its
+    minimum, takes 41.
 
     Converges to label(v) = min node id in v's component — a pure
     function of the edge set, so a recursive-CTE oracle (min reachable
-    id per node) replays it exactly. Iteration stops at the first
-    round with zero label changes (checked with a single count
-    aggregate per round); ``max_iterations`` bounds the loop — with
-    doubling, 20 rounds cover diameter ~2^20.
+    id per node) replays it exactly. Iteration runs until a round
+    changes no label (checked with a single count aggregate per round).
 
     One round = one |E|-linear equi-join + one min-aggregation +
     one left join; lineage truncated per round with localCheckpoint
@@ -356,20 +349,38 @@ def connected_components_minlabel(
     old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     try:
-        return _minlabel_loop(base, labels, max_iterations, id_col)
+        return _minlabel_loop(base, labels, id_col)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, rebuilt as a frame that carries
+    no size estimate. A checkpoint keeps the estimate of the plan it ran,
+    and a join's estimate is the product of its sides', so in a loop
+    that joins its checkpointed state with itself the estimate's digit
+    count doubles every round (39 digits after round 1, 2,440 after
+    round 7): past about 25 rounds the optimizer's arithmetic on it
+    stalls the loop."""
+    ck = df.localCheckpoint(eager=True)
+    spark = df.sparkSession
+    return DataFrame(
+        spark._jsparkSession.internalCreateDataFrame(
+            ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False
+        ),
+        spark,
+    )
 
 
 def _minlabel_loop(
     base: DataFrame,
     labels: DataFrame,
-    max_iterations: int,
     id_col: str,
 ) -> DataFrame:
-    for _ in range(max_iterations):
+    n_changed = 1
+    while n_changed:
         # star shortcuts: every node reaches its current label's node
-        # directly, both directions — this is what doubles reach/round
+        # directly, both directions
         stars = labels.filter(F.col("n") != F.col("lbl"))
         aug = base.unionByName(
             stars.select(F.col("n").alias("a"), F.col("lbl").alias("b"))
@@ -381,7 +392,7 @@ def _minlabel_loop(
             .groupBy(F.col("b").alias("dst"))
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        new_labels = (
+        new_labels = _checkpoint(
             labels.join(nbr_min, F.col("n") == F.col("dst"), "left")
             .select(
                 "n",
@@ -392,12 +403,9 @@ def _minlabel_loop(
                 .cast("int")
                 .alias("changed"),
             )
-            .localCheckpoint(eager=True)
         )
         n_changed = new_labels.agg(F.sum("changed")).first()[0] or 0
         labels = new_labels.drop("changed")
-        if n_changed == 0:
-            break
     return labels.select(
         F.col("n").alias(id_col), F.col("lbl").alias("component")
     )

@@ -65,10 +65,8 @@ def run_incremental_dedup_stream(
     checkpoint_dir: str,
     corpus_dir: str,
     index_dir: str,
-    fmt: str = "json",
-    available_now: bool = True,
 ):
-    """Start the ingest stream: JSON/parquet docs in ``source_dir`` →
+    """Start the ingest stream: JSON docs in ``source_dir`` →
     deduped survivors appended to ``corpus_dir`` (partitioned by
     batch_id) and their band/text-hash rows to ``index_dir``."""
     # StructType.add mutates in place — build fresh copies
@@ -114,16 +112,14 @@ def run_incremental_dedup_stream(
         docs.unpersist()
         S.release_tracked_caches()
 
-    if fmt == "json":
-        src = spark.readStream.schema(DOCS_STREAM_SCHEMA).json(source_dir)
-    else:
-        src = spark.readStream.schema(DOCS_STREAM_SCHEMA).parquet(source_dir)
-    writer = src.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        spark.readStream.schema(DOCS_STREAM_SCHEMA)
+        .json(source_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_crash_recovery_stream(

@@ -12,6 +12,12 @@ same hour-grain semantics incrementally:
 * append-mode sink: only closed windows are emitted, so downstream sees
   each finalized hour exactly once.
 
+Every runner drains what the source holds and stops (``availableNow``):
+the registered streaming proofs in ``queries.py`` compare each drained
+sink with a batch SQL oracle. The hourly rollup writes a day-partitioned
+parquet table; every other runner ends in one in-memory sink,
+``_drain_to_memory``, named after the table its proof reads back.
+
 Scale: state is bounded by the watermark (hours of state, not history);
 partitioned by window start, the shuffle matches the batch groupBy. The
 batch and streaming builds share the same aggregation logic
@@ -36,13 +42,18 @@ EVENTS_STREAM_SCHEMA = T.StructType(
 )
 
 
-def hourly_event_counts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+#: Event-time lateness contract of every watermarked runner: events later
+#: than this behind the newest one seen are dropped.
+WATERMARK = "2 hours"
+
+
+def hourly_event_counts(df: DataFrame) -> DataFrame:
     """Shared batch/stream aggregation: tumbling 1h window per event_type
     → count + sum(value). The window start is the hour bucket — identical
     semantics to the batch time_key derivation."""
     return (
         df.groupBy(
-            F.window(F.col(ts_col), "1 hour").alias("w"), F.col("event_type")
+            F.window(F.col("ts"), "1 hour").alias("w"), F.col("event_type")
         )
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(
@@ -68,81 +79,23 @@ def read_events_stream(
     return reader.load(source_dir)
 
 
-def run_hourly_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_table: str = "hourly_events_stream",
-    watermark: str = "2 hours",
-    fmt: str = "json",
-    available_now: bool = True,
+def _drain_to_memory(
+    df: DataFrame, output_mode: str, sink_table: str, checkpoint_dir: str
 ):
-    """Start the incremental hourly rollup.
-
-    ``available_now=True`` drains everything currently in the source and
-    stops — the batch-parity mode used in tests; False runs continuously.
-    Late events beyond ``watermark`` are dropped (documented lateness
-    contract); duplicates by event_id within the watermark are dropped.
-    """
-    src = read_events_stream(spark, source_dir, fmt=fmt)
-    deduped = src.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    agg = hourly_event_counts(deduped)
-    writer = (
-        agg.writeStream.outputMode("append")
+    """Start ``df`` into the in-memory table ``sink_table``; the stream
+    drains everything currently in its source and stops."""
+    return (
+        df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(sink_table)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_session_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_table: str = "sessions_stream",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    fmt: str = "json",
-    available_now: bool = True,
-):
-    """Incremental gap-based sessionization: the streaming twin of the
-    batch ``sessionize_events`` query (same session_window semantics).
-    Sessions close when the watermark passes their end; state per open
-    session is bounded by the watermark."""
-    src = read_events_stream(spark, source_dir, fmt=fmt)
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("user_id"),
-            F.col("w.start").alias("session_start"),
-            F.col("n_events"),
-        )
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_running_totals_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_table: str = "running_totals_stream",
-    fmt: str = "json",
-    available_now: bool = True,
+    spark: SparkSession, source_dir: str, checkpoint_dir: str
 ):
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     running (n_events, total_value) maintained in group state and emitted
@@ -155,7 +108,7 @@ def run_running_totals_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    src = read_events_stream(spark, source_dir, fmt=fmt)
+    src = read_events_stream(spark, source_dir)
 
     output_schema = "user_id long, n_events long, total_value double"
     state_schema = "n long, micro long"
@@ -189,15 +142,7 @@ def run_running_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain_to_memory(agg, "update", "rt_totals_readback", checkpoint_dir)
 
 
 def run_hourly_stream_to_parquet(
@@ -205,12 +150,11 @@ def run_hourly_stream_to_parquet(
     source_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    watermark: str = "2 hours",
-    fmt: str = "json",
-    available_now: bool = True,
 ):
     """Production-shaped sink: the hourly rollup appended to a parquet
-    table, partitioned by DAY. Exactly-once via the checkpoint (file-sink
+    table, partitioned by DAY. Events later than ``WATERMARK`` are
+    dropped, and so are duplicates by event_id within it; only closed
+    hours are emitted. Exactly-once via the checkpoint (file-sink
     manifest). The partition key is deliberately coarser than the rollup
     grain: hour-level partitioning of an *aggregate* table puts a handful
     of rows in every directory (the small-files antipattern — measured
@@ -220,45 +164,40 @@ def run_hourly_stream_to_parquet(
     ``repartition`` on the partition column aligns task boundaries with
     directory boundaries so a batch never fans one day across many
     writers."""
-    src = read_events_stream(spark, source_dir, fmt=fmt)
-    deduped = src.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    src = read_events_stream(spark, source_dir)
+    deduped = src.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     agg = hourly_event_counts(deduped).withColumn(
         "hour_date", F.to_date("hour_start")
     )
-    writer = (
+    return (
         agg.repartition("hour_date")
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("hour_date")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_purchase_attribution_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_table: str = "attribution_stream",
-    lookback: str = "1 hour",
-    watermark: str = "2 hours",
-    fmt: str = "json",
-    available_now: bool = True,
+    spark: SparkSession, source_dir: str, checkpoint_dir: str
 ):
     """Stream-stream join: each purchase joined to the same user's view
-    events within the preceding ``lookback`` window (attribution).
+    events within the preceding hour (attribution). The source is
+    parquet: the readback checks row-level timestamps, which parquet
+    keeps to the microsecond and the JSON writer truncates to the
+    millisecond.
 
     Both sides carry watermarks and the join condition bounds event time,
     so Spark can expire join state — the canonical bounded-state
     stream-stream join. Inner join: a purchase emits once per qualifying
     view (the as-of/latest-only variant is the batch
     ``asof_join_purchase_view``)."""
-    src = read_events_stream(spark, source_dir, fmt=fmt)
+    src = read_events_stream(spark, source_dir, fmt="parquet")
     purchases = (
         src.filter(F.col("event_type") == "purchase")
         .select(
@@ -266,7 +205,7 @@ def run_purchase_attribution_stream(
             F.col("user_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     views = (
         src.filter(F.col("event_type") == "view")
@@ -275,35 +214,20 @@ def run_purchase_attribution_stream(
             F.col("user_id").alias("view_user"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", WATERMARK)
     )
     joined = purchases.join(
         views,
         (F.col("user_id") == F.col("view_user"))
         & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}")),
+        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 hour")),
         "inner",
     ).select("purchase_id", "user_id", "purchase_ts", "view_id", "view_ts")
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain_to_memory(joined, "append", "attrib_readback", checkpoint_dir)
 
 
 def run_stateful_sessionizer_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_table: str = "stateful_sessions_stream",
-    gap_minutes: int = 30,
-    fmt: str = "json",
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
+    spark: SparkSession, source_dir: str, checkpoint_dir: str
 ):
     """Custom stateful SESSIONIZER via ``applyInPandasWithState`` — the
     logic ``session_window`` can't express when you need the session
@@ -312,7 +236,10 @@ def run_stateful_sessionizer_stream(
     irrelevant — the state is re-sessionized after every merge), and
     each update emits the user's CURRENT session list tagged with a
     monotone ``n_seen`` so a reader selects the final emission per user
-    deterministically.
+    deterministically. A gap of more than 30 minutes between a user's
+    consecutive events starts a new session; the source drains two
+    files per micro-batch, so a landing zone of several files carries
+    state across batch boundaries.
 
     Determinism contract: everything is int64 epoch-milliseconds and
     counts — no floats touch the state or the output, so the final
@@ -328,14 +255,12 @@ def run_stateful_sessionizer_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    src = read_events_stream(
-        spark, source_dir, fmt=fmt, max_files_per_trigger=max_files_per_trigger
-    )
+    src = read_events_stream(spark, source_dir, max_files_per_trigger=2)
     out_schema = (
         "user_id long, n_seen long, session_start_ms long, n_events long"
     )
     state_schema = "ts_ms array<long>"
-    gap_ms = gap_minutes * 60_000
+    gap_ms = 30 * 60_000
 
     def update(key, pdfs, state: GroupState):
         (user_id,) = key
@@ -370,15 +295,9 @@ def run_stateful_sessionizer_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
+    return _drain_to_memory(
+        agg, "update", "stateful_sessions_stream", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_stream_static_enrich(
@@ -386,9 +305,6 @@ def run_stream_static_enrich(
     source_dir: str,
     checkpoint_dir: str,
     static_profile: DataFrame,
-    sink_table: str = "stream_static_enrich",
-    fmt: str = "json",
-    available_now: bool = True,
 ):
     """Stream-static join: the event stream enriched against a STATIC
     batch dimension (per-user profile), then aggregated — the lookup-
@@ -405,37 +321,24 @@ def run_stream_static_enrich(
     integer counts per (profile_type, event_type) — fully
     deterministic, so the readback sits under the hash gate.
     """
-    src = read_events_stream(spark, source_dir, fmt=fmt)
+    src = read_events_stream(spark, source_dir)
     enriched = src.join(F.broadcast(static_profile), "user_id")
     agg = enriched.groupBy("profile_type", "event_type").agg(
         F.count("*").alias("n_events")
     )
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
+    return _drain_to_memory(
+        agg, "complete", "stream_static_readback", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_stream_stream_join(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_table: str = "stream_stream_pairs",
-    watermark: str = "2 hours",
-    horizon_minutes: int = 60,
-    fmt: str = "json",
-    available_now: bool = True,
+    spark: SparkSession, source_dir: str, checkpoint_dir: str
 ):
     """STREAM-STREAM inner join — the hardest stateful shape in
     Structured Streaming, completing the join family next to the
     stateless stream-static enrich: a stream of views joined to a
-    stream of purchases by the same user within ``horizon_minutes``
-    AFTER the view (the attribution window expressed as a join, not a
+    stream of purchases by the same user within 60 minutes (the
+    horizon) AFTER the view (the attribution window expressed as a join, not a
     stateful sessionizer).
 
     The load-bearing parts: BOTH sides carry watermarks and the join
@@ -450,24 +353,24 @@ def run_stream_stream_join(
     under the batch SQL oracle.
     """
     views = (
-        read_events_stream(spark, source_dir, fmt=fmt)
+        read_events_stream(spark, source_dir)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", WATERMARK)
     )
     purchases = (
-        read_events_stream(spark, source_dir, fmt=fmt)
+        read_events_stream(spark, source_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     joined = views.join(
         purchases,
@@ -476,16 +379,10 @@ def run_stream_stream_join(
         & (
             F.col("purchase_ts")
             <= F.col("view_ts")
-            + F.expr(f"INTERVAL {horizon_minutes} MINUTES")
+            + F.expr("INTERVAL 60 MINUTES")
         ),
         "inner",
     ).select(views["user_id"], "view_id", "purchase_id")
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
+    return _drain_to_memory(
+        joined, "append", "stream_stream_pairs_rb", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
