@@ -59,13 +59,6 @@ def test_image_decode_stub_raises(spark):
     )
 
 
-def test_arrow_variant_matches_pandas_variant(spark):
-    src = mm.attach_payload(_docs(spark))
-    via_pandas = {tuple(r) for r in mm.extract_byte_features(src).collect()}
-    via_arrow = {tuple(r) for r in mm.extract_byte_features_arrow(src).collect()}
-    assert via_arrow == via_pandas and len(via_arrow) == 2
-
-
 def test_ppm_roundtrip_decodes_exactly(spark):
     """encode_ppm → decode_image_features recovers the analytic means."""
     df = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")

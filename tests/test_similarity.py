@@ -1,5 +1,6 @@
 """Similarity-search tests: BLAS == fold-based exact results, LSH recall,
-IVF sanity."""
+IVF sanity. Operating points are module constants; a test that needs
+another value monkeypatches the constant."""
 
 from __future__ import annotations
 
@@ -41,9 +42,7 @@ def test_lsh_topk_recall(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     q = emb.filter("vec_id < 10")
     exact = _key(similarity.cosine_topk(emb, q, k=5).collect())
-    approx = similarity.cosine_topk_lsh_blas(
-        emb, q, k=5, num_planes=4, num_tables=16
-    ).collect()
+    approx = similarity.cosine_topk_lsh_blas(emb, q).collect()
     exact_sets = {}
     for (qid, rank), (nid, _) in exact.items():
         exact_sets.setdefault(qid, set()).add(nid)
@@ -54,87 +53,33 @@ def test_lsh_topk_recall(spark, sf_dir):
     assert hits / len(approx) >= 0.8
 
 
-def test_ivf_topk_shape(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    q = emb.filter("vec_id < 5")
-    out = similarity.ivf_topk(emb, q, k=3, num_cells=8, n_probe=3).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r.query_id, []).append(r.rank)
-    for qid, ranks in per_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-        assert all(r.neighbor_id != qid for r in out if r.query_id == qid)
-
-
-def test_kmeans_centroids_converge_and_balance(spark, sf_dir):
+def test_kmeans_centroids_converge_and_balance(spark, sf_dir, monkeypatch):
     import numpy as np
-    from udacitydatawarehouseprj_spark.operators.similarity import (
-        _collect_matrix, kmeans_centroids)
 
     emb = _emb(spark, sf_dir)
-    _, mat = _collect_matrix(emb, "vec_id", "embedding")
+    _, mat = similarity._collect_matrix(emb)
 
     def inertia(cents):
         d2 = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         return d2.min(axis=1).sum()
 
-    _, c0 = kmeans_centroids(emb, k=8, iters=0)
-    _, c3 = kmeans_centroids(emb, k=8, iters=3)
+    monkeypatch.setattr(similarity, "IVF_CELLS", 8)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", 0)
+    c0 = similarity.kmeans_centroids(emb)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", 3)
+    c3 = similarity.kmeans_centroids(emb)
     assert inertia(c3) < inertia(c0)  # training improves the quantizer
     # determinism: same inputs → identical centroids
-    _, c3b = kmeans_centroids(emb, k=8, iters=3)
+    c3b = similarity.kmeans_centroids(emb)
     assert np.array_equal(c3, c3b)
 
 
 def test_ivf_kmeans_topk_contract(spark, sf_dir):
-    from udacitydatawarehouseprj_spark.operators.similarity import ivf_topk_kmeans
-
     emb = _emb(spark, sf_dir)
     q = emb.filter("vec_id < 5")
-    out = ivf_topk_kmeans(emb, q, k=3, num_cells=8, n_probe=3, iters=2).collect()
+    out = similarity.ivf_topk_kmeans(emb, q).collect()
     per_q = {}
     for r in out:
-        assert r.neighbor_id != r.query_id
-        per_q.setdefault(r.query_id, []).append(r.rank)
-    for ranks in per_q.values():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-
-
-def test_multiprobe_improves_recall(spark, sf_dir):
-    """Multi-probe must be a superset search: candidates only grow, so
-    recall is monotone in probes. Measured on the fixed testdata."""
-    emb = _emb(spark, sf_dir)
-    q = emb.filter("vec_id < 10")
-    exact = _key(similarity.cosine_topk(emb, q, k=5).collect())
-    exact_sets = {}
-    for (qid, _), (nid, _c) in exact.items():
-        exact_sets.setdefault(qid, set()).add(nid)
-
-    def recall(probes):
-        rows = similarity.cosine_topk_lsh_blas(
-            emb, q, k=5, num_planes=8, num_tables=4, probes=probes
-        ).collect()
-        hits = sum(1 for r in rows if r.neighbor_id in exact_sets.get(r.query_id, set()))
-        return hits / 50
-
-    r1, r4, r8 = recall(1), recall(4), recall(8)
-    assert r1 <= r4 <= r8  # superset search → monotone recall
-    assert r8 > 0.25  # measured 0.34 on the fixed testdata (r1 ≈ 0.1)
-
-
-def test_expression_lsh_bucket_no_driver_collect(spark, sf_dir):
-    """The pure-Column LSH variant (lsh_bucket_expr / cosine_topk_lsh):
-    bucket signatures computed as expressions — no driver-side matrix
-    collect, the form that scales past broadcastable query sets. Contract
-    checks: ranks contiguous, no self-matches, deterministic."""
-    emb = _emb(spark, sf_dir)
-    q = emb.filter("vec_id < 5")
-    out1 = similarity.cosine_topk_lsh(emb, q, k=3, num_planes=6).collect()
-    out2 = similarity.cosine_topk_lsh(emb, q, k=3, num_planes=6).collect()
-    key = lambda rows: sorted((r.query_id, r.rank, r.neighbor_id, r.cosine) for r in rows)
-    assert key(out1) == key(out2)
-    per_q = {}
-    for r in out1:
         assert r.neighbor_id != r.query_id
         per_q.setdefault(r.query_id, []).append(r.rank)
     for ranks in per_q.values():
@@ -158,14 +103,16 @@ def test_pairs_tiled_equals_fold_no_collect(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_pairs_tiled_block_count_param(spark, sf_dir):
+def test_pairs_tiled_block_count_param(spark, sf_dir, monkeypatch):
     """Output is invariant to the tiling granularity."""
     emb = _emb(spark, sf_dir).limit(200)
-    a = {(r.id_a, r.id_b) for r in
-         similarity.cosine_pairs_blas_tiled(emb, 0.35, num_blocks=2).collect()}
-    b = {(r.id_a, r.id_b) for r in
-         similarity.cosine_pairs_blas_tiled(emb, 0.35, num_blocks=7).collect()}
-    assert a == b
+
+    def pairs(blocks):
+        monkeypatch.setattr(similarity, "TILE_BLOCKS", blocks)
+        return {(r.id_a, r.id_b) for r in
+                similarity.cosine_pairs_blas_tiled(emb, 0.35).collect()}
+
+    assert pairs(2) == pairs(7)
 
 
 def test_exact_topk_partial_candidates_before_final_rank(spark, sf_dir):
@@ -182,7 +129,7 @@ def test_exact_topk_partial_candidates_before_final_rank(spark, sf_dir):
     )
 
 
-def test_semantic_dedup_drops_planted_duplicate(spark):
+def test_semantic_dedup_drops_planted_duplicate(spark, monkeypatch):
     import math
 
     # 3 clusters of 2 near-identical vectors + 2 lone vectors
@@ -197,7 +144,9 @@ def test_semantic_dedup_drops_planted_duplicate(spark):
     rows.append((90, unit(1.0)))
     rows.append((91, [0.0, 0.0, 1.0, 0.0]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.semantic_dedup(df, num_cells=4, iters=3, threshold=0.95)
+    monkeypatch.setattr(similarity, "IVF_CELLS", 4)
+    monkeypatch.setattr(similarity, "SEMDEDUP_THRESHOLD", 0.95)
+    out = similarity.semantic_dedup(df)
     got = {r.vec_id: r for r in out.collect()}
     assert len(got) == 8
     for g in range(3):
@@ -222,7 +171,7 @@ def test_semantic_dedup_drops_planted_duplicate(spark):
                     assert dot / (na * nb) < 0.95
 
 
-def test_mmr_rerank_diversifies_near_duplicate_candidates(spark):
+def test_mmr_rerank_diversifies_near_duplicate_candidates(spark, monkeypatch):
     import math
 
     # corpus: two near-identical highly-relevant vectors + a moderately
@@ -239,13 +188,16 @@ def test_mmr_rerank_diversifies_near_duplicate_candidates(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = df.filter("vec_id = 0")
-    out = similarity.mmr_rerank(df, q, k=2, pool=3, lam=0.5)
+    monkeypatch.setattr(similarity, "TOPK", 2)
+    monkeypatch.setattr(similarity, "MMR_POOL", 3)
+    monkeypatch.setattr(similarity, "MMR_LAMBDA", 0.5)
+    out = similarity.mmr_rerank(df, q)
     got = sorted((r.mmr_rank, r.neighbor_id) for r in out.collect())
     assert got[0] == (1, 1)   # first pick = pure relevance top-1
     assert got[1] == (2, 3)   # second pick diversifies away from 2
 
 
-def test_zero_vector_does_not_poison_semantic_dedup_or_topk(spark):
+def test_zero_vector_does_not_poison_semantic_dedup_or_topk(spark, monkeypatch):
     rows = [
         (0, [0.0, 0.0, 0.0]),          # zero vector, min id in its cell
         (1, [1.0, 0.0, 0.0]),
@@ -253,9 +205,10 @@ def test_zero_vector_does_not_poison_semantic_dedup_or_topk(spark):
         (3, [0.0, 1.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.vec_id: r for r in
-           similarity.semantic_dedup(df, num_cells=1, iters=1,
-                                     threshold=0.95).collect()}
+    monkeypatch.setattr(similarity, "IVF_CELLS", 1)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", 1)
+    monkeypatch.setattr(similarity, "SEMDEDUP_THRESHOLD", 0.95)
+    out = {r.vec_id: r for r in similarity.semantic_dedup(df).collect()}
     # the zero vector must not drop later vectors (NaN would drop ALL)
     assert out[1].kept
     assert not out[2].kept           # real near-dup still detected
@@ -266,7 +219,7 @@ def test_zero_vector_does_not_poison_semantic_dedup_or_topk(spark):
     assert top[0].neighbor_id == 2
 
 
-def test_random_projection_matches_hand_rollout(spark):
+def test_random_projection_matches_hand_rollout(spark, monkeypatch):
     """y_j must equal the index-order fold Σ_i x_i·s(i,j) with the
     documented sign hash — recomputed here in pure Python."""
     import numpy as np
@@ -278,9 +231,11 @@ def test_random_projection_matches_hand_rollout(spark):
         for i in range(5)
     ]
     df = spark.createDataFrame(vecs)
+    monkeypatch.setattr(similarity, "EMB_DIM", 8)
+    monkeypatch.setattr(similarity, "PROJ_K", 4)
     got = {
         r.vec_id: [r[f"y{j:02d}"] for j in range(4)]
-        for r in similarity.random_projection(df, dims=8, k=4).collect()
+        for r in similarity.random_projection(df).collect()
     }
 
     def sign(i, j, k=4):
@@ -317,17 +272,16 @@ def test_random_projection_signs_not_degenerate(spark):
             assert abs(dot) <= 32, (a, b, dot)
 
 
-def test_collect_matrix_cap_guard_trips(spark, sf_dir):
+def test_collect_matrix_cap_guard_trips(spark, sf_dir, monkeypatch):
     """The driver-collect guard must fail fast beyond the cap (scale
     posture: a >cap corpus must be routed to the tiled/LSH paths, never
     silently collected)."""
     import pytest
 
     emb = _emb(spark, sf_dir)
+    monkeypatch.setattr(similarity, "DRIVER_COLLECT_CAP", 10)
     with pytest.raises(ValueError, match="DRIVER_COLLECT_CAP"):
-        similarity._collect_matrix(emb, "vec_id", "embedding", cap=10)
+        similarity._collect_matrix(emb)
     # under-cap path unchanged: all rows come back
-    ids, mat = similarity._collect_matrix(
-        emb.filter("vec_id < 7"), "vec_id", "embedding", cap=10
-    )
+    ids, mat = similarity._collect_matrix(emb.filter("vec_id < 7"))
     assert len(ids) == 7 and mat.shape[0] == 7

@@ -188,29 +188,6 @@ def test_csv_roundtrip_sink(spark, tmp_path):
     }
 
 
-def test_write_compacted_caps_file_size_and_count(spark, sf_dir, tmp_path):
-    """write_compacted: every parquet file ≤ max_records_per_file rows and
-    each partition dir gets few files (not one per shuffle task)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    ev = S.load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    out = str(tmp_path / "compacted")
-    sinks.write_compacted(
-        ev, out, max_records_per_file=1000, partition_cols=("event_type",)
-    )
-    part_dirs = glob.glob(f"{out}/event_type=*")
-    assert len(part_dirs) == 5
-    for d in part_dirs:
-        files = glob.glob(f"{d}/*.parquet")
-        # one task per partition value → ceil(rows/1000) files, not
-        # one file per shuffle task
-        assert 1 <= len(files) <= 3, files
-        for f in files:
-            assert pq.ParquetFile(f).metadata.num_rows <= 1000
-
-
 def test_csv_source_captures_corrupt_rows(spark, tmp_path):
     from udacitydatawarehouseprj_spark.sources import csv_source
 

@@ -118,7 +118,7 @@ def test_fuzzy_match_every_dirty_row_recovers_a_match(spark, sf_dir):
 def test_hard_negatives_labels_differ_and_below_ceiling(spark, sf_dir):
     emb = Q._t(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 10)
-    out = similarity.hard_negative_topk(emb, anchors, k=3, ceiling=0.95)
+    out = similarity.hard_negative_topk(emb, anchors)
     labels = {r.vec_id: r.label for r in emb.select("vec_id", "label").collect()}
     for r in out.collect():
         assert labels[r.query_id] != labels[r.neighbor_id]

@@ -11,10 +11,13 @@ from udacitydatawarehouseprj_spark import queries as Q
 from udacitydatawarehouseprj_spark.operators import similarity
 
 
-def test_pq_train_shapes_and_determinism(spark, sf_dir):
+def test_pq_train_shapes_and_determinism(spark, sf_dir, monkeypatch):
     emb = Q._t(spark, sf_dir, "embeddings")
-    b1 = similarity.pq_train(emb, m=4, ksub=8, iters=2)
-    b2 = similarity.pq_train(emb, m=4, ksub=8, iters=2)
+    monkeypatch.setattr(similarity, "PQ_M", 4)
+    monkeypatch.setattr(similarity, "PQ_KSUB", 8)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", 2)
+    b1 = similarity.pq_train(emb)
+    b2 = similarity.pq_train(emb)
     assert b1.shape == (4, 8, 16)
     import numpy as np
 
@@ -23,12 +26,13 @@ def test_pq_train_shapes_and_determinism(spark, sf_dir):
     assert np.allclose(b1, b2, atol=1e-12)
 
 
-def test_pq_train_rejects_indivisible_dims(spark, sf_dir):
+def test_pq_train_rejects_indivisible_dims(spark, sf_dir, monkeypatch):
     import pytest
 
     emb = Q._t(spark, sf_dir, "embeddings")
+    monkeypatch.setattr(similarity, "PQ_M", 7)
     with pytest.raises(ValueError):
-        similarity.pq_train(emb, m=7)
+        similarity.pq_train(emb)
 
 
 def test_pq_reranked_scores_are_exact(spark, sf_dir):
@@ -37,9 +41,7 @@ def test_pq_reranked_scores_are_exact(spark, sf_dir):
     membership only."""
     emb = Q._t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    approx = similarity.pq_topk_reranked(
-        emb, q, k=5, shortlist=50, m=4, ksub=16, iters=2
-    )
+    approx = similarity.pq_topk_reranked(emb, q)
     # recompute each reported pair's cosine with the fold convention
     pairs = approx.select("query_id", "neighbor_id", "cosine")
     c = emb.select(

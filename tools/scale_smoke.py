@@ -741,100 +741,64 @@ def generate_sf100(spark) -> None:
         os.path.join(OUT100, "embeddings.parquet"))
 
 
+def run_tier(spark, out: str, marker: str, generate_fn, roster: list[str],
+             metric: str, sf: float, warmup: str | None = None,
+             extra: dict | None = None) -> None:
+    """Run one scale tier: generate its data into ``out`` if ``marker`` is
+    missing (or on --regen), run ``warmup`` untimed, time each roster
+    query (or the --only=a,b,c subset) into the noop sink, and print one
+    JSON line. ``extra`` maps unregistered query names to functions that
+    are timed after a full-roster run."""
+    if "--regen" in sys.argv or not os.path.exists(os.path.join(out, marker)):
+        t0 = time.perf_counter()
+        generate_fn(spark)
+        print(f"# generated {out} in {time.perf_counter() - t0:.1f}s",
+              file=sys.stderr)
+    fns = dict(Q.queries())
+    if warmup:
+        fns[warmup](spark, out).write.format("noop").mode("overwrite").save()
+    names = roster
+    for arg in sys.argv[1:]:
+        if arg.startswith("--only="):
+            names = [n for n in arg.split("=", 1)[1].split(",") if n]
+    if names is roster and extra:
+        fns.update(extra)
+        names = [*roster, *extra]
+    timings = {}
+    for name in names:
+        print(f"# sf{sf:g} running {name}", file=sys.stderr, flush=True)
+        t0 = time.perf_counter()
+        fns[name](spark, out).write.format("noop").mode("overwrite").save()
+        timings[name] = round(time.perf_counter() - t0, 3)
+        print(f"# sf{sf:g} {name}: {timings[name]}s",
+              file=sys.stderr, flush=True)
+    print(json.dumps({"metric": metric,
+                      "value": round(sum(timings.values()), 3),
+                      "unit": "sec", "queries": timings, "sf": sf}))
+
+
 def main() -> None:
     spark = S.get_spark("scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     if "--sf100" in sys.argv:
-        if "--regen" in sys.argv or not os.path.exists(
-            os.path.join(OUT100, "documents.parquet")
-        ):
-            t0 = time.perf_counter()
-            generate_sf100(spark)
-            print(f"# generated {OUT100} in {time.perf_counter() - t0:.1f}s",
-                  file=sys.stderr)
-        reg = Q.queries()
-        names = SMOKE100
-        for arg in sys.argv[1:]:
-            if arg.startswith("--only="):
-                names = [n for n in arg.split("=", 1)[1].split(",") if n]
-        timings = {}
-        for name in names:
-            print(f"# sf100 running {name}", file=sys.stderr, flush=True)
-            t0 = time.perf_counter()
-            reg[name](spark, OUT100).write.format("noop").mode(
-                "overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            print(f"# sf100 {name}: {timings[name]}s",
-                  file=sys.stderr, flush=True)
-        print(json.dumps({"metric": "scale_smoke_1000x_total",
-                          "value": round(sum(timings.values()), 3),
-                          "unit": "sec", "queries": timings, "sf": 100.0}))
-        return
-    if "--sf10" in sys.argv:
-        if "--regen" in sys.argv or not os.path.exists(
-            os.path.join(OUT10, "documents.parquet")
-        ):
-            t0 = time.perf_counter()
-            generate_sf10(spark)
-            print(f"# generated {OUT10} in {time.perf_counter() - t0:.1f}s",
-                  file=sys.stderr)
-        reg = Q.queries()
-        names = SMOKE10
-        for arg in sys.argv[1:]:
-            if arg.startswith("--only="):
-                names = [n for n in arg.split("=", 1)[1].split(",") if n]
-        timings = {}
-        for name in names:
-            print(f"# sf10 running {name}", file=sys.stderr, flush=True)
-            t0 = time.perf_counter()
-            reg[name](spark, OUT10).write.format("noop").mode(
-                "overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            print(f"# sf10 {name}: {timings[name]}s",
-                  file=sys.stderr, flush=True)
-        print(json.dumps({"metric": "scale_smoke_100x_total",
-                          "value": round(sum(timings.values()), 3),
-                          "unit": "sec", "queries": timings, "sf": 10.0}))
-        return
-    if "--boilerplate" in sys.argv:
+        run_tier(spark, OUT100, "documents.parquet", generate_sf100,
+                 SMOKE100, "scale_smoke_1000x_total", 100.0)
+    elif "--sf10" in sys.argv:
+        run_tier(spark, OUT10, "documents.parquet", generate_sf10,
+                 SMOKE10, "scale_smoke_100x_total", 10.0)
+    elif "--boilerplate" in sys.argv:
         res = boilerplate_smoke(spark)
         print(json.dumps({"metric": "span_dedup_boilerplate", "unit": "sec",
                           **res}))
-        return
-    if "--regen" in sys.argv or not os.path.exists(
-        os.path.join(OUT, "lineitem.parquet")
-    ):
-        t0 = time.perf_counter()
-        generate(spark)
-        print(f"# generated {OUT} in {time.perf_counter() - t0:.1f}s",
-              file=sys.stderr)
-
-    reg = Q.queries()
-    reg["agg_count_star"](spark, OUT).write.format("noop").mode("overwrite").save()
-    timings = {}
-    names = SMOKE
-    for arg in sys.argv[1:]:
-        if arg.startswith("--only="):  # subset run: --only=a,b,c
-            names = [n for n in arg.split("=", 1)[1].split(",") if n]
-    for name in names:
-        t0 = time.perf_counter()
-        reg[name](spark, OUT).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
-    if names is SMOKE:
-        # production sketch profile (approx only, no Expand) — not
+    else:
+        # the production sketch profile (approx only, no Expand) is not
         # registry-registered (approx values are engine-specific,
         # invariant-checked via profile_table_stats_approx); timed here
         # to document the exact-vs-sketch gap at sf1 in SCALE.md
-        t0 = time.perf_counter()
-        Q.profile_table_stats_approx_only(spark, OUT).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        timings["profile_table_stats_approx_only"] = round(
-            time.perf_counter() - t0, 3
-        )
-    print(json.dumps({"metric": "scale_smoke_10x_total",
-                      "value": round(sum(timings.values()), 3),
-                      "unit": "sec", "queries": timings, "sf": 1.0}))
+        run_tier(spark, OUT, "lineitem.parquet", generate, SMOKE,
+                 "scale_smoke_10x_total", 1.0, warmup="agg_count_star",
+                 extra={"profile_table_stats_approx_only":
+                        Q.profile_table_stats_approx_only})
 
 
 if __name__ == "__main__":

@@ -252,38 +252,6 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id",
     return df.mapInPandas(batches, schema=AUDIO_FRAME_SCHEMA)
 
 
-def extract_byte_features_arrow(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """``mapInArrow`` variant of ``extract_byte_features``: operates on raw
-    ``pyarrow.RecordBatch`` objects — no pandas materialization at all, the
-    lowest-overhead path for binary-heavy batches (pandas boxes each
-    payload as a Python bytes object; Arrow keeps them in one buffer).
-    Same output contract as the pandas version."""
-
-    def batches(it):
-        import pyarrow as pa
-
-        for batch in it:
-            ids = batch.column(batch.schema.get_field_index(id_col))
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            n_bytes, first, checksum = [], [], []
-            for buf in payloads:
-                b = buf.as_py()
-                n_bytes.append(len(b))
-                first.append(b[0] if b else -1)
-                checksum.append(sum(b) % CHECKSUM_MOD if b else None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(first, pa.int32()),
-                    pa.array(checksum, pa.int64()),
-                ],
-                names=["doc_id", "n_bytes", "first_byte", "checksum"],
-            )
-
-    return df.mapInArrow(batches, schema=BYTE_FEATURES_SCHEMA)
-
-
 # --- Executable AUDIO decode path (WAV/PCM, stdlib-only) ----------------
 
 AUDIO_FEATURES_SCHEMA = T.StructType(

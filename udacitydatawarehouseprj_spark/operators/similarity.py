@@ -1,41 +1,87 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Beyond-reference operators (BASELINE.json north star): brute-force cosine
-top-k as the exact baseline, plus two sub-linear scale paths — random
-hyperplane LSH buckets and IVF (coarse-quantizer) probing.
+Beyond-reference operators (BASELINE.json north star). Two families
+share one output contract per task:
 
-Numeric determinism: dot products are computed as a LEFT FOLD over element
-products in index order (``F.aggregate`` over ``zip_with``), which the
-DuckDB oracle mirrors with ``list_reduce`` — identical IEEE operation
-order → bit-identical doubles, so results hash-match without tolerance.
+* **Fold-based Column expressions**: the exact ``cosine_topk`` /
+  ``cosine_pairs`` references (plus ``hard_negative_topk`` and the
+  ``pq_topk_reranked`` rerank). Dot products are a LEFT FOLD over element
+  products in index order (``F.aggregate`` over ``zip_with``), which the
+  DuckDB oracle mirrors with ``list_reduce`` — identical IEEE operation
+  order → bit-identical doubles, so results hash-match without tolerance.
+  Every BLAS path below is tested against these.
+* **BLAS kernels**: Arrow batches + NumPy matrix products via
+  ``mapInPandas`` — the deliberate exception to the no-Python-UDF rule
+  because a matrix product is the right primitive for dense similarity.
+  One kernel per method:
 
-Two implementation families, same contracts:
+  - brute top-k (``cosine_topk_blas``) and IVF top-k (``ivf_topk_kmeans``,
+    ``ivf_batch_serving``) share one chunked selection, ``_chunk_topk``:
+    each corpus batch is scored against ``QUERY_CHUNK`` queries per
+    matmul and every query's partial top-(k+1) is taken with one
+    ``argpartition`` — a local top-k per partition, then one global
+    rank (the REPOSE shape);
+  - LSH (``cosine_topk_lsh_blas``, random-hyperplane tables) and PQ
+    (``pq_topk``, ADC over product-quantization codes) keep per-query
+    candidate masks and share one ``lexsort`` selection tail;
+  - all-pairs cosine ≥ τ: ``cosine_pairs_blas`` (broadcast corpus) and
+    ``cosine_pairs_blas_tiled`` (block-pair tiles, no driver collect).
 
-* **Fold-based Column expressions** (this top half): bit-reproducible
-  against the SQL oracle, pure JVM. The exact `cosine_topk`/`cosine_pairs`
-  anchors plus an expression-only LSH (`lsh_bucket_expr`) whose signatures
-  never touch the driver — the form to keep when query sets exceed
-  broadcast range.
-* **BLAS variants** (bottom half, `*_blas`): Arrow batches + NumPy matrix
-  products via ``mapInPandas`` — 9-12× faster for dense similarity; the
-  deliberate exception to the no-Python-UDF rule because a matrix product
-  is the right primitive, and Arrow keeps it zero-copy.
+Every candidate path ends in ``_rank_topk``: the exact (cosine desc,
+neighbor_id asc) rank and the 6-decimal rounding. BLAS summation order
+differs from the fold by ~1 ulp; after rounding the results agree with
+the exact oracle unless a value sits within ~1e-15 of a rounding or
+threshold boundary.
 
-Scale design (billions of vectors):
-* brute force: corpus-partition-parallel; queries broadcast; per-partition
-  top-k would bound the shuffle (the window rank here is exact and fine for
-  thousands of queries — swap the final rank for a two-phase
-  partial-top-k + merge when |Q|×k exceeds driver comfort).
-* LSH: signatures map-side; multi-table OR-amplification + multi-probe as
-  the recall knobs; bucket join replaces the cross join.
-* IVF: trained coarse centroids (distributed k-means), probe n cells only.
+The operating point of every method is a module constant (below): each
+has a single production setting. Tests that need another value
+monkeypatch the constant; kernels read constants on the driver, so a
+patched value reaches the executors through the closure.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+#: Column names of every embedding relation.
+ID_COL, VEC_COL, LABEL_COL = "vec_id", "embedding", "label"
+#: Embedding dimensionality (PCA / Gram statistics, JL input width).
+EMB_DIM = 64
+#: Neighbors per query of the single-setting top-k paths (LSH, IVF, PQ,
+#: kNN vote, MMR).
+TOPK = 5
+#: Queries scored per matmul in the chunked top-k selection: bounds the
+#: per-batch score matrix (|batch| × QUERY_CHUNK doubles) independent
+#: of |Q|.
+QUERY_CHUNK = 1024
+#: Random-hyperplane LSH: planes per table, OR-amplified tables, seed.
+LSH_PLANES, LSH_TABLES, LSH_SEED = 4, 16, 42
+#: IVF coarse quantizer: k-means cells, probed cells per query; the
+#: serving summary's scanned-fraction bound.
+IVF_CELLS, IVF_PROBES, IVF_FRAC_BOUND = 16, 4, 0.45
+#: Lloyd rounds of every k-means here (IVF cells, SemDeDup, PQ books).
+KMEANS_ITERS = 3
+#: SemDeDup: within-cell cosine at or above which a vector is dropped.
+SEMDEDUP_THRESHOLD = 0.4
+#: int8 quantization scale.
+QUANT_SCALE = 127
+#: MMR: candidate pool per query and the relevance weight λ.
+MMR_POOL, MMR_LAMBDA = 20, 0.7
+#: JL projection output width.
+PROJ_K = 16
+#: Product quantization: subspaces, centroids per subspace, ADC
+#: shortlist reranked exactly.
+PQ_M, PQ_KSUB, PQ_SHORTLIST = 8, 16, 100
+#: Hard-negative mining: negatives per anchor, near-duplicate ceiling.
+HARD_NEG_K, HARD_NEG_CEILING = 3, 0.95
+#: Tile grid side of cosine_pairs_blas_tiled; None = ⌈√(2·parallelism)⌉.
+TILE_BLOCKS: int | None = None
+
+_CANDIDATES = "query_id long, neighbor_id long, cosine double"
 
 
 def as_double(vec: Column | str) -> Column:
@@ -75,7 +121,6 @@ def _rank_topk(cands: DataFrame, k: int) -> DataFrame:
 
 
 def _pairs_with_cosine(corpus: DataFrame, queries: DataFrame,
-                       id_col: str, vec_col: str,
                        extra_corpus_cols: tuple = ()) -> DataFrame:
     """(query, candidate, cosine) via broadcast cross join. The corpus is
     spread to session parallelism first: a single-file corpus would
@@ -87,13 +132,13 @@ def _pairs_with_cosine(corpus: DataFrame, queries: DataFrame,
     """
     from udacitydatawarehouseprj_spark.session import spread
 
-    c = spread(corpus, (id_col,)).select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(vec_col).alias("c_emb"),
+    c = spread(corpus, (ID_COL,)).select(
+        F.col(ID_COL).alias("neighbor_id"),
+        as_double(VEC_COL).alias("c_emb"),
         *[F.col(x) for x in extra_corpus_cols],
     ).withColumn("c_norm", norm(F.col("c_emb")))
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("q_emb")
+        F.col(ID_COL).alias("query_id"), as_double(VEC_COL).alias("q_emb")
     ).withColumn("q_norm", norm(F.col("q_emb")))
     return (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
@@ -106,31 +151,15 @@ def _pairs_with_cosine(corpus: DataFrame, queries: DataFrame,
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact brute-force cosine top-k per query (the ANN baseline).
-
-    Deterministic: rank orders by (cosine desc, neighbor_id) — ties cannot
-    flip the output.
-
-    Scale shape: the |C|×|Q| scored pairs are produced map-side (queries
-    broadcast, fold dot product) and immediately reduced to ≤ |Q|·k
-    candidates *per partition* by a pure row-selection pandas stage — the
-    cosine doubles pass through Arrow untouched, so the fold's
-    bit-exactness vs the SQL oracle is preserved. Only the tiny candidate
-    set (partitions × |Q| × k rows) is shuffled for the final exact rank;
-    the full pair relation never crosses the wire.
-    """
-    pairs = _pairs_with_cosine(corpus, queries, id_col, vec_col)
+def _fold_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k of a fold-scored (query_id, neighbor_id, cosine) pair
+    stream. Each partition is first reduced to ≤ |Q|·k candidates by a
+    pure row-selection pandas stage — the cosine doubles pass through
+    Arrow untouched, so the fold's bit-exactness vs the SQL oracle is
+    preserved, and only that candidate set is shuffled for the final
+    exact rank."""
 
     def partial_topk(it):
-        import pandas as pd
-
         carry = None
         for pdf in it:
             carry = pdf if carry is None else pd.concat([carry, pdf])
@@ -148,21 +177,28 @@ def cosine_topk(
         if carry is not None and len(carry):
             yield carry
 
-    cands = pairs.mapInPandas(partial_topk, schema=_topk_candidates_schema())
-    return _rank_topk(cands, k)
+    return _rank_topk(pairs.mapInPandas(partial_topk, schema=_CANDIDATES), k)
 
 
-def cosine_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Exact brute-force cosine top-k per query (the ANN baseline).
+
+    Deterministic: rank orders by (cosine desc, neighbor_id) — ties cannot
+    flip the output. Scale shape: the |C|×|Q| scored pairs are produced
+    map-side (queries broadcast, fold dot product) and reduced per
+    partition before the rank shuffle (``_fold_topk``); the full pair
+    relation never crosses the wire.
+    """
+    return _fold_topk(_pairs_with_cosine(corpus, queries), k)
+
+
+def cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
     """Embedding near-duplicate pairs: cosine ≥ threshold, id_a < id_b.
 
-    Brute force (exact); the LSH variant below is the corpus-scale path.
+    Brute force (exact); the reference the BLAS pair paths are tested
+    against.
     """
-    e = df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("emb"))
+    e = df.select(F.col(ID_COL).alias("id"), as_double(VEC_COL).alias("emb"))
     e = e.withColumn("nrm", norm(F.col("emb")))
     a, b = e.alias("a"), e.alias("b")
     return (
@@ -180,221 +216,77 @@ def cosine_pairs(
     )
 
 
-def _hyperplane(dim: int, plane: int) -> Column:
-    """Deterministic pseudo-random hyperplane: component j of plane p is a
-    hash-derived value in [-0.5, 0.5). No RNG state — reproducible across
-    runs and engines."""
-    comps = [
-        (
-            F.pmod(F.xxhash64(F.lit(plane), F.lit(j)), F.lit(100000)).cast("double")
-            / F.lit(100000.0)
-            - F.lit(0.5)
-        )
-        for j in range(dim)
-    ]
-    return F.array(*comps)
-
-
-def lsh_bucket_expr(vec: Column, dim: int, num_planes: int = 16) -> Column:
-    """Random-hyperplane signature: bit p = sign(vec · plane_p). A pure
-    column expression — computed map-side, no shuffle."""
-    bits = []
-    for p in range(num_planes):
-        s = dot(vec, _hyperplane(dim, p))
-        bits.append(F.when(s >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    num_planes: int = 8,
-) -> DataFrame:
-    """Approximate cosine top-k: candidates restricted to vectors sharing
-    the query's hyperplane-sign bucket, then exact rerank within bucket.
-
-    Recall < 1 by construction (that is the price of sub-linearity);
-    multi-probe (flipping low-margin bits) raises recall — left as the
-    documented extension. Bucket join replaces the cross join: at corpus
-    scale this is the difference between |Q|·|C| and |Q|·|C|/2^planes.
-    """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("c_emb")
-    ).withColumn("bucket", lsh_bucket_expr(F.col("c_emb"), dim, num_planes))
-    c = c.withColumn("c_norm", norm(F.col("c_emb")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("q_emb")
-    ).withColumn("bucket", lsh_bucket_expr(F.col("q_emb"), dim, num_planes))
-    q = q.withColumn("q_norm", norm(F.col("q_emb")))
-    pairs = (
-        c.join(F.broadcast(q), ["bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            dot(F.col("c_emb"), F.col("q_emb"))
-            / (F.col("c_norm") * F.col("q_norm")),
-        )
-    )
-    return _rank_topk(pairs, k)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-style approximate top-k: deterministic coarse centroids (every
-    (|C|/num_cells)-th vector by id — a real system would k-means), assign
-    each corpus vector to its nearest centroid, probe the ``n_probe``
-    nearest cells per query, exact rerank within probed cells."""
-    cents = (
-        corpus.orderBy(F.col(id_col))
-        .limit(num_cells)
-        .select(
-            F.col(id_col).alias("cell_id"), as_double(vec_col).alias("cent")
-        )
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("c_emb"))
-    c = c.withColumn("c_norm", norm(F.col("c_emb")))
-    # nearest centroid per corpus vector
-    assign = (
-        c.crossJoin(F.broadcast(cents))
-        .withColumn("sim", dot(F.col("c_emb"), F.col("cent")))
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                Window.partitionBy("neighbor_id").orderBy(
-                    F.col("sim").desc(), F.col("cell_id")
-                )
-            ),
-        )
-        .filter(F.col("_r") == 1)
-        .select("neighbor_id", "c_emb", "c_norm", "cell_id")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("q_emb"))
-    q = q.withColumn("q_norm", norm(F.col("q_emb")))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("sim", dot(F.col("q_emb"), F.col("cent")))
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("sim").desc(), F.col("cell_id")
-                )
-            ),
-        )
-        .filter(F.col("_r") <= n_probe)
-        .select("query_id", "q_emb", "q_norm", "cell_id")
-    )
-    pairs = (
-        assign.join(F.broadcast(probes), ["cell_id"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            dot(F.col("c_emb"), F.col("q_emb")) / (F.col("c_norm") * F.col("q_norm")),
-        )
-    )
-    return _rank_topk(pairs, k)
-
-
 # =====================================================================
-# BLAS-vectorized variants (Arrow batches + NumPy matrix products)
+# BLAS kernels (Arrow batches + NumPy matrix products)
 # =====================================================================
-#
-# The fold-based Column expressions above are bit-reproducible against a
-# SQL oracle, but per-pair expression evaluation is the wrong shape for
-# dense similarity at scale: an all-pairs or query-batch similarity is a
-# matrix product, and BLAS beats per-element codegen by orders of
-# magnitude. These variants broadcast one side (queries / the corpus
-# block) and stream the other through mapInPandas — the standard
-# distributed block-matmul layout. At corpus sizes beyond broadcast
-# range, tile both sides (bucket/LSH join) — see cosine_topk_lsh_blas.
-#
-# Numeric note: BLAS summation order differs from the sequential fold by
-# ~1 ulp; outputs are rounded to 6 decimals with half-away-from-zero
-# (floor(x·1e6+0.5), matching Spark/DuckDB ROUND for positives), so
-# results still agree with the exact oracle unless a value sits within
-# ~1e-15 of a rounding/threshold boundary (probability ~0 on real data).
 
 #: Hard cap on rows any BLAS helper may pull to the driver. The
 #: broadcast-side collect is the deliberate small-side accelerator of
 #: this module; beyond ~1M vectors it stops being "small" (at dim=64
 #: float64 that is already ~0.5 GB of driver heap + the same again per
-#: executor broadcast) and the tiled / LSH / IVF paths are the right
-#: tool. The cap fails fast instead of letting a caller OOM the driver
-#: at corpus scale because nobody read the docstring.
+#: executor broadcast) and the tiled path is the right tool. The cap
+#: fails fast instead of letting a caller OOM the driver at corpus scale
+#: because nobody read the docstring.
 DRIVER_COLLECT_CAP = 1_000_000
 
 
-def _collect_matrix(
-    df: DataFrame, id_col: str, vec_col: str, cap: int = DRIVER_COLLECT_CAP
-):
-    """Collect (ids, matrix) to the driver, guarded by ``cap``.
+def _collect_matrix(df: DataFrame):
+    """Collect (ids, matrix) to the driver, guarded by DRIVER_COLLECT_CAP.
 
     The probe is ``limit(cap + 1)`` — never a separate count job, never
     more than cap+1 rows materialized — so an over-cap input raises
     before the driver heap is at risk. Raising (rather than silently
-    falling back) keeps the exact/approx split explicit: callers that
-    can exceed the cap must choose cosine_pairs_blas_tiled /
-    cosine_topk_lsh_blas / ivf_topk themselves.
+    falling back) keeps the exact/approx split explicit.
     """
-    import numpy as np
-
-    pdf = df.select(id_col, vec_col).limit(cap + 1).toPandas()
+    cap = DRIVER_COLLECT_CAP
+    pdf = df.select(ID_COL, VEC_COL).limit(cap + 1).toPandas()
     if len(pdf) > cap:
         raise ValueError(
             f"_collect_matrix: input exceeds DRIVER_COLLECT_CAP={cap} rows; "
             "a driver-side collect at this size would OOM at corpus scale. "
-            "Use the no-collect scale paths instead: cosine_pairs_blas_tiled "
-            "(exact all-pairs), cosine_topk_lsh_blas / ivf_topk (ANN), or "
-            "pass an explicit higher cap if the driver is provisioned for it."
+            "Use the no-collect scale path instead (cosine_pairs_blas_tiled "
+            "for exact all-pairs), or raise DRIVER_COLLECT_CAP if the "
+            "driver is provisioned for it."
         )
-    ids = pdf[id_col].to_numpy(dtype="int64")
-    mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-    return ids, mat
+    return pdf[ID_COL].to_numpy(dtype="int64"), _matrix(pdf[VEC_COL])
+
+
+def _matrix(vectors: pd.Series) -> np.ndarray:
+    """A column of vectors as one float64 matrix, a row per vector."""
+    return np.vstack(vectors.to_numpy()).astype("float64")
+
+
+def _norms(x: np.ndarray) -> np.ndarray:
+    """Row L2 norms with an eps guard: a zero vector would give a NaN
+    cosine, and Spark's ORDER BY DESC sorts NaN ABOVE every real value —
+    the zero vector would silently become everyone's rank 1."""
+    return np.maximum(np.sqrt((x * x).sum(axis=1)), 1e-12)
+
+
+def _cell_dist(x: np.ndarray, cents: np.ndarray, c_norm2: np.ndarray):
+    """Squared euclidean distance of each row of x to each centroid, less
+    the row's own ‖x‖² (constant per row, so argmin / argsort over cells
+    are unchanged)."""
+    return c_norm2[None, :] - 2.0 * (x @ cents.T)
 
 
 def _round6(x):
-    import numpy as np
-
     return np.floor(x * 1e6 + 0.5) / 1e6
 
 
-def cosine_pairs_blas(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs_blas(df: DataFrame, threshold: float) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold via block matmul: the corpus
     matrix is broadcast, each Arrow batch computes batch×corpusᵀ with
     BLAS. Same output contract as cosine_pairs."""
-    import numpy as np
-
-    spark = df.sparkSession
-    ids, mat = _collect_matrix(df, id_col, vec_col)
+    ids, mat = _collect_matrix(df)
     norms = np.sqrt((mat * mat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((ids, mat, norms))
+    bc = df.sparkSession.sparkContext.broadcast((ids, mat, norms))
 
     def block(it):
-        import pandas as pd
-
         bids, bmat, bnorms = bc.value
         for pdf in it:
-            xid = pdf[id_col].to_numpy(dtype="int64")
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+            xid = pdf[ID_COL].to_numpy(dtype="int64")
+            x = _matrix(pdf[VEC_COL])
             xn = np.sqrt((x * x).sum(axis=1))
             sims = (x @ bmat.T) / np.outer(xn, bnorms)
             rows_a, rows_b, rows_c = [], [], []
@@ -416,13 +308,7 @@ def cosine_pairs_blas(
     return df.mapInPandas(block, schema="id_a long, id_b long, cosine double")
 
 
-def cosine_pairs_blas_tiled(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_blocks: int | None = None,
-) -> DataFrame:
+def cosine_pairs_blas_tiled(df: DataFrame, threshold: float) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold with NO driver-side collect —
     the corpus-scale form of ``cosine_pairs_blas``.
 
@@ -432,19 +318,17 @@ def cosine_pairs_blas_tiled(
     pairs with one BLAS matmul inside ``applyInPandas``. Every unordered
     pair of blocks meets in exactly one tile, so output pairs are emitted
     exactly once. Total shuffle is N·B rows and a task holds at most two
-    blocks (≈2N/B vectors) — pick B so a block fits comfortably in executor
-    memory; default B ≈ √(2·parallelism) keeps every core busy. The driver
-    never sees a vector. Same output contract (and 6-decimal rounding) as
-    cosine_pairs / cosine_pairs_blas."""
-    import numpy as np
-
-    if num_blocks is None:
+    blocks (≈2N/B vectors); B = TILE_BLOCKS, by default ≈ √(2·parallelism)
+    so every core is busy. The driver never sees a vector. Same output
+    contract (and 6-decimal rounding) as cosine_pairs /
+    cosine_pairs_blas."""
+    B = TILE_BLOCKS
+    if B is None:
         par = df.sparkSession.sparkContext.defaultParallelism
-        num_blocks = max(2, int(np.ceil(np.sqrt(2.0 * par))))
-    B = num_blocks
+        B = max(2, int(np.ceil(np.sqrt(2.0 * par))))
 
     e = df.select(
-        F.col(id_col).alias("id"), as_double(vec_col).alias("emb")
+        F.col(ID_COL).alias("id"), as_double(VEC_COL).alias("emb")
     ).withColumn("block", F.pmod(F.xxhash64(F.col("id")), F.lit(B)).cast("int"))
     rep = e.select(
         "id", "emb", "block",
@@ -461,8 +345,6 @@ def cosine_pairs_blas_tiled(
     tiles = left.unionByName(right)
 
     def tile(key, pdf):
-        import pandas as pd
-
         bi, bj = int(key[0]), int(key[1])
         empty = pd.DataFrame(
             {
@@ -478,7 +360,7 @@ def cosine_pairs_blas_tiled(
             ids = pdf["id"].to_numpy("int64")
             if len(ids) < 2:
                 return empty
-            m = np.vstack(pdf["emb"].to_numpy()).astype("float64")
+            m = _matrix(pdf["emb"])
             nrm = np.sqrt((m * m).sum(axis=1))
             sims = (m @ m.T) / np.outer(nrm, nrm)
             ia, ib = np.triu_indices(len(ids), k=1)
@@ -499,8 +381,8 @@ def cosine_pairs_blas_tiled(
             return empty
         lid = lhs["id"].to_numpy("int64")
         rid = rhs["id"].to_numpy("int64")
-        lm = np.vstack(lhs["emb"].to_numpy()).astype("float64")
-        rm = np.vstack(rhs["emb"].to_numpy()).astype("float64")
+        lm = _matrix(lhs["emb"])
+        rm = _matrix(rhs["emb"])
         ln = np.sqrt((lm * lm).sum(axis=1))
         rn = np.sqrt((rm * rm).sum(axis=1))
         sims = (lm @ rm.T) / np.outer(ln, rn)
@@ -518,187 +400,164 @@ def cosine_pairs_blas_tiled(
     )
 
 
-def _topk_candidates_schema():
-    return "query_id long, neighbor_id long, cosine double"
+def _chunk_topk(cid, x, xn, qids, qmat, qnorms, take: int, chunk: int):
+    """Every query's top-``take`` rows of the corpus block ``x`` (ids
+    ``cid``, norms ``xn``), ``chunk`` queries per matmul: the score
+    matrix is |block| × chunk doubles, and each chunk's selection is ONE
+    argpartition along the corpus axis — no per-query Python work.
+    argpartition selects by value only; the deterministic (cosine desc,
+    neighbor_id asc) tie-break is applied at the global rank. Returns a
+    list of candidate frames."""
+    out = []
+    for lo in range(0, len(qids), chunk):
+        hi = lo + chunk
+        S = (x @ qmat[lo:hi].T) / np.outer(xn, qnorms[lo:hi])
+        idx = np.argpartition(-S, take - 1, axis=0)[:take]
+        cols = np.broadcast_to(np.arange(S.shape[1])[None, :], idx.shape)
+        out.append(pd.DataFrame({
+            "query_id": qids[lo:hi][cols.ravel()],
+            "neighbor_id": cid[idx.ravel()],
+            "cosine": np.take_along_axis(S, idx, axis=0).ravel(),
+        }))
+    return out
+
+
+def _rank_chunk_candidates(cands: DataFrame, k: int) -> DataFrame:
+    """Global rank of ``_chunk_topk`` candidates. Each (query, block)
+    emitted k+1 rows: the +1 absorbs the query's own self-match (cosine
+    1.0, always in the partial top set when present), which is dropped
+    BEFORE the rank so a self-row never displaces a true neighbor."""
+    return _rank_topk(
+        cands.filter(F.col("neighbor_id") != F.col("query_id")), k
+    )
 
 
 def cosine_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
-    """Exact cosine top-k via block matmul: queries broadcast, corpus
-    streamed; per-partition top-k candidates, tiny global rerank."""
-    import numpy as np
+    """Exact brute-force cosine top-k via block matmul — same contract as
+    cosine_topk, for any batch size from 10 queries to 10⁴.
 
-    spark = corpus.sparkSession
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    qnorms = np.sqrt((qmat * qmat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorms))
+    Queries broadcast once (|Q|×64 doubles ≈ 5 MB at 10⁴), corpus
+    streamed through Arrow; each batch takes every query's partial
+    top-(k+1) with the chunked selection (``_chunk_topk``), and the
+    shuffle is ≤ (k+1)·|Q| rows per corpus batch, never the |C|×|Q|
+    pair relation.
+    """
+    qids, qmat = _collect_matrix(queries)
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (qids, qmat, _norms(qmat))
+    )
+    chunk = QUERY_CHUNK
 
     def block(it):
-        import pandas as pd
-
         bqids, bqmat, bqnorms = bc.value
         for pdf in it:
-            cid = pdf[id_col].to_numpy(dtype="int64")
-            c = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            # eps guard: a zero corpus vector would give NaN cosine, and
-            # Spark's ORDER BY DESC sorts NaN ABOVE every real value —
-            # the zero vector would silently become everyone's rank 1
-            cn = np.maximum(np.sqrt((c * c).sum(axis=1)), 1e-12)
-            sims = (bqmat @ c.T) / np.outer(bqnorms, cn)  # |Q| x |batch|
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(bqids)):
-                s = sims[qi]
-                valid = cid != bqids[qi]
-                order = np.lexsort((cid[valid], -s[valid]))[:k]
-                out_q.append(np.full(len(order), bqids[qi]))
-                out_n.append(cid[valid][order])
-                out_c.append(s[valid][order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
+            cid = pdf[ID_COL].to_numpy(dtype="int64")
+            c = _matrix(pdf[VEC_COL])
+            out = _chunk_topk(cid, c, _norms(c), bqids, bqmat, bqnorms,
+                              min(k + 1, len(cid)), chunk)
+            if out:
+                yield pd.concat(out)
 
-    cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    return _rank_topk(cands, k)
+    cands = corpus.mapInPandas(block, schema=_CANDIDATES)
+    return _rank_chunk_candidates(cands, k)
 
 
-def cosine_topk_lsh_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    num_tables: int = 1,
-    probes: int = 1,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane buckets computed in NumPy
-    (deterministic seed), candidates limited to vectors sharing any of the
-    query's probed buckets in ≥1 hash table, then exact rerank.
+def _lexsort_topk(qid, cid, s, k: int):
+    """One query's k best (cosine desc, neighbor_id asc) candidates out of
+    its masked scores ``s`` over ids ``cid``, as (query, neighbor, cosine)
+    arrays."""
+    order = np.lexsort((cid, -s))[:k]
+    return np.full(len(order), qid), cid[order], s[order]
 
-    Two recall knobs, both deterministic:
-    * ``num_tables`` — OR-amplification: recall per neighbor at angle θ is
-      1-(1-(1-θ/π)^planes)^tables; more tables → more candidates scanned.
-    * ``probes`` — multi-probe: also search the buckets reached by
-      flipping the query's lowest-margin sign bits (the boundaries a true
-      neighbor most plausibly crossed) — recall per table rises without
-      extra signatures or tables.
-    With a single unprobed 8-plane table only genuinely close neighbors
-    survive — on uniformly random vectors (no cluster structure, best
-    cosines ≈0.3) recall is necessarily poor, the documented ANN tradeoff.
-    At corpus scale the bucket comparison becomes a bucket-partitioned
-    join instead of a broadcast mask."""
-    import numpy as np
 
-    spark = corpus.sparkSession
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
+def _candidate_frame(picks) -> pd.DataFrame:
+    q, n, c = zip(*picks)
+    return pd.DataFrame({
+        "query_id": np.concatenate(q),
+        "neighbor_id": np.concatenate(n),
+        "cosine": np.concatenate(c),
+    })
+
+
+def _lsh_signatures(x: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Bucket of every row in every table: bit p = sign(x · plane_p)."""
+    bits = 1 << np.arange(planes.shape[1])
+    return np.stack(
+        [((x @ planes[t].T) >= 0) @ bits for t in range(len(planes))],
+        axis=1,
+    )  # |x| x tables
+
+
+def cosine_topk_lsh_blas(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-TOPK: random-hyperplane buckets computed in NumPy
+    (deterministic seed), candidates limited to vectors sharing the
+    query's bucket in ≥1 of LSH_TABLES hash tables, then exact rerank.
+
+    OR-amplification is the recall knob: recall per neighbor at angle θ
+    is 1-(1-(1-θ/π)^planes)^tables; more tables → more candidates
+    scanned. On uniformly random vectors (no cluster structure, best
+    cosines ≈0.3) a single table's recall is near chance, the documented
+    ANN tradeoff. At corpus scale the bucket comparison becomes a
+    bucket-partitioned join instead of a broadcast mask."""
+    k = TOPK
+    qids, qmat = _collect_matrix(queries)
     qnorms = np.sqrt((qmat * qmat).sum(axis=1))
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((num_tables, num_planes, qmat.shape[1]))
-    bits = 1 << np.arange(num_planes)
-    # buckets per (query, table): the query's own bucket plus multi-probe
-    # variants — flipping the lowest-|margin| sign bits probes the
-    # neighboring buckets a near-boundary vector most likely fell into,
-    # buying recall without more tables. probes=1 → classic single-bucket.
-    qbucket_sets = []
-    for t in range(num_tables):
-        proj = qmat @ planes[t].T  # |Q| x planes
-        base = (proj >= 0) @ bits
-        per_table = [base]
-        margin_order = np.argsort(np.abs(proj), axis=1)
-        for p in range(probes - 1):
-            flip_bit = margin_order[:, p]
-            per_table.append(base ^ (1 << flip_bit))
-        qbucket_sets.append(np.stack(per_table, axis=1))  # |Q| x probes
-    qbuckets = np.stack(qbucket_sets, axis=1)  # |Q| x T x probes
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorms, qbuckets, planes))
+    rng = np.random.RandomState(LSH_SEED)
+    planes = rng.standard_normal((LSH_TABLES, LSH_PLANES, qmat.shape[1]))
+    qbuckets = _lsh_signatures(qmat, planes)
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (qids, qmat, qnorms, qbuckets, planes)
+    )
 
     def block(it):
-        import pandas as pd
-
         bqids, bqmat, bqnorms, bqb, bplanes = bc.value
-        n_tables, n_planes = bplanes.shape[0], bplanes.shape[1]
-        tbits = 1 << np.arange(n_planes)
         for pdf in it:
-            cid = pdf[id_col].to_numpy(dtype="int64")
-            c = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+            cid = pdf[ID_COL].to_numpy(dtype="int64")
+            c = _matrix(pdf[VEC_COL])
             cn = np.sqrt((c * c).sum(axis=1))
-            cb = np.stack(
-                [((c @ bplanes[t].T) >= 0) @ tbits for t in range(n_tables)],
-                axis=1,
-            )  # |batch| x T
-            out_q, out_n, out_c = [], [], []
+            cb = _lsh_signatures(c, bplanes)
+            picks = []
             for qi in range(len(bqids)):
-                # candidate iff the corpus bucket matches ANY probed bucket
-                # of the query in the corresponding table
-                mask = (cb[:, :, None] == bqb[qi][None, :, :]).any(
-                    axis=(1, 2)
-                ) & (cid != bqids[qi])
+                # candidate iff the corpus bucket matches the query's
+                # bucket in ANY table
+                mask = (cb == bqb[qi][None, :]).any(axis=1) & (
+                    cid != bqids[qi]
+                )
                 if not mask.any():
                     continue
                 s = (c[mask] @ bqmat[qi]) / (cn[mask] * bqnorms[qi])
-                order = np.lexsort((cid[mask], -s))[:k]
-                out_q.append(np.full(len(order), bqids[qi]))
-                out_n.append(cid[mask][order])
-                out_c.append(s[order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
+                picks.append(_lexsort_topk(bqids[qi], cid[mask], s, k))
+            if picks:
+                yield _candidate_frame(picks)
 
-    cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
+    cands = corpus.mapInPandas(block, schema=_CANDIDATES)
     return _rank_topk(cands, k)
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Deterministic distributed k-means (Lloyd's): seed with the first k
-    vectors by id, then iterate assign (broadcast centroids, BLAS argmax in
-    mapInPandas) → recompute means (one groupBy per iteration).
+def kmeans_centroids(df: DataFrame) -> np.ndarray:
+    """Deterministic distributed k-means (Lloyd's) with IVF_CELLS cells:
+    seed with the first cells' worth of vectors by id, then KMEANS_ITERS
+    rounds of assign (broadcast centroids, BLAS argmin in mapInPandas) →
+    recompute means (one groupBy per round).
 
     The iterative-algorithm shape SQL can't express: driver loop over
-    Spark jobs, state = the k×d centroid matrix (tiny, broadcast each
-    round). Returns (ids 0..k-1, centroid matrix) as NumPy.
+    Spark jobs, state = the cells×d centroid matrix (tiny, broadcast each
+    round). Returns the centroid matrix, row i = cell i.
     """
-    import numpy as np
-
     spark = df.sparkSession
-    _, mat0 = _collect_matrix(
-        df.orderBy(F.col(id_col)).limit(k), id_col, vec_col
-    )
-    cents = mat0.copy()
+    _, cents = _collect_matrix(df.orderBy(F.col(ID_COL)).limit(IVF_CELLS))
 
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         bc = spark.sparkContext.broadcast(cents)
 
         def assign(it):
-            import pandas as pd
-
             c = bc.value
             c_norm2 = (c * c).sum(axis=1)
             for pdf in it:
-                x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-                # nearest centroid by euclidean distance: argmin ||x-c||²
-                d2 = c_norm2[None, :] - 2.0 * (x @ c.T)
-                cell = d2.argmin(axis=1).astype("int32")
+                x = _matrix(pdf[VEC_COL])
+                cell = _cell_dist(x, c, c_norm2).argmin(axis=1).astype("int32")
                 out = {"cell_id": cell}
                 for j in range(x.shape[1]):
                     out[f"x{j}"] = x[:, j]
@@ -717,82 +576,73 @@ def kmeans_centroids(
             new[r.cell_id] = [r[f"x{j}"] for j in range(dim)]
         cents = new
 
-    return np.arange(k), cents
+    return cents
 
 
-def ivf_topk_kmeans(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_cells: int = 16,
-    n_probe: int = 4,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF with trained (k-means) coarse centroids: assign corpus vectors
-    to their nearest trained centroid, probe the n_probe nearest cells per
-    query, exact BLAS rerank within probed cells. Strictly better cell
-    balance than the fixed-seed variant (ivf_topk); both keep the same
-    output contract."""
-    import numpy as np
-
-    spark = corpus.sparkSession
-    _, cents = kmeans_centroids(corpus, k=num_cells, iters=iters,
-                                id_col=id_col, vec_col=vec_col)
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    qnorms = np.sqrt((qmat * qmat).sum(axis=1))
+def _ivf_index(corpus: DataFrame, queries: DataFrame):
+    """Train the IVF coarse quantizer on the corpus and pick each query's
+    IVF_PROBES nearest cells (euclidean cells, cosine rerank). Returns
+    (cents, c_norm2, qids, qmat, qprobes)."""
+    cents = kmeans_centroids(corpus)
     c_norm2 = (cents * cents).sum(axis=1)
-    # probe list per query (euclidean cells, cosine rerank)
-    qd2 = c_norm2[None, :] - 2.0 * (qmat @ cents.T)
-    qprobes = np.argsort(qd2, axis=1)[:, :n_probe]
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorms, qprobes, cents, c_norm2))
+    qids, qmat = _collect_matrix(queries)
+    qprobes = np.argsort(_cell_dist(qmat, cents, c_norm2), axis=1)[
+        :, :IVF_PROBES
+    ]
+    return cents, c_norm2, qids, qmat, qprobes
 
-    def block(it):
-        import pandas as pd
 
-        bqids, bqmat, bqnorms, bqp, bc_cents, bc_n2 = bc.value
+def _ivf_rerank(corpus: DataFrame, cents, c_norm2, qids, qmat, qprobes,
+                k: int) -> DataFrame:
+    """Exact top-k inside each query's probed cells, cell-grouped: each
+    corpus Arrow batch runs the chunked selection once per cell against
+    exactly the queries probing that cell — never a per-query Python
+    loop and never a materialized candidate-pair shuffle (≤ (k+1) rows
+    per query·cell·batch cross the wire)."""
+    probers = [
+        np.where((qprobes == c).any(axis=1))[0] for c in range(len(cents))
+    ]
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (qids, qmat, _norms(qmat), probers, cents, c_norm2)
+    )
+    chunk = QUERY_CHUNK
+
+    def serve(it):
+        bqids, bqmat, bqnorms, bprob, cc, cn2 = bc.value
         for pdf in it:
-            cid = pdf[id_col].to_numpy(dtype="int64")
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            xn = np.sqrt((x * x).sum(axis=1))
-            cell = (bc_n2[None, :] - 2.0 * (x @ bc_cents.T)).argmin(axis=1)
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(bqids)):
-                mask = np.isin(cell, bqp[qi]) & (cid != bqids[qi])
-                if not mask.any():
-                    continue
-                s = (x[mask] @ bqmat[qi]) / (xn[mask] * bqnorms[qi])
-                order = np.lexsort((cid[mask], -s))[:k]
-                out_q.append(np.full(len(order), bqids[qi]))
-                out_n.append(cid[mask][order])
-                out_c.append(s[order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
+            cid = pdf[ID_COL].to_numpy(dtype="int64")
+            x = _matrix(pdf[VEC_COL])
+            xn = _norms(x)
+            cell = _cell_dist(x, cc, cn2).argmin(axis=1)
+            out = []
+            for c, qs in enumerate(bprob):
+                rows = np.where(cell == c)[0]
+                if len(qs) and len(rows):
+                    out += _chunk_topk(
+                        cid[rows], x[rows], xn[rows], bqids[qs], bqmat[qs],
+                        bqnorms[qs], min(k + 1, len(rows)), chunk,
+                    )
+            if out:
+                yield pd.concat(out)
 
-    cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    return _rank_topk(cands, k)
+    cands = corpus.mapInPandas(serve, schema=_CANDIDATES)
+    return _rank_chunk_candidates(cands, k)
 
 
-def semantic_dedup(
-    df: DataFrame,
-    num_cells: int = 16,
-    iters: int = 3,
-    threshold: float = 0.85,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_topk_kmeans(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF with trained (k-means) coarse centroids: IVF_CELLS cells,
+    assign corpus vectors to their nearest trained centroid, probe the
+    IVF_PROBES nearest cells per query, exact BLAS rerank of the top-TOPK
+    within probed cells (``_ivf_rerank``)."""
+    return _ivf_rerank(corpus, *_ivf_index(corpus, queries), TOPK)
+
+
+def semantic_dedup(df: DataFrame) -> DataFrame:
     """SemDeDup — semantic (embedding-space) deduplication, per the
     public recipe: k-means-cluster the corpus, then WITHIN each cluster
     greedily keep minimum-id representatives — a vector is dropped iff
     its cosine similarity to an already-kept smaller-id vector in the
-    same cluster is ≥ ``threshold``. The kept set is therefore an
+    same cluster is ≥ SEMDEDUP_THRESHOLD. The kept set is therefore an
     independent set of the ≥τ similarity graph restricted to clusters:
     no two kept vectors in a cluster are near-duplicates, and every
     dropped vector has a kept witness (the invariants
@@ -802,40 +652,36 @@ def semantic_dedup(
     Scale shape: clustering bounds the pairwise work — the greedy pass
     runs per cell in ``applyInPandas`` (one shuffle on cell_id), each
     cell's cost is |cell|·|kept(cell)| BLAS dot products, and cells are
-    sized by num_cells (thousands at 100 TB so a cell fits an executor).
+    sized by IVF_CELLS (thousands at 100 TB so a cell fits an executor).
     Returns (vec_id, cell_id, kept, max_sim_to_kept) — max_sim is -1.0
     for the first kept vector of a cell (no earlier kept to compare).
     """
-    import numpy as np
-    import pandas as pd
-
-    _, cents = kmeans_centroids(
-        df, k=num_cells, iters=iters, id_col=id_col, vec_col=vec_col
-    )
+    cents = kmeans_centroids(df)
     c_norm2 = (cents * cents).sum(axis=1)
     bc = df.sparkSession.sparkContext.broadcast((cents, c_norm2))
+    threshold = SEMDEDUP_THRESHOLD
 
     def assign(it):
         c, n2 = bc.value
         for pdf in it:
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            cell = (n2[None, :] - 2.0 * (x @ c.T)).argmin(axis=1)
+            x = _matrix(pdf[VEC_COL])
+            cell = _cell_dist(x, c, n2).argmin(axis=1)
             out = pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(dtype="int64"),
+                    ID_COL: pdf[ID_COL].to_numpy(dtype="int64"),
                     "cell_id": cell.astype("int32"),
                 }
             )
-            out[vec_col] = pdf[vec_col].to_numpy()
+            out[VEC_COL] = pdf[VEC_COL].to_numpy()
             yield out
 
     assigned = df.mapInPandas(
-        assign, schema=f"{id_col} long, cell_id int, {vec_col} array<float>"
+        assign, schema=f"{ID_COL} long, cell_id int, {VEC_COL} array<float>"
     )
 
     def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+        pdf = pdf.sort_values(ID_COL).reset_index(drop=True)
+        x = _matrix(pdf[VEC_COL])
         # eps guard: a zero vector would otherwise normalize to NaN and
         # poison every later max-similarity in its cell (dropping all
         # subsequent vectors); with the guard it is ~orthogonal to
@@ -855,7 +701,7 @@ def semantic_dedup(
                 kept_rows.append(i)
         return pd.DataFrame(
             {
-                id_col: pdf[id_col],
+                ID_COL: pdf[ID_COL],
                 "cell_id": pdf["cell_id"],
                 "kept": kept_flags,
                 "max_sim_to_kept": np.round(max_sims, 6),
@@ -864,46 +710,34 @@ def semantic_dedup(
 
     return assigned.groupBy("cell_id").applyInPandas(
         dedup_cell,
-        f"{id_col} long, cell_id int, kept boolean, max_sim_to_kept double",
+        f"{ID_COL} long, cell_id int, kept boolean, max_sim_to_kept double",
     )
 
 
-def normalize_quantize(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 127,
-) -> DataFrame:
+def normalize_quantize(df: DataFrame) -> DataFrame:
     """L2-normalize then int8-quantize an embedding column.
 
     The standard storage compression before ANN indexing (4× smaller
     than float32, 8× smaller than the double intermediates). Pure
     Column-expression transform — per-row map, zero shuffles, stays in
-    whole-stage codegen. Quantization is ``floor(x/‖v‖ · scale)``:
+    whole-stage codegen. Quantization is ``floor(x/‖v‖ · QUANT_SCALE)``:
     floor (not round) because IEEE mul/div/floor are correctly rounded
     and therefore bit-identical across engines, while round-half rules
     on arbitrary doubles are not. Norm is the index-order left fold
     (module docstring) for the same reason.
     """
-    v = as_double(vec_col)
+    v = as_double(VEC_COL)
     nrm = norm(v)
-    quant = F.transform(v, lambda x: F.floor(x / nrm * scale).cast("int"))
+    quant = F.transform(v, lambda x: F.floor(x / nrm * QUANT_SCALE).cast("int"))
     return df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         nrm.alias("l2_norm"),
         quant.alias("q_vec"),
     )
 
 
-def knn_label_vote(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """k-nearest-neighbor majority-vote classification.
+def knn_label_vote(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """k-nearest-neighbor (k = TOPK) majority-vote classification.
 
     Composes the exact cosine top-k (corpus-parallel, queries broadcast,
     per-partition candidate pruning — see ``cosine_topk``) with a vote:
@@ -912,63 +746,52 @@ def knn_label_vote(
     the tie-break makes the prediction deterministic. The vote is a
     ≤ |Q|·k-row aggregation: negligible next to the scoring pass.
     """
-    neighbors = cosine_topk(corpus, queries, k, id_col, vec_col)
+    neighbors = cosine_topk(corpus, queries, TOPK)
     labels = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(label_col)
+        F.col(ID_COL).alias("neighbor_id"), F.col(LABEL_COL)
     )
     votes = (
         neighbors.join(F.broadcast(labels), "neighbor_id")
-        .groupBy("query_id", label_col)
+        .groupBy("query_id", LABEL_COL)
         .agg(F.count("*").alias("n_votes"))
     )
     return votes.groupBy("query_id").agg(
         F.max_by(
-            label_col,
-            F.struct(F.col("n_votes"), (-F.col(label_col)).alias("_neg")),
+            LABEL_COL,
+            F.struct(F.col("n_votes"), (-F.col(LABEL_COL)).alias("_neg")),
         ).alias("predicted_label"),
         F.max(
-            F.struct(F.col("n_votes"), (-F.col(label_col)).alias("_neg"))
+            F.struct(F.col("n_votes"), (-F.col(LABEL_COL)).alias("_neg"))
         )["n_votes"].alias("winning_votes"),
     )
 
 
-def mmr_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    pool: int = 20,
-    lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def mmr_rerank(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Maximal Marginal Relevance rerank — diversified top-k retrieval
-    (the RAG-retrieval staple): fetch a ``pool``-sized exact-cosine
-    candidate set per query (BLAS path), then greedily select k
-    candidates maximizing ``lam·sim(q,d) − (1−lam)·max_{s∈selected}
-    sim(d,s)``; ties break on smaller id. The greedy loop is inherently
-    sequential per query but the pool is tiny (≤ pool rows), so it runs
-    in ``applyInPandas`` per query_id — one shuffle of N_q·pool rows
+    (the RAG-retrieval staple): fetch a MMR_POOL-sized exact-cosine
+    candidate set per query (``cosine_topk_blas``), then greedily select
+    TOPK candidates maximizing ``λ·sim(q,d) − (1−λ)·max_{s∈selected}
+    sim(d,s)`` with λ = MMR_LAMBDA; ties break on smaller id. The greedy
+    loop is inherently sequential per query but the pool is tiny, so it
+    runs in ``applyInPandas`` per query_id — one shuffle of N_q·pool rows
     regardless of corpus size; the corpus-scale work stays in the
     candidate retrieval. The FIRST selection is always the top-cosine
     candidate (nothing is selected yet), which is the SQL-checkable
     anchor ``mmr_rerank_check`` exploits.
     """
-    import numpy as np
-    import pandas as pd
-
-    cands = cosine_topk_blas(corpus, queries, k=pool, id_col=id_col,
-                             vec_col=vec_col)
+    k, lam = TOPK, MMR_LAMBDA
+    cands = cosine_topk_blas(corpus, queries, k=MMR_POOL)
     with_vec = cands.join(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_nv"),
+            F.col(ID_COL).alias("neighbor_id"),
+            F.col(VEC_COL).alias("_nv"),
         ),
         "neighbor_id",
     )
 
     def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["rank"]).reset_index(drop=True)
-        x = np.vstack(pdf["_nv"].to_numpy()).astype("float64")
+        x = _matrix(pdf["_nv"])
         # eps guard against zero-vector NaN (see semantic_dedup)
         x /= np.maximum(np.sqrt((x * x).sum(axis=1, keepdims=True)), 1e-12)
         rel = pdf["cosine"].to_numpy(dtype="float64")
@@ -1029,21 +852,16 @@ def _proj_sign_sql(i_expr: str, j: int, k: int) -> str:
     return f"(CASE WHEN {h2} % 65536 >= 32768 THEN -1 ELSE 1 END)"
 
 
-def random_projection(
-    df: DataFrame,
-    dims: int = 64,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Johnson–Lindenstrauss dimensionality reduction with a DETERMINISTIC
-    dense ±1 projection (Achlioptas 2003: ±1 entries satisfy the JL
-    distortion bound with the same constants as Gaussian): y_j = Σ_i
-    x_i · s(i, j), where s is a pure hash of (i, j) — no random state, no
-    projection matrix to store or ship: every executor re-derives any
-    entry from two integers, so the transform is reproducible across
-    runs, engines, and cluster topologies (the property that matters
-    when re-projecting a growing 100 TB corpus incrementally).
+def random_projection(df: DataFrame) -> DataFrame:
+    """Johnson–Lindenstrauss dimensionality reduction (EMB_DIM → PROJ_K)
+    with a DETERMINISTIC dense ±1 projection (Achlioptas 2003: ±1 entries
+    satisfy the JL distortion bound with the same constants as
+    Gaussian): y_j = Σ_i x_i · s(i, j), where s is a pure hash of (i, j)
+    — no random state, no projection matrix to store or ship: every
+    executor re-derives any entry from two integers, so the transform is
+    reproducible across runs, engines, and cluster topologies (the
+    property that matters when re-projecting a growing 100 TB corpus
+    incrementally).
 
     Implementation: k fold expressions over the vector (F.aggregate in
     index order, the engine's exact-dot-product convention) — a pure
@@ -1054,11 +872,12 @@ def random_projection(
     Output: (id, y00..y{k-1}) with each y rounded to 6dp (per-row IEEE
     determinism per SURVEY §5.1).
     """
-    cols = [F.col(id_col)]
+    dims, k = EMB_DIM, PROJ_K
+    cols = [F.col(ID_COL)]
     for j in range(k):
         fold = F.expr(
             f"aggregate(sequence(1, {dims}), CAST(0.0 AS DOUBLE),"
-            f" (acc, i) -> acc + CAST({vec_col}[i-1] AS DOUBLE)"
+            f" (acc, i) -> acc + CAST({VEC_COL}[i-1] AS DOUBLE)"
             f" * {_proj_sign_sql('i-1', j, k)})"
         )
         cols.append(F.round(fold, 6).alias(f"y{j:02d}"))
@@ -1070,21 +889,15 @@ def random_projection(
 # Jégou, Douze & Schmid, "Product Quantization for Nearest Neighbor
 # Search" (TPAMI 2011): split the d-dim space into m orthogonal
 # subspaces, vector-quantize each with its own ksub-centroid codebook,
-# and store each vector as m small codes (here 4 bytes for a 64-dim
-# float vector — 64×). Queries scan CODES with per-query lookup tables
+# and store each vector as m small codes (here 8 bytes for a 64-dim
+# float vector — 32×). Queries scan CODES with per-query lookup tables
 # (ADC), never the original vectors: the disk/memory shape that makes
 # billion-vector search feasible at 100 TB.
 
 
-def pq_train(
-    df: DataFrame,
-    m: int = 4,
-    ksub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Train per-subspace PQ codebooks with deterministic fused k-means.
+def pq_train(df: DataFrame) -> np.ndarray:
+    """Train PQ_M per-subspace codebooks of PQ_KSUB centroids with
+    deterministic fused k-means.
 
     All m subspace quantizers train in the SAME corpus pass: one
     mapInPandas emits (subspace, cell, subvector) rows and ONE
@@ -1098,12 +911,9 @@ def pq_train(
 
     Returns an m × ksub × dsub NumPy array of codebooks.
     """
-    import numpy as np
-
+    m = PQ_M
     spark = df.sparkSession
-    _, mat0 = _collect_matrix(
-        df.orderBy(F.col(id_col)).limit(ksub), id_col, vec_col
-    )
+    _, mat0 = _collect_matrix(df.orderBy(F.col(ID_COL)).limit(PQ_KSUB))
     d = mat0.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -1115,23 +925,21 @@ def pq_train(
     schema = "j int, cell int, " + ", ".join(
         f"s{t} double" for t in range(dsub)
     )
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         bc = spark.sparkContext.broadcast(books)
 
         def assign(it):
-            import pandas as pd
-
             bks = bc.value
             for pdf in it:
-                x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+                x = _matrix(pdf[VEC_COL])
                 frames = []
                 for j in range(m):
                     xs = x[:, j * dsub : (j + 1) * dsub]
                     c = bks[j]
-                    d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (xs @ c.T)
                     out = {
                         "j": np.full(len(xs), j, dtype="int32"),
-                        "cell": d2.argmin(axis=1).astype("int32"),
+                        "cell": _cell_dist(xs, c, (c * c).sum(axis=1))
+                        .argmin(axis=1).astype("int32"),
                     }
                     for t in range(dsub):
                         out[f"s{t}"] = xs[:, t]
@@ -1151,17 +959,8 @@ def pq_train(
     return books
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 4,
-    ksub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes.
+def pq_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Asymmetric-distance (ADC) top-PQ_SHORTLIST over PQ codes.
 
     Per query, a lookup table of subspace dot products against every
     codebook entry (m × ksub floats — tiny, broadcast); the corpus scan
@@ -1171,16 +970,13 @@ def pq_topk(
     approx_cos = Σ_j LUT[q][j][code_j] / (‖x̂‖·‖q‖) with ‖x̂‖ the
     reconstruction norm — no per-pair float vector math at all. Local
     top-k per Arrow batch, global top-k via the grouped window.
-    Approximate by construction (quantization error) — rows-only at the
-    driver; ann_pq_recall_check pins recall against the exact top-k.
+    Approximate by construction (quantization error) — the shortlist
+    ``pq_topk_reranked`` rescores exactly.
     """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    books = pq_train(corpus, m=m, ksub=ksub, iters=iters,
-                     id_col=id_col, vec_col=vec_col)
+    k, m = PQ_SHORTLIST, PQ_M
+    books = pq_train(corpus)
     dsub = books.shape[2]
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
+    qids, qmat = _collect_matrix(queries)
     qnorms = np.sqrt((qmat * qmat).sum(axis=1))
     # dot LUT: [n_q, m, ksub]; reconstruction norm² LUT: [m, ksub]
     dot_lut = np.stack(
@@ -1188,90 +984,67 @@ def pq_topk(
         axis=1,
     )
     n2_lut = np.stack([(books[j] * books[j]).sum(axis=1) for j in range(m)])
-    bc = spark.sparkContext.broadcast(
+    bc = corpus.sparkSession.sparkContext.broadcast(
         (qids, qnorms, dot_lut, n2_lut, books)
     )
 
     def block(it):
-        import pandas as pd
-
         bqids, bqnorms, blut, bn2, bbooks = bc.value
         for pdf in it:
-            cid = pdf[id_col].to_numpy(dtype="int64")
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+            cid = pdf[ID_COL].to_numpy(dtype="int64")
+            x = _matrix(pdf[VEC_COL])
             codes = np.empty((len(x), m), dtype="int64")
             for j in range(m):
                 xs = x[:, j * dsub : (j + 1) * dsub]
                 c = bbooks[j]
-                d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (xs @ c.T)
-                codes[:, j] = d2.argmin(axis=1)
+                codes[:, j] = _cell_dist(xs, c, (c * c).sum(axis=1)).argmin(
+                    axis=1
+                )
             recon_n2 = np.zeros(len(x))
             for j in range(m):
                 recon_n2 += bn2[j][codes[:, j]]
             recon_n = np.sqrt(np.maximum(recon_n2, 1e-12))
-            out_q, out_n, out_c = [], [], []
+            picks = []
             for qi in range(len(bqids)):
                 approx_dot = np.zeros(len(x))
                 for j in range(m):
                     approx_dot += blut[qi][j][codes[:, j]]
                 s = approx_dot / (recon_n * max(bqnorms[qi], 1e-12))
                 mask = cid != bqids[qi]
-                sm, cm = s[mask], cid[mask]
-                order = np.lexsort((cm, -sm))[:k]
-                out_q.append(np.full(len(order), bqids[qi]))
-                out_n.append(cm[order])
-                out_c.append(sm[order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
+                picks.append(_lexsort_topk(bqids[qi], cid[mask], s[mask], k))
+            if picks:
+                yield _candidate_frame(picks)
 
-    cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
+    cands = corpus.mapInPandas(block, schema=_CANDIDATES)
     return _rank_topk(cands, k)
 
 
-def pq_topk_reranked(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    shortlist: int = 100,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_topk_reranked(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """PQ-ADC shortlist + exact rerank — the production PQ search shape.
 
-    The compressed-domain ADC scan retrieves a ``shortlist`` of
-    candidates per query (cheap: table lookups over 8-byte codes); only
-    those ≤ |Q|·shortlist rows are then re-scored with the exact fold
-    dot product (JVM-side, the engine's bit-reproducible cosine
-    convention) and reduced to the top-k. Final recall@k therefore
-    equals the shortlist's recall — quantization error decides WHO is
-    in the shortlist, never the reported cosine, so the returned scores
-    are exact. Uniform random vectors (this fixture) are PQ's WORST
-    case — no cluster structure for codebooks to exploit; measured
-    shortlist recall 0.72–0.90 across sf0.001–0.1 at m=8, C=100.
+    The compressed-domain ADC scan (``pq_topk``) retrieves a
+    PQ_SHORTLIST of candidates per query (cheap: table lookups over
+    8-byte codes); only those ≤ |Q|·shortlist rows are then re-scored
+    with the exact fold dot product (JVM-side, the engine's
+    bit-reproducible cosine convention) and reduced to the top-TOPK.
+    Final recall@k therefore equals the shortlist's recall —
+    quantization error decides WHO is in the shortlist, never the
+    reported cosine, so the returned scores are exact. Uniform random
+    vectors (this fixture) are PQ's WORST case — no cluster structure
+    for codebooks to exploit; measured shortlist recall 0.72–0.90 across
+    sf0.001–0.1 at m=8, C=100.
 
     Scale: the candidate relation is broadcast back against the corpus
     (|Q|·C rows — bounded by contract), so reranking reads only the
-    candidates' vectors; at 100 TB the ADC scan reads 64× less than any
+    candidates' vectors; at 100 TB the ADC scan reads 32× less than any
     float-vector pass.
     """
-    cand = pq_topk(
-        corpus, queries, k=shortlist, m=m, ksub=ksub, iters=iters,
-        id_col=id_col, vec_col=vec_col,
-    ).select("query_id", "neighbor_id")
+    cand = pq_topk(corpus, queries).select("query_id", "neighbor_id")
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("c_emb")
+        F.col(ID_COL).alias("neighbor_id"), as_double(VEC_COL).alias("c_emb")
     ).withColumn("c_norm", norm(F.col("c_emb")))
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("q_emb")
+        F.col(ID_COL).alias("query_id"), as_double(VEC_COL).alias("q_emb")
     ).withColumn("q_norm", norm(F.col("q_emb")))
     scored = (
         c.join(F.broadcast(cand), "neighbor_id")
@@ -1282,14 +1055,10 @@ def pq_topk_reranked(
             / (F.col("c_norm") * F.col("q_norm")),
         )
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, TOPK)
 
 
-def gram_partials(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-):
+def gram_partials(df: DataFrame):
     """One-pass BLAS sufficient statistics for any second-moment
     consumer (PCA, power iteration, CKA): per-partition partials
     (n, Σx, XᵀX as a dim×dim matrix) via ``mapInPandas`` — the corpus
@@ -1300,21 +1069,18 @@ def gram_partials(
     bit-identical sums regardless of task completion order.
 
     Returns (n: int, s: np.ndarray[dim] = Σx, m: np.ndarray[dim, dim]
-    = XᵀX). At cluster scale this is the treeAggregate shape: the
-    shuffle is n_partitions × (1 + dim + dim²) doubles, the scan does
-    all the work.
+    = XᵀX) with dim = EMB_DIM. At cluster scale this is the
+    treeAggregate shape: the shuffle is n_partitions × (1 + dim + dim²)
+    doubles, the scan does all the work.
     """
-    import numpy as np
-
+    dim = EMB_DIM
     schema = "n long, s array<double>, m array<double>"
 
     def partials(it):
-        import pandas as pd
-
         for pdf in it:
             if not len(pdf):
                 continue
-            x = np.stack(pdf[vec_col].map(np.asarray).values).astype(
+            x = np.stack(pdf[VEC_COL].map(np.asarray).values).astype(
                 np.float64
             )
             yield pd.DataFrame(
@@ -1325,7 +1091,7 @@ def gram_partials(
                 }
             )
 
-    rows = df.select(vec_col).mapInPandas(partials, schema=schema).collect()
+    rows = df.select(VEC_COL).mapInPandas(partials, schema=schema).collect()
     rows.sort(key=lambda r: (r["n"], tuple(r["s"][:4])))
     n = sum(r["n"] for r in rows)
     s = np.zeros(dim)
@@ -1336,11 +1102,7 @@ def gram_partials(
     return n, s, m
 
 
-def pca_fit(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-):
+def pca_fit(df: DataFrame):
     """Distributed PCA fit on ``gram_partials`` sufficient statistics:
     the dim×dim eigendecomposition (numpy ``eigh``) is O(dim³) —
     microscopic next to the corpus scan, and the ONLY driver-side
@@ -1351,9 +1113,7 @@ def pca_fit(
     Returns (mean: np.ndarray[dim], components: np.ndarray[dim, dim]
     rows = eigenvectors in DESCENDING eigenvalue order, eigvals).
     """
-    import numpy as np
-
-    n, s, m = gram_partials(df, vec_col=vec_col, dim=dim)
+    n, s, m = gram_partials(df)
     mean = s / n
     cov = m / n - np.outer(mean, mean)
     eigvals, eigvecs = np.linalg.eigh(cov)
@@ -1367,57 +1127,39 @@ def pca_fit(
     return mean, comps, eigvals
 
 
-def pca_project(
-    df: DataFrame,
-    mean,
-    components,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pca_project(df: DataFrame, mean, components, k: int) -> DataFrame:
     """Project vectors onto the top-k PCA components: (X − μ)·Wᵀ as a
     BLAS matmul per Arrow batch (``mapInPandas``), components broadcast
     in the closure (k×dim floats). Output: (id, proj array<double>[k])."""
-    import numpy as np
-
     mu = np.asarray(mean, dtype=np.float64)
     w = np.asarray(components, dtype=np.float64)[:k]
 
     def project(it):
-        import pandas as pd
-
         for pdf in it:
             if not len(pdf):
                 continue
-            x = np.stack(pdf[vec_col].map(np.asarray).values).astype(
+            x = np.stack(pdf[VEC_COL].map(np.asarray).values).astype(
                 np.float64
             )
             p = (x - mu) @ w.T
             yield pd.DataFrame(
-                {id_col: pdf[id_col].values, "proj": list(p)}
+                {ID_COL: pdf[ID_COL].values, "proj": list(p)}
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
-        project, schema=f"{id_col} long, proj array<double>"
+    return df.select(ID_COL, VEC_COL).mapInPandas(
+        project, schema=f"{ID_COL} long, proj array<double>"
     )
 
 
-def hard_negative_topk(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    k: int = 3,
-    ceiling: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def hard_negative_topk(corpus: DataFrame, anchors: DataFrame) -> DataFrame:
     """Hard-negative mining for contrastive training: per anchor, the
-    top-k most-similar corpus vectors whose LABEL DIFFERS, with a
-    cosine ceiling excluding near-duplicate twins (a near-dup with a
-    different label is almost always a labeling error, not a useful
-    negative — the standard filtered-hard-negative recipe, e.g. RocketQA
-    denoising). Same deterministic (cosine desc, id) rank and fold dot
-    product as cosine_topk, so the oracle replays it exactly.
+    top-HARD_NEG_K most-similar corpus vectors whose LABEL DIFFERS, with
+    a cosine ceiling (HARD_NEG_CEILING) excluding near-duplicate twins
+    (a near-dup with a different label is almost always a labeling
+    error, not a useful negative — the standard filtered-hard-negative
+    recipe, e.g. RocketQA denoising). Same deterministic (cosine desc,
+    id) rank and fold dot product as cosine_topk, so the oracle replays
+    it exactly.
 
     Scale shape: anchors broadcast, |C|×|A| pairs produced map-side with
     the corpus label RIDING ALONG from the scan (extra_corpus_cols — no
@@ -1428,148 +1170,41 @@ def hard_negative_topk(
     candidate stream map-side).
     """
     a = anchors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("q_label"),
+        F.col(ID_COL).alias("query_id"),
+        F.col(LABEL_COL).alias("q_label"),
     )
     pairs = (
         _pairs_with_cosine(
-            corpus.withColumn("c_label", F.col(label_col)),
-            anchors, id_col, vec_col, extra_corpus_cols=("c_label",),
+            corpus.withColumn("c_label", F.col(LABEL_COL)),
+            anchors, extra_corpus_cols=("c_label",),
         )
         .join(F.broadcast(a), "query_id")
         .filter(
             (F.col("q_label") != F.col("c_label"))
-            & (F.col("cosine") < F.lit(ceiling))
+            & (F.col("cosine") < F.lit(HARD_NEG_CEILING))
         )
         .select("query_id", "neighbor_id", "cosine")
     )
-
-    def partial_topk(it):
-        import pandas as pd
-
-        carry = None
-        for pdf in it:
-            carry = pdf if carry is None else pd.concat([carry, pdf])
-            carry = (
-                carry.sort_values(
-                    ["query_id", "cosine", "neighbor_id"],
-                    ascending=[True, False, True],
-                )
-                .groupby("query_id", sort=False)
-                .head(k)
-            )
-        if carry is not None and len(carry):
-            yield carry
-
-    cands = pairs.mapInPandas(partial_topk, schema=_topk_candidates_schema())
-    return _rank_topk(cands, k)
+    return _fold_topk(pairs, HARD_NEG_K)
 
 
-def cosine_topk_blas_batch(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_chunk: int = 1024,
-) -> DataFrame:
-    """Exact brute-force cosine top-k for LARGE query batches (10³-10⁴
-    queries) — the brute serving floor the batch-ANN economics are
-    measured against.
-
-    Same contract as cosine_topk / cosine_topk_blas; the difference is
-    the inner loop. cosine_topk_blas runs one Python lexsort PER QUERY
-    per Arrow batch — O(|Q|) interpreter iterations, fine at |Q|≈10,
-    minutes at |Q|≈10⁴. Here the per-batch score matrix is built in
-    query CHUNKS (|batch| × query_chunk doubles ≈ 80 MB at the default,
-    bounding task memory independent of |Q|) and the per-batch partial
-    top-k for EVERY query in the chunk is selected by a single
-    argpartition along axis 0 — no per-query Python work at all. Each
-    (query, corpus-batch) emits k+1 candidates: the +1 absorbs the
-    query's own self-match (cosine 1.0, always in the partial top set
-    when present), which is filtered BEFORE the exact global rank so a
-    self-row can never displace a true neighbor. argpartition selects
-    by value only; the deterministic (cosine desc, neighbor_id asc)
-    tie-break is applied at the global window, identical to the other
-    top-k paths (exact double ties between distinct random vectors
-    do not occur at the candidate boundary — same exposure as the
-    oracled ann_cosine_topk_blas).
-
-    Scale shape: queries broadcast once (|Q|×64 doubles ≈ 5 MB at 10⁴),
-    corpus streamed through Arrow; shuffle is ≤ (k+1)·|Q| rows per
-    corpus partition, never the |C|×|Q| pair relation.
-    """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    qnorms = np.maximum(np.sqrt((qmat * qmat).sum(axis=1)), 1e-12)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorms))
-    kk = k + 1  # self-buffer
-
-    def block(it):
-        import pandas as pd
-
-        bqids, bqmat, bqnorms = bc.value
-        nq = len(bqids)
-        for pdf in it:
-            cid = pdf[id_col].to_numpy(dtype="int64")
-            c = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            cn = np.maximum(np.sqrt((c * c).sum(axis=1)), 1e-12)
-            take = min(kk, len(cid))
-            out = []
-            for lo in range(0, nq, query_chunk):
-                hi = min(lo + query_chunk, nq)
-                S = (c @ bqmat[lo:hi].T) / np.outer(cn, bqnorms[lo:hi])
-                idx = np.argpartition(-S, take - 1, axis=0)[:take]
-                cols = np.broadcast_to(
-                    np.arange(hi - lo)[None, :], idx.shape
-                )
-                out.append(pd.DataFrame({
-                    "query_id": bqids[lo:hi][cols.ravel()],
-                    "neighbor_id": cid[idx.ravel()],
-                    "cosine": np.take_along_axis(S, idx, axis=0).ravel(),
-                }))
-            if out:
-                yield pd.concat(out)
-
-    cands = corpus.mapInPandas(block, schema=_topk_candidates_schema())
-    return _rank_topk(
-        cands.filter(F.col("neighbor_id") != F.col("query_id")), k
-    )
-
-
-def _ivf_batch_serve(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_cells: int = 16,
-    n_probe: int = 4,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_chunk: int = 1024,
-):
-    """Shared serving pass: returns ``(topk, stats)`` where ``topk`` is
-    the full (query_id, neighbor_id, rank, cosine) relation in the SAME
-    projection contract as ``ivf_topk_kmeans`` (rank int, cosine rounded
-    to 6), and ``stats`` carries the index-head economics
-    (mean_frac, min_cand, corpus_n). Exposing the relation (round-11
-    advice) lets tests compare the vectorized rerank's actual neighbor
-    CONTENT against the per-query loop kernel, not just row counts.
-    See ``ivf_batch_serving`` for the serving-economics narrative:
+def ivf_batch_serving(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Batch ANN serving economics on the trained IVF index: the
+    ``ivf_topk_kmeans`` pass plus one index pass for cell sizes, reduced
+    to a one-row oracle-gateable summary:
 
       n_queries, corpus_n        — exact, oracle-computable counts
-      topk_rows                  — exact: k·n_queries iff serving
+      topk_rows                  — exact: TOPK·n_queries iff serving
                                    returned full k for EVERY query (a
                                    distributed-path hard signal; a
                                    degenerate index or a broken probe
                                    breaks the count)
       mean_frac_le_{bound}       — mean per-query scanned fraction
                                    (Σ probed-cell sizes / corpus_n,
-                                   self included) under the bound; at
-                                   n_probe/num_cells = 4/16 balanced
-                                   k-means cells put this near 0.25
+                                   self included) under IVF_FRAC_BOUND;
+                                   at IVF_PROBES/IVF_CELLS = 4/16
+                                   balanced k-means cells put this near
+                                   0.25
       scan_lt_brute              — mean scanned fraction < 1.0: the
                                    per-query marginal cost is strictly
                                    below a brute corpus scan
@@ -1579,162 +1214,45 @@ def _ivf_batch_serve(
     The amortization pinned here: index passes (k-means train + corpus
     cell assignment) are BATCH-INDEPENDENT — their cost divides by |Q|,
     while the per-query marginal cost is scanned_frac·|C| dots vs the
-    brute |C|. The rerank is cell-GROUPED and chunk-vectorized: each
-    corpus Arrow batch does ≤ num_cells chunked BLAS matmuls against
-    exactly the queries probing that cell — never cosine_topk_blas's
-    per-query Python loop, and never a materialized candidate-pair
-    shuffle (only ≤ (k+1) partial rows per query·cell·batch cross the
-    wire). Driver-resident serving state is the index head only:
-    centroids (num_cells×64), cell sizes (num_cells), and the collected
-    query batch (|Q|×64 ≈ 5 MB at 10⁴) — the corpus is never collected.
+    brute |C|. Driver-resident serving state is the index head only:
+    centroids (cells×64), cell sizes (cells), and the collected query
+    batch (|Q|×64 ≈ 5 MB at 10⁴) — the corpus is never collected.
     """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    _, cents = kmeans_centroids(
-        corpus, k=num_cells, iters=iters, id_col=id_col, vec_col=vec_col
-    )
-    c_norm2 = (cents * cents).sum(axis=1)
+    k = TOPK
+    cents, c_norm2, qids, qmat, qprobes = _ivf_index(corpus, queries)
 
     # index pass 2 (batch-independent): corpus → cell sizes
-    bc_c = spark.sparkContext.broadcast((cents, c_norm2))
+    bc_c = corpus.sparkSession.sparkContext.broadcast((cents, c_norm2))
 
     def assign_cells(it):
-        import pandas as pd
-
         cc, cn2 = bc_c.value
         for pdf in it:
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            cell = (cn2[None, :] - 2.0 * (x @ cc.T)).argmin(axis=1)
+            x = _matrix(pdf[VEC_COL])
+            cell = _cell_dist(x, cc, cn2).argmin(axis=1)
             yield pd.DataFrame({"cell_id": cell.astype("int32")})
 
-    sizes = np.zeros(num_cells, dtype="int64")
+    sizes = np.zeros(len(cents), dtype="int64")
     for r in (
         corpus.mapInPandas(assign_cells, schema="cell_id int")
         .groupBy("cell_id").count().collect()
     ):
         sizes[r["cell_id"]] = r["count"]
     corpus_n = int(sizes.sum())
-
-    # per-query probes + scanned fractions (index head × query batch,
-    # all tiny: num_cells×64 against |Q|×64)
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    qnorms = np.maximum(np.sqrt((qmat * qmat).sum(axis=1)), 1e-12)
-    qd2 = c_norm2[None, :] - 2.0 * (qmat @ cents.T)
-    qprobes = np.argsort(qd2, axis=1)[:, :n_probe]
     scanned = sizes[qprobes].sum(axis=1)  # own cell = nearest ⇒ self in
     mean_frac = float(scanned.mean()) / max(corpus_n, 1)
     min_cand = int(scanned.min()) - 1  # exclude self
 
-    # serving rerank, cell-grouped: queries bucketed by probed cell
-    probers = [
-        np.where((qprobes == c).any(axis=1))[0] for c in range(num_cells)
-    ]
-    bc_q = spark.sparkContext.broadcast(
-        (qids, qmat, qnorms, probers, cents, c_norm2)
-    )
-    kk = k + 1  # self-buffer, filtered before the global rank
-
-    def serve(it):
-        import pandas as pd
-
-        bqids, bqmat, bqnorms, bprob, cc, cn2 = bc_q.value
-        for pdf in it:
-            cid = pdf[id_col].to_numpy(dtype="int64")
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            xn = np.maximum(np.sqrt((x * x).sum(axis=1)), 1e-12)
-            cell = (cn2[None, :] - 2.0 * (x @ cc.T)).argmin(axis=1)
-            out = []
-            for c in range(len(bprob)):
-                qs = bprob[c]
-                rows = np.where(cell == c)[0]
-                if not len(qs) or not len(rows):
-                    continue
-                take = min(kk, len(rows))
-                for lo in range(0, len(qs), query_chunk):
-                    sub = qs[lo:lo + query_chunk]
-                    S = (x[rows] @ bqmat[sub].T) / np.outer(
-                        xn[rows], bqnorms[sub]
-                    )
-                    idx = np.argpartition(-S, take - 1, axis=0)[:take]
-                    cols = np.broadcast_to(
-                        np.arange(len(sub))[None, :], idx.shape
-                    )
-                    out.append(pd.DataFrame({
-                        "query_id": bqids[sub][cols.ravel()],
-                        "neighbor_id": cid[rows][idx.ravel()],
-                        "cosine": np.take_along_axis(S, idx, axis=0).ravel(),
-                    }))
-            if out:
-                yield pd.concat(out)
-
-    cands = corpus.mapInPandas(serve, schema=_topk_candidates_schema())
-    topk = _rank_topk(
-        cands.filter(F.col("neighbor_id") != F.col("query_id")), k
-    )
-    stats = {"mean_frac": mean_frac, "min_cand": min_cand}
-    return topk, stats
-
-
-def ivf_batch_serving_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_cells: int = 16,
-    n_probe: int = 4,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_chunk: int = 1024,
-) -> DataFrame:
-    """The serving pass's full top-k relation — same output contract as
-    ``ivf_topk_kmeans`` (query_id, neighbor_id, rank, cosine) so the
-    cell-grouped vectorized rerank is row-comparable against the
-    per-query loop kernel at the identical operating point."""
-    topk, _ = _ivf_batch_serve(
-        corpus, queries, k=k, num_cells=num_cells, n_probe=n_probe,
-        iters=iters, id_col=id_col, vec_col=vec_col,
-        query_chunk=query_chunk,
-    )
-    return topk
-
-
-def ivf_batch_serving(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_cells: int = 16,
-    n_probe: int = 4,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_chunk: int = 1024,
-    frac_bound: float = 0.45,
-) -> DataFrame:
-    """Batch ANN serving economics on the trained IVF index
-    (``_ivf_batch_serve`` runs the pass): one-row oracle-gateable
-    summary — n_queries, corpus_n, topk_rows (= k·n_queries iff full k
-    for EVERY query), mean scanned fraction under ``frac_bound``,
-    scan_lt_brute, min_candidates_ge_k. See ``_ivf_batch_serve`` for
-    the kernel and cost-shape documentation."""
-    topk, stats = _ivf_batch_serve(
-        corpus, queries, k=k, num_cells=num_cells, n_probe=n_probe,
-        iters=iters, id_col=id_col, vec_col=vec_col,
-        query_chunk=query_chunk,
-    )
-    mean_frac, min_cand = stats["mean_frac"], stats["min_cand"]
+    topk = _ivf_rerank(corpus, cents, c_norm2, qids, qmat, qprobes, k)
     # zero-padded percent so distinct bounds always get distinct,
-    # deterministic column names (0.4 -> _040, 0.45 -> _045, 0.5 ->
-    # _050); the truncate-the-str formatting it replaces collided on
-    # e.g. 0.4 vs 0.405 and desynced from oracles written per-bound
-    bound_label = f"mean_frac_le_{int(round(frac_bound * 100)):03d}"
+    # deterministic column names (0.4 -> _040, 0.45 -> _045, 0.5 -> _050)
+    bound_label = f"mean_frac_le_{int(round(IVF_FRAC_BOUND * 100)):03d}"
     return (
         queries.agg(F.count("*").cast("long").alias("n_queries"))
         .crossJoin(corpus.agg(F.count("*").cast("long").alias("corpus_n")))
         .crossJoin(topk.agg(F.count("*").cast("long").alias("topk_rows")))
         .select(
             "n_queries", "corpus_n", "topk_rows",
-            F.lit(bool(mean_frac <= frac_bound)).alias(bound_label),
+            F.lit(bool(mean_frac <= IVF_FRAC_BOUND)).alias(bound_label),
             F.lit(bool(mean_frac < 1.0)).alias("scan_lt_brute"),
             F.lit(bool(min_cand >= k)).alias("min_candidates_ge_k"),
         )

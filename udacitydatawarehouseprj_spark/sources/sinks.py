@@ -111,37 +111,3 @@ def drop_table(spark, name: str) -> None:
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
         if fs.exists(path):
             fs.delete(path, True)
-
-
-def write_compacted(
-    df: DataFrame,
-    path: str,
-    max_records_per_file: int,
-    partition_cols: tuple[str, ...] = (),
-    target_files_per_partition: int | None = None,
-) -> None:
-    """Small-file-aware parquet write: the file-count killer at 100 TB is
-    a write that emits one file per task per partition value (tasks ×
-    partitions tiny files — metadata pressure, slow listing, poor scan
-    parallelism). Repartition on the partition columns first so each
-    output partition is produced by few tasks, then cap file size with
-    maxRecordsPerFile so huge partitions still split into scannable
-    files. target_files_per_partition spreads a hot partition over that
-    many tasks (salted) instead of one."""
-    out = df
-    if partition_cols:
-        if target_files_per_partition and target_files_per_partition > 1:
-            salt = (F.spark_partition_id() + F.monotonically_increasing_id()) % (
-                target_files_per_partition
-            )
-            out = df.repartition(
-                *[F.col(c) for c in partition_cols], salt.alias("_spread")
-            )
-        else:
-            out = df.repartition(*[F.col(c) for c in partition_cols])
-    writer = out.write.mode("overwrite").option(
-        "maxRecordsPerFile", max_records_per_file
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
