@@ -159,14 +159,28 @@ def test_record_bar_reports_every_failed_rule():
     assert not ok and len(reasons) == 5
 
 
-def test_committed_record_falls_back_for_pre_split_revisions():
+def test_committed_record_falls_back_for_pre_split_revisions(tmp_path, monkeypatch):
     """Revisions predating the round-13 record/ledger split have no
     BENCH_record.json; the reader must fall back to that revision's
-    BENCH_full_latest.json (the two were the same object then)."""
+    BENCH_full_latest.json (the two were the same object then). The
+    revision is a commit of a throw-away repository, so the test needs
+    none of this checkout's history."""
+    import subprocess
+
     g = _guard()
-    ref, source = g.committed_record("f97ff0a")  # the r11 clean record
+    record = {"queries": {"q_star": 0.52, "q_tpch": 1.7}, "value": 2.22}
+    (tmp_path / "BENCH_full_latest.json").write_text(json.dumps(record))
+    git = ["git", "-C", str(tmp_path), "-c", "user.name=t", "-c", "user.email=t@t",
+           "-c", "commit.gpgsign=false"]
+    subprocess.run(git + ["init", "-q"], check=True)
+    subprocess.run(git + ["add", "BENCH_full_latest.json"], check=True)
+    subprocess.run(git + ["commit", "-q", "-m", "pre-split record"], check=True)
+    rev = subprocess.run(git + ["rev-parse", "--short", "HEAD"], check=True,
+                         capture_output=True, text=True).stdout.strip()
+    monkeypatch.setattr(g, "_repo_root", lambda: str(tmp_path))
+    ref, source = g.committed_record(rev)
     assert source == "BENCH_full_latest.json"
-    assert ref["queries"]  # real per-name values
+    assert ref == record
 
 
 def test_splice_replaces_median_and_spread_as_a_unit():

@@ -8,7 +8,8 @@ ways by ``check_build``:
 2. its formatted physical plan has no ``CartesianProduct``;
 3. it matches its DuckDB oracle by exact value, not by hash (the
    driver's t2 gate, SURVEY §5.1); a rows-only query has no oracle and
-   must instead run with a non-empty schema.
+   must instead run with a non-empty schema;
+4. its oracle runs in DuckDB within ``ORACLE_BOUND_S``.
 
 Every oracled query is compared on every run. ``tools/parity.py`` runs
 the same comparison standalone at any sf."""
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import functools
 import sys
+import time
 
 import duckdb
 import pytest
@@ -28,6 +30,13 @@ sys.path.insert(0, "tools")
 from parity import compare  # noqa: E402
 
 ORACLES = Q.oracle_sql()
+
+#: Wall seconds one oracle may take in DuckDB at sf0.001: over 5x the
+#: slowest oracle, ``modularity_components`` (2.2 s on 4 idle cores,
+#: 4.6 s beside a running tier-1). DuckDB inlines a CTE at every
+#: reference, and an unrolled chain left un-materialized re-runs its
+#: first rounds exponentially often (the PageRank oracles took 150-214 s).
+ORACLE_BOUND_S = 25.0
 
 
 # --- single-action discipline (VERDICT r8 item 8) ----------------------
@@ -168,9 +177,14 @@ def check_build(spark, sf_dir, name, fn):
     if "CartesianProduct" in formatted_plan(spark, df):
         errors.append(f"{name}: plan has a CartesianProduct")
     if name in ORACLES:
-        errors += compare(
-            name, df.toPandas(), _duck(sf_dir).sql(ORACLES[name]).fetchdf()
-        )
+        got = df.toPandas()
+        t0 = time.perf_counter()
+        want = _duck(sf_dir).sql(ORACLES[name]).fetchdf()
+        oracle_s = time.perf_counter() - t0
+        if oracle_s > ORACLE_BOUND_S:
+            errors.append(f"{name}: DuckDB oracle took {oracle_s:.1f} s "
+                          f"(bound {ORACLE_BOUND_S:.0f} s)")
+        errors += compare(name, got, want)
     else:
         df.count()
         if not df.schema.fields:
@@ -211,3 +225,13 @@ def test_check_build_reports_planted_violations(spark, sf_dir):
             assert [e for e in errors if "CartesianProduct" in e], errors
     finally:
         spark.conf.set(key, old)
+
+
+def test_check_build_reports_a_slow_oracle(spark, sf_dir, monkeypatch):
+    """An oracle slower than ``ORACLE_BOUND_S`` is reported even when its
+    frame matches."""
+    name = "planted_slow_oracle"
+    monkeypatch.setitem(ORACLES, name, "SELECT CAST(0 AS BIGINT) AS id")
+    monkeypatch.setitem(globals(), "ORACLE_BOUND_S", 0.0)
+    _, errors = check_build(spark, sf_dir, name, lambda spark, sf_dir: spark.range(1))
+    assert len(errors) == 1 and "DuckDB oracle took" in errors[0], errors

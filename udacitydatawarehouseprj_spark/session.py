@@ -21,6 +21,15 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
   ``pyspark.zip`` and the Spark core jar). Built sessions fork workers
   from ``pyworker``, which skips unchanged archives; Python 3.13 no
   longer re-reads, so there the daemon saves nothing.
+* local files written without a fork per file: without the native
+  ``libhadoop``, Hadoop's local filesystem runs ``chmod`` in a child
+  process for every file it creates (each data file and its ``.crc``)
+  and ``readlink`` for each rename a stream checkpoint makes, ~8 ms of
+  CPU apiece. Sessions built for a local master use ``jvm/NoFork.java``,
+  which does those two calls in the JVM and is otherwise Hadoop's own
+  code: ``.crc`` checksums are still written and verified, and
+  ``FileContext``'s no-overwrite rename, file modes and umask are
+  unchanged. A host without ``javac`` keeps stock Hadoop.
 * session timezone pinned to UTC so timestamp-derived columns (time_key,
   hour, week...) are deterministic and match the DuckDB oracle, which
   operates on naive UTC timestamps.
@@ -29,8 +38,15 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
 from __future__ import annotations
 
 import functools
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 
+from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +64,8 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 
 # Confs that are safe (and necessary) to set on an externally provided
 # session at runtime — all of these are runtime-mutable SQL confs.
@@ -81,8 +99,7 @@ BUILD_CONF = {
     # stops every task re-reading Spark's unchanged zip archives; the
     # workers find the engine on this path from any working directory.
     "spark.python.daemon.module": "udacitydatawarehouseprj_spark.pyworker",
-    "spark.executorEnv.PYTHONPATH": os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))),
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(_PACKAGE_DIR),
 }
 
 # Build-time confs for a local master only; a cluster keeps Spark's defaults.
@@ -91,7 +108,15 @@ LOCAL_BUILD_CONF = {
     # one task per path in this same JVM (a 182-file glob cost ~3.0 s CPU
     # per read as a job vs ~0.1 s listed on the driver, 4 cores).
     "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
+    # Hadoop's local filesystem with chmod and readlink in the JVM instead
+    # of a child process per call (jvm/NoFork.java); build_conf adds the
+    # compiled classes to the driver's class path, or drops these two
+    # keys where they cannot be compiled.
+    "spark.hadoop.fs.file.impl": "udacitydatawarehouseprj_spark.jvm.NoFork$LocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "udacitydatawarehouseprj_spark.jvm.NoFork$LocalFs",
 }
+
+NO_FORK_SOURCE = os.path.join(_PACKAGE_DIR, "jvm", "NoFork.java")
 
 
 def default_parallelism() -> int:
@@ -246,7 +271,83 @@ def build_conf(master: str) -> dict[str, str]:
     conf = {**RUNTIME_CONF, **BUILD_CONF}
     if master == "local" or master.startswith("local["):
         conf.update(LOCAL_BUILD_CONF)
+        classes = no_fork_classes()
+        if classes is None:
+            for key in ("spark.hadoop.fs.file.impl", "spark.hadoop.fs.AbstractFileSystem.file.impl"):
+                del conf[key]
+        else:
+            conf["spark.driver.extraClassPath"] = classes
     return conf
+
+
+def no_fork_classes() -> str | None:
+    """The directory of ``jvm/NoFork.java``'s compiled classes, or None
+    where a session cannot load them: no ``javac`` on this host, or a JVM
+    already running (a stopped session's gateway) that was started
+    without them, since the class path is fixed at JVM launch.
+
+    The classes are cached under ``.scratch/jvm/<digest>`` in the checkout,
+    keyed on the source, the JDK and the Hadoop jar; a compile error
+    raises."""
+    javac = shutil.which("javac")
+    if javac is None:
+        _warn_stock_local_fs()
+        return None
+    classes = _compile_no_fork(os.path.realpath(javac))
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        try:
+            gateway.jvm.java.lang.Class.forName(
+                LOCAL_BUILD_CONF["spark.hadoop.fs.file.impl"])
+        except Py4JError:
+            return None
+    return classes
+
+
+@functools.lru_cache(maxsize=None)
+def _warn_stock_local_fs() -> None:
+    logging.getLogger(__name__).warning(
+        "javac not found: sessions keep Hadoop's stock local filesystem, which "
+        "forks chmod for every file it writes (~8 ms of CPU each)")
+
+
+@functools.lru_cache(maxsize=None)
+def _compile_no_fork(javac: str) -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = os.path.join(_find_spark_home(), "jars")
+    # the client API jar alone compiles in ~1.3 s; every Spark jar in ~2.3 s
+    api = sorted(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar")))
+    classpath = api[-1] if api else os.path.join(jars, "*")
+    release = os.path.join(os.path.dirname(os.path.dirname(javac)), "release")
+    digest = hashlib.sha256(javac.encode())
+    for path in (NO_FORK_SOURCE, release):  # the JDK's version file, if any
+        if os.path.isfile(path):
+            with open(path, "rb") as f:
+                digest.update(f.read())
+    for path in glob.glob(classpath):
+        st = os.stat(path)
+        digest.update(f"{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns}".encode())
+    cache = os.path.join(os.path.dirname(_PACKAGE_DIR), ".scratch", "jvm")
+    out = os.path.join(cache, digest.hexdigest()[:16])
+    if os.path.isdir(out):
+        return out
+    os.makedirs(cache, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="build-", dir=cache)
+    try:
+        done = subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", classpath, "-d", tmp, NO_FORK_SOURCE],
+            capture_output=True, text=True)
+        if done.returncode != 0:
+            raise RuntimeError(f"javac failed on {NO_FORK_SOURCE}:\n{done.stderr}")
+        try:
+            os.replace(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # not a concurrent build that won the race
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -262,8 +363,6 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
     files (all parts share one schema — read the first). The schema probe
     is cached on (file, mtime) so a rewritten file is re-probed while
     repeated reads of a stable path stay free."""
-    import glob
-
     probe = path
     if os.path.isdir(path):
         parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
