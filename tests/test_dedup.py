@@ -58,18 +58,67 @@ def test_minhash_matches_exact_on_testdata(spark, sf_dir):
     assert len(exact) > 0  # the testdata plants near-duplicates
 
 
-def test_simhash_zero_distance_for_identical(spark):
+def _simhash_pairs(df, variant):
+    return dedup.simhash_pairs(dedup.simhash_signatures(df, variant), variant)
+
+
+def test_simhash_zero_distance_for_identical(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "MAX_HAMMING", 0)
     df = _docs(spark, ["one two three four five", "one two three four five",
                        "totally different token stream here"])
-    pairs = dedup.simhash_pairs(df, max_hamming=0).collect()
+    pairs = _simhash_pairs(df, dedup.SIMHASH_NATIVE).collect()
     assert [(p.doc_a, p.doc_b, p.hamming) for p in pairs] == [(0, 1, 0)]
 
 
 def test_simhash_signature_is_deterministic(spark):
     df = _docs(spark, ["spark catalyst tungsten arrow"])
-    s1 = dedup.simhash_signatures(df).collect()[0].simhash
-    s2 = dedup.simhash_signatures(df).collect()[0].simhash
+    s1 = dedup.simhash_signatures(df, dedup.SIMHASH_NATIVE).collect()[0].simhash
+    s2 = dedup.simhash_signatures(df, dedup.SIMHASH_NATIVE).collect()[0].simhash
     assert s1 == s2
+
+
+#: signatures of three fixed texts, as the two pre-merge SimHash stacks
+#: computed them; text 0's native signature has bit 63 set
+_PINNED_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "spark catalyst tungsten arrow",
+    "near duplicate detection with simhash bands",
+]
+_PINNED_NATIVE = [-7573889167326994222, 90236097882389186, 2762136701563456548]
+_PINNED_PORTABLE = [98421, 9236553, 10651652]
+
+
+def test_simhash_signatures_match_pinned_values(spark):
+    df = _docs(spark, _PINNED_TEXTS)
+    for variant, pinned in ((dedup.SIMHASH_NATIVE, _PINNED_NATIVE),
+                            (dedup.SIMHASH_PORTABLE, _PINNED_PORTABLE)):
+        sig = dedup.simhash_signatures(df, variant).collect()
+        assert sorted((r.doc_id, r.simhash) for r in sig) == list(enumerate(pinned))
+
+
+def test_band_pairs_emits_each_pair_once_in_order(spark):
+    """Docs 1 and 2 share two bands, doc 3 shares one with doc 2, doc 4
+    shares none: every qualifying pair comes out once, as doc_a < doc_b."""
+    bands = spark.createDataFrame(
+        [(2, 0, "x"), (1, 0, "x"), (2, 1, "y"), (1, 1, "y"),
+         (3, 1, "y"), (4, 0, "z"), (4, 1, "w")],
+        "doc_id long, band_id int, band_val string",
+    )
+    out = dedup.band_pairs(bands, ("band_id", "band_val")).collect()
+    assert sorted((r.doc_a, r.doc_b) for r in out) == [(1, 2), (1, 3), (2, 3)]
+
+
+def test_band_pairs_config_key_keeps_configs_apart(spark):
+    """With cfg in the key, docs 1 and 2, equal only across two different
+    configs, are not candidates; docs 1 and 3 match within config A."""
+    bands = spark.createDataFrame(
+        [(1, "A", 0, "k"), (2, "B", 0, "k"), (3, "A", 0, "k"), (2, "A", 0, "m")],
+        "doc_id long, cfg string, j int, band_key string",
+    )
+    out = dedup.band_pairs(
+        bands, ("cfg", "j", "band_key"), [F.col("a.cfg").alias("cfg")]
+    ).collect()
+    assert [(r.doc_a, r.doc_b, r.cfg) for r in out] == [(1, 3, "A")]
 
 
 def test_prefix_filter_equals_naive(spark, sf_dir):
@@ -105,10 +154,11 @@ def test_prefix_filter_exact_at_other_thresholds(spark):
         assert pref == naive, t
 
 
-def test_portable_simhash_identical_docs(spark):
+def test_portable_simhash_identical_docs(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "MAX_HAMMING", 0)
     df = _docs(spark, ["one two three four five", "one two three four five",
                        "alpha beta gamma delta epsilon zeta eta theta"])
-    pairs = dedup.simhash_portable_pairs(df, max_hamming=0).collect()
+    pairs = _simhash_pairs(df, dedup.SIMHASH_PORTABLE).collect()
     assert [(p.doc_a, p.doc_b, p.hamming) for p in pairs] == [(0, 1, 0)]
 
 
@@ -122,20 +172,19 @@ def test_decontaminate_flags_planted_overlap(spark):
         [Row(doc_id=100, text=contaminated), Row(doc_id=101, text=clean)]
     )
     evals = spark.createDataFrame([Row(doc_id=1, text=eval_doc)])
-    out = dedup.decontaminate_overlap(train, evals, min_overlap=5).collect()
+    out = dedup.decontaminate_overlap(train, evals).collect()
     assert [(r.train_id, r.eval_id) for r in out] == [(100, 1)]
     assert out[0].n_overlap >= 5
 
 
-def test_prefix_circuit_breaker_falls_back(spark):
+def test_prefix_circuit_breaker_falls_back(spark, monkeypatch):
     """Tiny-vocabulary corpus: the candidate estimate blows past the cap,
     the operator falls back to the naive shingle join, and the output is
     still exact (identical to ngram_jaccard_pairs)."""
+    monkeypatch.setattr(dedup, "MAX_CANDIDATE_RATIO", 1.0)
     rows = [(i, "alpha beta gamma delta epsilon") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    guarded = dedup.ngram_jaccard_pairs_prefix(
-        df, threshold=0.5, max_candidate_ratio=1.0
-    )
+    guarded = dedup.ngram_jaccard_pairs_prefix(df, threshold=0.5)
     naive = dedup.ngram_jaccard_pairs(df, threshold=0.5)
     assert {(r.doc_a, r.doc_b) for r in guarded.collect()} == {
         (r.doc_a, r.doc_b) for r in naive.collect()
@@ -202,10 +251,10 @@ def test_incremental_dedup_kill_rules(spark):
         "doc_id long, text string",
     )
     index = dedup.build_dedup_index(corpus)
-    out = sorted(
-        r.doc_id for r in dedup.incremental_dedup(batch, corpus, index).collect()
-    )
-    assert out == [103]
+    survivors, surv_index = dedup.incremental_dedup(batch, corpus, index)
+    assert sorted(r.doc_id for r in survivors.collect()) == [103]
+    assert {r.doc_id for r in surv_index.collect()} == {103}
+    S.release_tracked_caches()
 
 
 def test_span_dedup_global_first_occurrence_wins(spark):
@@ -243,12 +292,12 @@ def test_bloom_decontaminate_no_false_negatives(spark, sf_dir):
     train = docs.filter(F.col("doc_id") >= 25)
     exact = {
         r.train_id
-        for r in dedup.decontaminate_overlap(train, evals, min_overlap=5)
+        for r in dedup.decontaminate_overlap(train, evals)
         .select("train_id").distinct().collect()
     }
     bloom = {
         r.train_id
-        for r in dedup.decontaminate_bloom(train, evals, min_overlap=5)
+        for r in dedup.decontaminate_bloom(train, evals)
         .collect()
     }
     assert exact <= bloom

@@ -129,7 +129,7 @@ def test_rerank_feats_tokenize_after_join_is_value_identical(spark, sf_dir):
         .cast("long"),
     )
     docs = S.load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", dedup.tokens_expr("text").alias("t"))
+    toks = docs.select("doc_id", dedup.tokens_expr().alias("t"))
     old = F.broadcast(base).join(toks, "doc_id").select(
         "doc_id", "score", "r_base",
         *[

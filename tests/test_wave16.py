@@ -47,7 +47,7 @@ def test_neural_rerank_udf_matches_column_expression_mlp(spark, sf_dir):
     from udacitydatawarehouseprj_spark.operators import dedup
 
     docs = Q._t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", dedup.tokens_expr("text").alias("t"))
+    toks = docs.select("doc_id", dedup.tokens_expr().alias("t"))
     feats = F.broadcast(base).join(toks, "doc_id").select(
         "doc_id", "score", "r_base",
         *[

@@ -34,7 +34,7 @@ def _fx_and_weights(spark, sf_dir):
         .cast("long"),
     )
     docs = Q._t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", dedup.tokens_expr("text").alias("t"))
+    toks = docs.select("doc_id", dedup.tokens_expr().alias("t"))
     feats = F.broadcast(base).join(toks, "doc_id").select(
         "doc_id", "score", "r_base",
         *[

@@ -1,8 +1,18 @@
 """Deduplication operators for large-scale text corpora.
 
 Beyond-reference operators (BASELINE.json north star): exact dedup,
-word-shingle Jaccard near-dup, MinHash+LSH near-dup, and SimHash near-dup,
-all over a ``documents(doc_id, text, …)`` table.
+word-shingle Jaccard and containment, MinHash+LSH, SimHash and n-gram
+decontamination, all over a ``documents(doc_id, text, …)`` table.
+
+Every near-duplicate method is one candidate join plus one verify:
+* candidates: a bands relation (one row per doc and band key) self-joined
+  by ``band_pairs`` on its key columns, ``doc_a < doc_b``, each pair once.
+  MinHash bands (``band_hashes``), SimHash bit bands (``simhash_pairs``),
+  prefix-filter shingles (``ngram_jaccard_pairs_prefix``) and the
+  portable 12-perm bands in ``queries.py`` all feed this one join.
+* verify: ``_verify_candidate_pairs`` counts shingle intersections on the
+  candidates only and ends in ``jaccard_from_pair_counts``, the same
+  filter the exhaustive ``shingle_pair_counts`` path ends in.
 
 Scale design (100 TB corpus):
 * exact: one hash-partitioned shuffle on the dedup key.
@@ -13,28 +23,34 @@ Scale design (100 TB corpus):
   (map-side), band buckets (one shuffle), candidate verification restricted
   to same-bucket pairs. This is the scale path; banding parameters trade
   recall for cost.
-* SimHash (``simhash_pairs``): 64-bit signature per doc; near-dups =
-  signatures within Hamming distance k, found via band buckets. A
-  SQL-portable variant (``simhash_portable_pairs``) trades xxhash64 for a
-  polynomial rolling hash so the DuckDB oracle can replay it exactly.
+* SimHash: one stack (``simhash_signatures`` + ``simhash_pairs``) with two
+  variants. ``SIMHASH_NATIVE`` hashes tokens with xxhash64 into a 64-bit
+  signature banded 4 × 16 bits; ``SIMHASH_PORTABLE`` uses the polynomial
+  ``char_fold_hash`` into 32 bits banded 4 × 8, so the DuckDB oracle
+  replays it exactly — and with it the band and Hamming code both share.
 * Prefix filtering (``ngram_jaccard_pairs_prefix``): exact sub-quadratic
   similarity join for Zipfian vocabularies.
 * Decontamination (``decontaminate_overlap``): train×benchmark n-gram
   overlap — broadcast the benchmark, stream the corpus.
 
 All Spark-built-in expressions (xxhash64, transform/slice/aggregate) — no
-Python UDFs anywhere in dedup.
+Python UDFs anywhere in dedup. Column names and tuning knobs are module
+constants; a test that needs another value monkeypatches the constant.
 """
 
 from __future__ import annotations
 
 import functools
 import operator
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+#: the documents relation's key and text columns
+ID_COL = "doc_id"
+TEXT_COL = "text"
 #: word n-gram size for shingling
 DEFAULT_SHINGLE = 3
 
@@ -48,14 +64,42 @@ from udacitydatawarehouseprj_spark.session import track_cache as _cache  # noqa:
 #: the per-pair miss probability is (1 - 0.5²)³² ≈ 1e-4.
 NUM_PERM = 64
 NUM_BANDS = 32
+#: SimHash near-dup bound; both variants' four bands make it pigeonhole-safe
+MAX_HAMMING = 3
+#: distinct shared n-grams that flag a training doc as contaminated
+MIN_OVERLAP = 5
+#: prefix-filter circuit breaker: candidate pairs allowed per document
+MAX_CANDIDATE_RATIO = 64.0
+#: verified Jaccard at which incremental ingest kills a batch doc
+DUP_THRESHOLD = 0.5
+#: exact-substring tiles: tile length and stride, in characters
+TILE_LEN = 40
+STRIDE = 20
+
+# prime < 2^50 so acc*31 stays < 2^55 — no int64 overflow in EITHER engine
+# (DuckDB and non-ANSI Spark would wrap differently on overflow)
+PORTABLE_HASH_MOD = 999_999_999_999_989
+PORTABLE_SIM_BITS = 32
 
 
-def tokens_expr(text_col: str = "text"):
+def char_fold_hash(col: str, mod: int) -> F.Column:
+    """Portable polynomial hash of string column ``col``:
+    fold ``(acc * 31 + code(c)) % mod`` over its characters from acc = 0.
+    Pure integer arithmetic, so a SQL oracle replays it bit for bit; any
+    ``mod`` < 2^50 keeps ``acc * 31`` inside int64 in every engine."""
+    return F.expr(
+        f"aggregate(sequence(1, length({col})), 0L,"
+        f" (acc, i) -> (acc * 31 + CAST(ascii(substring({col}, i, 1)) AS BIGINT))"
+        f" % {mod})"
+    )
+
+
+def tokens_expr():
     """Lowercased whitespace tokens."""
-    return F.split(F.lower(F.col(text_col)), r"\s+")
+    return F.split(F.lower(F.col(TEXT_COL)), r"\s+")
 
 
-def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _tokenized(df: DataFrame) -> DataFrame:
     """(id, _toks) with the text split exactly once.
 
     Binding the token array to a column (instead of repeating the split
@@ -69,34 +113,35 @@ def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # a small corpus often arrives as one parquet file → one partition →
     # the explode and downstream self-joins would run serially (see
     # session.spread)
-    return spread(df, (id_col,)).select(
-        F.col(id_col), tokens_expr(text_col).alias("_toks")
+    return spread(df, (ID_COL,)).select(
+        F.col(ID_COL), tokens_expr().alias("_toks")
     )
 
 
-def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             n: int = DEFAULT_SHINGLE) -> DataFrame:
+def _explode_shingles(df: DataFrame, n: int, shingle_sql: str) -> DataFrame:
+    """One row per (doc, distinct word n-gram), each n-gram the SQL
+    ``shingle_sql`` over the token slice ``slice(_toks, i, n)``."""
+    sh = F.when(
+        F.size("_toks") >= n,
+        F.expr(
+            f"array_distinct(transform(sequence(1, size(_toks) - {n - 1}),"
+            f" i -> {shingle_sql}))"
+        ),
+    ).otherwise(F.array())
+    return _tokenized(df).select(F.col(ID_COL), F.explode(sh).alias("shingle"))
+
+
+def shingles(df: DataFrame, n: int = DEFAULT_SHINGLE) -> DataFrame:
     """One row per (doc, distinct word n-gram shingle), as a string.
 
     Pure Column expression (sequence → slice → array_join). String
     shingles are the ground-truth relation (DuckDB oracles replay them
     verbatim); signature pipelines use ``hashed_shingles`` instead.
     """
-    sh = F.when(
-        F.size("_toks") >= n,
-        F.expr(
-            f"array_distinct(transform(sequence(1, size(_toks) - {n - 1}),"
-            f" i -> array_join(slice(_toks, i, {n}), ' ')))"
-        ),
-    ).otherwise(F.array())
-    return _tokenized(df, id_col, text_col).select(
-        F.col(id_col), F.explode(sh).alias("shingle")
-    )
+    return _explode_shingles(df, n, f"array_join(slice(_toks, i, {n}), ' ')")
 
 
-def hashed_shingles(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    n: int = DEFAULT_SHINGLE) -> DataFrame:
+def hashed_shingles(df: DataFrame) -> DataFrame:
     """One row per (doc, distinct word n-gram shingle), as an 8-byte
     xxhash64 of the token slice — no per-shingle string is ever built.
 
@@ -107,16 +152,8 @@ def hashed_shingles(df: DataFrame, id_col: str = "doc_id",
     strings — this is the relation the MinHash/LSH and incremental-index
     paths run on at corpus scale.
     """
-    sh = F.when(
-        F.size("_toks") >= n,
-        F.expr(
-            f"array_distinct(transform(sequence(1, size(_toks) - {n - 1}),"
-            f" i -> xxhash64(slice(_toks, i, {n}))))"
-        ),
-    ).otherwise(F.array())
-    return _tokenized(df, id_col, text_col).select(
-        F.col(id_col), F.explode(sh).alias("shingle")
-    )
+    n = DEFAULT_SHINGLE
+    return _explode_shingles(df, n, f"xxhash64(slice(_toks, i, {n}))")
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
@@ -131,7 +168,16 @@ def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame
     )
 
 
-def shingle_pair_counts(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _join_set_sizes(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """Pair relation ``inter`` (doc_a, doc_b, …) plus both docs' shingle
+    set sizes ``n_a`` and ``n_b`` from the (doc, shingle) relation ``sh``."""
+    sizes = sh.groupBy(ID_COL).agg(F.count("*").alias("n_sh"))
+    sa = sizes.select(F.col(ID_COL).alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(ID_COL).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def shingle_pair_counts(sh: DataFrame) -> DataFrame:
     """(doc_a, doc_b, n_inter, n_a, n_b) for every unordered doc pair
     sharing ≥1 shingle: |A∩B| via shingle self-join plus both set sizes.
 
@@ -144,20 +190,17 @@ def shingle_pair_counts(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     The shingle relation feeds three subplans (sizes + both join sides) —
     cache it so the tokenize/shingle explode runs once, not three times."""
     sh = _cache(sh)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
         a.join(b, F.col("a.shingle") == F.col("b.shingle"))
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}"))
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+            F.col(f"a.{ID_COL}").alias("doc_a"), F.col(f"b.{ID_COL}").alias("doc_b")
         )
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return inter.join(sa, "doc_a").join(sb, "doc_b")
+    return _join_set_sizes(inter, sh)
 
 
 def jaccard_from_pair_counts(counts: DataFrame, threshold: float) -> DataFrame:
@@ -190,47 +233,81 @@ def containment_from_pair_counts(
     )
 
 
-def _jaccard_from_shingles(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Pair Jaccard from a (doc, shingle) relation — the one-shot
-    composition of ``shingle_pair_counts`` + ``jaccard_from_pair_counts``."""
-    return jaccard_from_pair_counts(shingle_pair_counts(sh, id_col), threshold)
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.5,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float) -> DataFrame:
     """Exact word-n-gram Jaccard near-duplicate pairs (doc_a < doc_b).
 
     Ground truth for MinHash; quadratic on hot shingles — small/medium
     scale only (see module docstring)."""
-    return _jaccard_from_shingles(shingles(df, id_col, text_col, n), id_col, threshold)
+    return jaccard_from_pair_counts(shingle_pair_counts(shingles(df)), threshold)
 
 
-def minhash_signatures(
-    sh: DataFrame, id_col: str = "doc_id", num_perm: int = NUM_PERM
+def band_pairs(
+    bands: DataFrame, keys: Sequence[str], extra: Sequence[F.Column] = ()
 ) -> DataFrame:
+    """The one candidate join of the dedup family: documents that agree
+    on every column of ``keys`` in the bands relation (one row per doc
+    and band), as ``(doc_a, doc_b)`` with ``doc_a < doc_b``, each pair
+    once however many bands it shares.
+
+    ``extra`` adds output columns computed from the two sides, which it
+    names ``a.<col>`` and ``b.<col>``: SimHash carries both signatures
+    into a Hamming distance, the banding sweep keeps its config key.
+    """
+    a = bands.alias("a")
+    b = bands.alias("b")
+    same_band = functools.reduce(
+        operator.and_, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    )
+    return (
+        a.join(b, same_band & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}")))
+        .select(
+            F.col(f"a.{ID_COL}").alias("doc_a"),
+            F.col(f"b.{ID_COL}").alias("doc_b"),
+            *extra,
+        )
+        .distinct()
+    )
+
+
+def _verify_candidate_pairs(
+    sh: DataFrame, candidates: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verification of (doc_a, doc_b) candidate pairs:
+    count shingle intersections for candidates only, filter on the true
+    Jaccard. No forced broadcast — AQE broadcasts the candidate side when
+    it is small (the well-tuned-LSH case) and falls back to a shuffle join
+    when a pathological corpus (tiny vocabulary → huge candidate sets)
+    makes broadcasting the wrong move."""
+    sa = sh.select(F.col(ID_COL).alias("doc_a"), "shingle")
+    sb = sh.select(F.col(ID_COL).alias("doc_b"), "shingle")
+    inter = (
+        candidates.join(sa, "doc_a")
+        .join(sb, ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_inter"))
+    )
+    return jaccard_from_pair_counts(_join_set_sizes(inter, sh), threshold)
+
+
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """Per-doc MinHash signature over a ``hashed_shingles`` relation.
 
     Permutation p of a shingle hash h is a seeded xorshift64 step
     (h XOR C_p, then three xor-shifts) — an invertible 64-bit mixer, so
     each permutation is a bijection of the already-xxhash64-uniform
-    shingle space. This replaces num_perm independent string hashes with
+    shingle space. This replaces NUM_PERM independent string hashes with
     ONE string hash (inside ``hashed_shingles``) plus 4 integer ops per
     permutation — measured 3.6× on the signature build — and stays
     overflow-free under ANSI mode (xor/shift only, no multiply).
 
-    One aggregation — num_perm mins computed map-side-partial in a single
+    One aggregation — NUM_PERM mins computed map-side-partial in a single
     pass (no per-permutation shuffles).
     """
     mins = [
         F.min(F.col("shingle").bitwiseXOR(F.lit(_XOR_PERM[p]))).alias(f"h{p}")
-        for p in range(num_perm)
+        for p in range(NUM_PERM)
     ]
-    return sh.groupBy(id_col).agg(*mins)
+    return sh.groupBy(ID_COL).agg(*mins)
 
 
 def _splitmix64(seed: int) -> list[int]:
@@ -259,45 +336,32 @@ def _splitmix64(seed: int) -> list[int]:
 _XOR_PERM = _splitmix64(0x5EED_0F_5EED)
 
 
-def band_hashes(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
-) -> DataFrame:
+def band_hashes(sig: DataFrame) -> DataFrame:
     """(doc, band_id, band_hash) from a MinHash signature relation: each
     band's rows are hashed together so one equal band ⇒ LSH candidate.
     Shared by the self-join path (``minhash_lsh_pairs``) and the
     incremental index (``build_dedup_index``) so both sides of an
     incremental join derive identical band hashes."""
-    rows_per_band = num_perm // num_bands
+    rows_per_band = NUM_PERM // NUM_BANDS
     band_cols = [
         F.xxhash64(
             F.lit(band),
             *[F.col(f"h{band * rows_per_band + r}") for r in range(rows_per_band)],
         ).alias(f"b{band}")
-        for band in range(num_bands)
+        for band in range(NUM_BANDS)
     ]
     return sig.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.explode(
             F.map_from_arrays(
-                F.array(*[F.lit(b) for b in range(num_bands)]),
+                F.array(*[F.lit(b) for b in range(NUM_BANDS)]),
                 F.array(*band_cols),
             )
         ).alias("band_id", "band_hash"),
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.5,
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, verified with exact Jaccard.
 
     signatures → band hashes → bucket join (candidates) → exact-Jaccard
@@ -309,67 +373,13 @@ def minhash_lsh_pairs(
     # Hashed shingles throughout — signatures mix the hash, and the
     # exact-Jaccard verification counts are identical to string shingles
     # (see hashed_shingles collision note) while joining on longs.
-    sh = _cache(hashed_shingles(df, id_col, text_col, n))
-    sig = minhash_signatures(sh, id_col, num_perm)
-    bands = band_hashes(sig, id_col, num_perm, num_bands)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
-    return _verify_candidate_pairs(sh, candidates, id_col, threshold)
+    sh = _cache(hashed_shingles(df))
+    bands = band_hashes(minhash_signatures(sh))
+    candidates = band_pairs(bands, ("band_id", "band_hash"))
+    return _verify_candidate_pairs(sh, candidates, threshold)
 
 
-def _verify_candidate_pairs(
-    sh: DataFrame, candidates: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification of (doc_a, doc_b) candidate pairs:
-    count shingle intersections for candidates only, filter on the true
-    Jaccard. No forced broadcast — AQE broadcasts the candidate side when
-    it is small (the well-tuned-LSH case) and falls back to a shuffle join
-    when a pathological corpus (tiny vocabulary → huge candidate sets)
-    makes broadcasting the wrong move."""
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sa = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    sb = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        candidates.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.5,
-    max_candidate_ratio: float | None = 64.0,
-) -> DataFrame:
+def ngram_jaccard_pairs_prefix(df: DataFrame, threshold: float) -> DataFrame:
     """EXACT near-dup pairs via prefix filtering (AllPairs/PPJoin family).
 
     Identical output to ``ngram_jaccard_pairs``, sub-quadratic candidates:
@@ -388,265 +398,126 @@ def ngram_jaccard_pairs_prefix(
     WORSE than the naive join on an adversarial 10× corpus — SCALE.md).
     Before running the join we bound its size exactly from per-shingle
     prefix frequencies (Σ c·(c−1)/2 — one linear aggregation, no join);
-    if that exceeds ``max_candidate_ratio × |corpus|`` the prefixes are
+    if that exceeds ``MAX_CANDIDATE_RATIO × |corpus|`` the prefixes are
     not discriminating and we fall back to the naive shingle join, which
-    is the cheaper plan precisely in that regime. ``None`` disables the
-    guard (keeps the plan fully lazy / action-free).
+    is the cheaper plan precisely in that regime.
     """
     # hashed shingles: prefix filtering is correct under ANY global total
     # order of the shingle domain, and the output Jaccard values are
     # hash-scheme-independent — so the fixed-width relation is safe here
-    sh = _cache(hashed_shingles(df, id_col, text_col, n))
+    sh = _cache(hashed_shingles(df))
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df_freq"))
     ranked = (
         sh.join(freq, "shingle")
         .withColumn(
             "_rank",
             F.row_number().over(
-                Window.partitionBy(id_col).orderBy(
+                Window.partitionBy(ID_COL).orderBy(
                     F.col("df_freq").asc(), F.col("shingle").asc()
                 )
             ),
         )
-        .withColumn("_n", F.count("*").over(Window.partitionBy(id_col)))
+        .withColumn("_n", F.count("*").over(Window.partitionBy(ID_COL)))
     )
-    prefix = ranked.filter(
-        F.col("_rank") <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
-    ).select(id_col, "shingle")
-    if max_candidate_ratio is not None:
-        prefix = _cache(prefix)
-        est_row = (
-            prefix.groupBy("shingle")
-            .agg(F.count("*").alias("c"))
-            .agg(
-                F.sum(
-                    F.col("c") * (F.col("c") - 1) / F.lit(2.0)
-                ).alias("est_pairs")
-            )
-            .collect()[0]
-        )
-        est_pairs = float(est_row["est_pairs"] or 0.0)
-        n_docs = sh.select(id_col).distinct().count()
-        if est_pairs > max_candidate_ratio * max(n_docs, 1):
-            return _jaccard_from_shingles(sh, id_col, threshold)
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .distinct()
+    prefix = _cache(
+        ranked.filter(
+            F.col("_rank") <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
+        ).select(ID_COL, "shingle")
     )
-    return _verify_candidate_pairs(sh, candidates, id_col, threshold)
-
-
-def simhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """64-bit SimHash per document from token hashes.
-
-    For bit b: sum +1/-1 over tokens according to bit b of xxhash64(token);
-    signature bit b = 1 iff the sum is positive. One groupBy with 64
-    conditional sums (map-side partials), then a bit-pack expression.
-    """
-    from udacitydatawarehouseprj_spark.session import spread
-
-    toks = spread(df, (id_col,)).select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("tok")
-    ).withColumn("h", F.xxhash64("tok"))
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                -1
-            )
-        ).alias(f"s{b}")
-        for b in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
-    packed = functools.reduce(
-        operator.add,
-        [
-            F.when(F.col(f"s{b}") > 0, F.lit(1).cast("long") * (1 << b) if b < 63
-                   else F.lit(-(1 << 63)).cast("long")).otherwise(F.lit(0).cast("long"))
-            for b in range(64)
-        ],
+    est_row = (
+        prefix.groupBy("shingle")
+        .agg(F.count("*").alias("c"))
+        .agg(F.sum(F.col("c") * (F.col("c") - 1) / F.lit(2.0)).alias("est_pairs"))
+        .collect()[0]
     )
-    return agg.select(F.col(id_col), packed.alias("simhash"))
+    est_pairs = float(est_row["est_pairs"] or 0.0)
+    n_docs = sh.select(ID_COL).distinct().count()
+    if est_pairs > MAX_CANDIDATE_RATIO * max(n_docs, 1):
+        return jaccard_from_pair_counts(shingle_pair_counts(sh), threshold)
+    candidates = band_pairs(prefix, ("shingle",))
+    return _verify_candidate_pairs(sh, candidates, threshold)
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs with SimHash Hamming distance ≤ ``max_hamming``.
-
-    Bucket on 4 × 16-bit bands (pigeonhole: any pair within distance 3
-    agrees on ≥1 band), join within buckets, verify exact Hamming distance
-    via bit_count(xor). Linear-ish; the band join is the only shuffle.
-
-    ``signatures`` lets callers that also consume the signature relation
-    (e.g. the band-completeness invariant) compute it once and share it.
-    """
-    sig = (
-        signatures
-        if signatures is not None
-        else simhash_signatures(df, id_col, text_col)
-    )
-    bands = sig.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.shiftright(F.col("simhash"), i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("band_val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "simhash", "band.band_id", "band.band_val")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# --- SQL-portable SimHash (cross-engine checkable) ---------------------
+# --- SimHash -------------------------------------------------------------
 #
-# The xxhash64-based simhash above is the engine-native production path
-# but cannot be reproduced in a SQL oracle. This variant derives a 32-bit
-# signature from a polynomial rolling hash over token characters — pure
-# integer arithmetic, bit-identical in any engine:
-#   h(token) = fold_{c in chars}( (acc*31 + code(c)) mod P ), acc0=0
-#   sig bit b = 1  iff  sum_{tokens} (2*((h>>b)&1) - 1) > 0,  b in 0..31
-
-# prime < 2^50 so acc*31 stays < 2^55 — no int64 overflow in EITHER engine
-# (DuckDB and non-ANSI Spark would wrap differently on overflow)
-PORTABLE_HASH_MOD = 999_999_999_999_989
-PORTABLE_SIM_BITS = 32
+# For bit b: sum +1/-1 over a doc's tokens according to bit b of the token
+# hash; signature bit b = 1 iff the sum is positive. A variant is
+# (token hash, signature bits, band bits). The native one is the
+# production detector; the portable one's token hash (see char_fold_hash)
+# is bit-identical in any engine, so the DuckDB oracle replays it.
+SIMHASH_NATIVE = (F.xxhash64, 64, 16)
+SIMHASH_PORTABLE = (
+    functools.partial(char_fold_hash, mod=PORTABLE_HASH_MOD), PORTABLE_SIM_BITS, 8
+)
 
 
-def _portable_token_hash_expr(tok_col: str) -> F.Column:
-    return F.expr(
-        f"aggregate(sequence(1, length({tok_col})), 0L,"
-        f" (acc, i) -> (acc * 31 + CAST(ascii(substring({tok_col}, i, 1)) AS BIGINT))"
-        f" % {PORTABLE_HASH_MOD})"
-    )
-
-
-def simhash_portable_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, variant: tuple) -> DataFrame:
+    """(doc, simhash) for one SimHash ``variant``: one groupBy with one
+    conditional sum per bit (map-side partials), then a bit-pack."""
     from udacitydatawarehouseprj_spark.session import spread
 
-    toks = spread(df, (id_col,)).select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("tok")
-    ).withColumn("h", _portable_token_hash_expr("tok"))
+    token_hash, bits, _ = variant
+    toks = spread(df, (ID_COL,)).select(
+        F.col(ID_COL), F.explode(tokens_expr()).alias("tok")
+    ).withColumn("h", token_hash("tok"))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1)
             .otherwise(-1)
         ).alias(f"s{b}")
-        for b in range(PORTABLE_SIM_BITS)
+        for b in range(bits)
     ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
+    agg = toks.groupBy(ID_COL).agg(*bit_sums)
+    # bit 63 of a 64-bit signature is the sign bit of a long: weight -2^63
     packed = functools.reduce(
         operator.add,
         [
-            F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-            for b in range(PORTABLE_SIM_BITS)
+            F.when(
+                F.col(f"s{b}") > 0,
+                F.lit(-(1 << 63) if b == 63 else 1 << b).cast("long"),
+            ).otherwise(F.lit(0).cast("long"))
+            for b in range(bits)
         ],
     )
-    return agg.select(F.col(id_col), packed.alias("simhash"))
+    return agg.select(F.col(ID_COL), packed.alias("simhash"))
 
 
-def simhash_portable_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs on the portable 32-bit simhash, Hamming ≤ k, found
-    via 4×8-bit pigeonhole bands (any pair within distance 3 agrees on ≥1
-    band). Same algorithmic shape as simhash_pairs; every step is
-    SQL-portable, so the DuckDB oracle replays it exactly."""
-    sig = simhash_portable_signatures(df, id_col, text_col)
+def simhash_pairs(sig: DataFrame, variant: tuple) -> DataFrame:
+    """Near-dup pairs with SimHash Hamming distance ≤ ``MAX_HAMMING`` from
+    a ``simhash_signatures`` relation of the same ``variant``.
+
+    Bucket on 4 bands of the variant's band width (pigeonhole: any pair
+    within distance 3 agrees on ≥1 band), join within buckets, verify
+    exact Hamming distance via bit_count(xor). Linear-ish; the band join
+    is the only shuffle.
+    """
+    _, bits, band_bits = variant
     bands = sig.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.col("simhash"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("band_id"),
-                        F.shiftright(F.col("simhash"), i * 8)
-                        .bitwiseAND(F.lit(0xFF))
+                        F.shiftright(F.col("simhash"), i * band_bits)
+                        .bitwiseAND(F.lit((1 << band_bits) - 1))
                         .alias("band_val"),
                     )
-                    for i in range(4)
+                    for i in range(bits // band_bits)
                 ]
             )
         ).alias("band"),
-    ).select(id_col, "simhash", "band.band_id", "band.band_val")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    ).select(ID_COL, "simhash", "band.band_id", "band.band_val")
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return band_pairs(
+        bands, ("band_id", "band_val"), [hamming.alias("hamming")]
+    ).filter(F.col("hamming") <= MAX_HAMMING)
 
 
-def decontaminate_overlap(
-    train: DataFrame,
-    eval_set: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    min_overlap: int = 5,
-) -> DataFrame:
+def decontaminate_overlap(train: DataFrame, eval_set: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing ≥
-    ``min_overlap`` distinct word n-grams with any eval/benchmark document
+    ``MIN_OVERLAP`` distinct word n-grams with any eval/benchmark document
     (the n-gram-overlap contamination check used by LLM training
     pipelines; word-3-grams here, 13-grams in the usual report recipe —
     one constant).
@@ -655,67 +526,48 @@ def decontaminate_overlap(
     side streams. One aggregation, no self-join — linear in the corpus.
     Returns (train_id, eval_id, n_overlap) pairs above the threshold.
     """
-    tr = shingles(train, id_col, text_col, n).select(
-        F.col(id_col).alias("train_id"), "shingle"
-    )
-    ev = shingles(eval_set, id_col, text_col, n).select(
-        F.col(id_col).alias("eval_id"), "shingle"
-    )
+    tr = shingles(train).select(F.col(ID_COL).alias("train_id"), "shingle")
+    ev = shingles(eval_set).select(F.col(ID_COL).alias("eval_id"), "shingle")
     return (
         tr.join(F.broadcast(ev), "shingle")
         .groupBy("train_id", "eval_id")
         .agg(F.count("*").alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
+        .filter(F.col("n_overlap") >= MIN_OVERLAP)
     )
 
 
-def build_dedup_index(
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
-) -> DataFrame:
+def build_dedup_index(corpus: DataFrame) -> DataFrame:
     """Persistent dedup index for a corpus: one row per (doc, band_id,
     band_hash) carrying the doc's exact-text hash.
 
     This is the artifact that makes dedup INCREMENTAL at 100 TB: the
     corpus is shingled/signed ONCE, the index (tiny relative to text —
-    num_bands longs + one hash per doc) is persisted (ideally bucketed
+    NUM_BANDS longs + one hash per doc) is persisted (ideally bucketed
     by band_hash), and every new crawl batch joins against it without
     touching corpus text again. Corpus text is only fetched afterwards,
     by id, for the candidate pairs that survive banding.
     """
-    sh = hashed_shingles(corpus, id_col, text_col, n)
-    sig = minhash_signatures(sh, id_col, num_perm)
-    bands = band_hashes(sig, id_col, num_perm, num_bands)
+    bands = band_hashes(minhash_signatures(hashed_shingles(corpus)))
     th = corpus.select(
-        F.col(id_col), F.xxhash64(F.col(text_col)).alias("text_hash")
+        F.col(ID_COL), F.xxhash64(F.col(TEXT_COL)).alias("text_hash")
     )
-    return bands.join(th, id_col)
+    return bands.join(th, ID_COL)
 
 
 def incremental_dedup(
-    batch: DataFrame,
-    corpus: DataFrame,
-    index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.5,
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
-    _with_index: bool = False,
-):
+    batch: DataFrame, corpus: DataFrame, index: DataFrame
+) -> tuple[DataFrame, DataFrame]:
     """Survivors of ``batch`` after dedup against an indexed corpus and
-    within the batch itself.
+    within the batch itself, plus the survivors' index rows
+    ``(id, band_id, band_hash, text_hash)`` for appending to the
+    persistent corpus index. Both are lazy; a caller that consumes both
+    (the streaming ingest loop) caches the survivors.
 
     A batch doc is KILLED iff any of:
       1. exact text match with a corpus doc (index text_hash candidates,
          confirmed on real text fetched by id — hash collisions can't
          produce a false kill);
-      2. verified near-dup (exact Jaccard ≥ threshold on LSH band
+      2. verified near-dup (exact Jaccard ≥ DUP_THRESHOLD on LSH band
          candidates) with a corpus doc;
       3. exact or verified-near duplicate of a SMALLER-id batch doc
          (deterministic canonical keeper), regardless of that partner's
@@ -732,35 +584,34 @@ def incremental_dedup(
     # exact-hash join and the band join — cache it so the corpus
     # shingle/signature pipeline runs once, not once per consumer
     index = _cache(index)
-    batch_sh = _cache(hashed_shingles(batch, id_col, text_col, n))
-    batch_sig = minhash_signatures(batch_sh, id_col, num_perm)
+    batch_sh = _cache(hashed_shingles(batch))
     # bands feed the corpus band join, BOTH sides of the within-batch
-    # band self-join, and (in the _with_index variant) the survivor
-    # index rows — cache or the signature aggregate runs per consumer
-    batch_bands = _cache(band_hashes(batch_sig, id_col, num_perm, num_bands))
+    # band self-join, and the survivor index rows — cache or the
+    # signature aggregate runs per consumer
+    batch_bands = _cache(band_hashes(minhash_signatures(batch_sh)))
     batch_th = batch.select(
-        F.col(id_col).alias("b_id"),
-        F.xxhash64(F.col(text_col)).alias("b_text_hash"),
-        F.col(text_col).alias("b_text"),
+        F.col(ID_COL).alias("b_id"),
+        F.xxhash64(F.col(TEXT_COL)).alias("b_text_hash"),
+        F.col(TEXT_COL).alias("b_text"),
     )
 
     # --- rule 1: exact-vs-corpus (hash candidates, text-confirmed) ----
     exact_cand = (
         batch_th.join(
             index.select(
-                F.col(id_col).alias("c_id"), F.col("text_hash")
+                F.col(ID_COL).alias("c_id"), F.col("text_hash")
             ).distinct(),
             F.col("b_text_hash") == F.col("text_hash"),
         )
         .select("b_id", "c_id", "b_text")
     )
     corpus_text = corpus.select(
-        F.col(id_col).alias("c_id"), F.col(text_col).alias("c_text")
+        F.col(ID_COL).alias("c_id"), F.col(TEXT_COL).alias("c_text")
     )
     exact_kill = (
         exact_cand.join(corpus_text, "c_id")
         .filter(F.col("b_text") == F.col("c_text"))
-        .select(F.col("b_id").alias(id_col))
+        .select(F.col("b_id").alias(ID_COL))
         .distinct()
     )
 
@@ -773,8 +624,8 @@ def incremental_dedup(
             & (F.col("nb.band_hash") == F.col("ix.band_hash")),
         )
         .select(
-            F.col(f"nb.{id_col}").alias("doc_a"),
-            F.col(f"ix.{id_col}").alias("doc_b"),
+            F.col(f"nb.{ID_COL}").alias("doc_a"),
+            F.col(f"ix.{ID_COL}").alias("doc_b"),
         )
         .distinct()
     )
@@ -784,18 +635,16 @@ def incremental_dedup(
     # verification needs shingles for BOTH sides; corpus shingles are
     # rebuilt only for candidate docs (id-targeted semi-join + shingle)
     cand_corpus_docs = corpus.join(
-        near_cand.select(F.col("doc_b").alias(id_col)).distinct(),
-        id_col,
+        near_cand.select(F.col("doc_b").alias(ID_COL)).distinct(),
+        ID_COL,
         "left_semi",
     )
     # the union feeds three verification subplans (sizes + both join
     # sides) — cache it or the candidate-doc shingling runs three times
-    both_sh = _cache(
-        batch_sh.union(hashed_shingles(cand_corpus_docs, id_col, text_col, n))
-    )
+    both_sh = _cache(batch_sh.union(hashed_shingles(cand_corpus_docs)))
     near_kill = (
-        _verify_candidate_pairs(both_sh, near_cand, id_col, threshold)
-        .select(F.col("doc_a").alias(id_col))
+        _verify_candidate_pairs(both_sh, near_cand, DUP_THRESHOLD)
+        .select(F.col("doc_a").alias(ID_COL))
         .distinct()
     )
 
@@ -808,25 +657,12 @@ def incremental_dedup(
             & (F.col("x.b_id") < F.col("y.b_id")),
         )
         .filter(F.col("x.b_text") == F.col("y.b_text"))
-        .select(F.col("y.b_id").alias(id_col))
+        .select(F.col("y.b_id").alias(ID_COL))
     )
-    bb = batch_bands.alias("p")
-    batch_near_cand = (
-        bb.join(
-            batch_bands.alias("q"),
-            (F.col("p.band_id") == F.col("q.band_id"))
-            & (F.col("p.band_hash") == F.col("q.band_hash"))
-            & (F.col(f"p.{id_col}") < F.col(f"q.{id_col}")),
-        )
-        .select(
-            F.col(f"p.{id_col}").alias("doc_a"),
-            F.col(f"q.{id_col}").alias("doc_b"),
-        )
-        .distinct()
-    )
+    batch_near_cand = band_pairs(batch_bands, ("band_id", "band_hash"))
     batch_near_kill = (
-        _verify_candidate_pairs(batch_sh, batch_near_cand, id_col, threshold)
-        .select(F.col("doc_b").alias(id_col))
+        _verify_candidate_pairs(batch_sh, batch_near_cand, DUP_THRESHOLD)
+        .select(F.col("doc_b").alias(ID_COL))
         .distinct()
     )
 
@@ -836,52 +672,19 @@ def incremental_dedup(
         .union(batch_near_kill)
         .distinct()
     )
-    survivors = batch.select(id_col).join(kills, id_col, "left_anti")
-    if not _with_index:
-        return survivors
+    survivors = batch.select(ID_COL).join(kills, ID_COL, "left_anti")
     # Survivor index rows (the ingest loop's persistent-index append)
     # derived from the ALREADY-CACHED batch bands + text hashes — without
     # this, callers re-run the whole shingle→signature→band pipeline on
     # survivors just to index them (measured: doubles per-batch cost in
     # the streaming ingest loop).
-    survivors = _cache(survivors)
-    surv_index = batch_bands.join(survivors, id_col, "left_semi").join(
+    surv_index = batch_bands.join(survivors, ID_COL, "left_semi").join(
         batch_th.select(
-            F.col("b_id").alias(id_col), F.col("b_text_hash").alias("text_hash")
+            F.col("b_id").alias(ID_COL), F.col("b_text_hash").alias("text_hash")
         ),
-        id_col,
+        ID_COL,
     )
     return survivors, surv_index
-
-
-def incremental_dedup_with_index(
-    batch: DataFrame,
-    corpus: DataFrame,
-    index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.5,
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
-) -> tuple[DataFrame, DataFrame]:
-    """``incremental_dedup`` plus the survivors' index rows
-    ``(id, band_id, band_hash, text_hash)`` for appending to the
-    persistent corpus index — computed from the batch's cached
-    bands/hashes, not by re-signing the survivors. This is the call the
-    streaming ingest loop makes once per micro-batch."""
-    return incremental_dedup(
-        batch,
-        corpus,
-        index,
-        id_col,
-        text_col,
-        n,
-        threshold,
-        num_perm,
-        num_bands,
-        _with_index=True,
-    )
 
 
 # --- Portable Bloom-filter decontamination -----------------------------
@@ -921,16 +724,9 @@ def _bloom_probe_cols(h: F.Column) -> list[tuple[F.Column, F.Column]]:
     return out
 
 
-def decontaminate_bloom(
-    train: DataFrame,
-    evals: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    min_overlap: int = 5,
-) -> DataFrame:
+def decontaminate_bloom(train: DataFrame, evals: DataFrame) -> DataFrame:
     """Train docs whose distinct shingles hit the eval Bloom filter ≥
-    ``min_overlap`` times: (train_id, n_flagged).
+    ``MIN_OVERLAP`` times: (train_id, n_flagged).
 
     Build: eval shingles → portable hash → k (word, mask) rows → one
     ``bit_or`` aggregation into ≤2048 words. Probe: distinct train
@@ -939,78 +735,63 @@ def decontaminate_bloom(
     Jaccard-true overlaps always (no false negatives); false positives
     are the documented Bloom trade and deterministic here.
     """
-    from pyspark.sql import functions as _F
 
     def hashed(df: DataFrame) -> DataFrame:
         # cached: the k probe arms below union k copies of this relation,
         # which would otherwise re-run the shingle explode + per-char
         # polynomial hash fold once per arm (measured ~2× on the train
         # side at sf0.1)
-        sh = shingles(df, id_col, text_col, n)
         return _cache(
-            sh.select(
-                _F.col(id_col), _portable_token_hash_expr("shingle").alias("h")
+            shingles(df).select(
+                F.col(ID_COL),
+                char_fold_hash("shingle", PORTABLE_HASH_MOD).alias("h"),
             )
         )
 
     ev = hashed(evals)
     eval_probes = [
         ev.select(w.alias("word"), mk.alias("mask"))
-        for w, mk in _bloom_probe_cols(_F.col("h"))
+        for w, mk in _bloom_probe_cols(F.col("h"))
     ]
     all_probes = eval_probes[0]
     for p in eval_probes[1:]:
         all_probes = all_probes.unionByName(p)
-    bloom = all_probes.groupBy("word").agg(
-        _F.expr("bit_or(mask)").alias("bits")
-    )
+    bloom = all_probes.groupBy("word").agg(F.expr("bit_or(mask)").alias("bits"))
 
     tr = hashed(train).distinct()
     probe_parts = [
-        tr.select(
-            _F.col(id_col), _F.col("h"), w.alias("word"), mk.alias("mask")
-        )
-        for w, mk in _bloom_probe_cols(_F.col("h"))
+        tr.select(F.col(ID_COL), F.col("h"), w.alias("word"), mk.alias("mask"))
+        for w, mk in _bloom_probe_cols(F.col("h"))
     ]
     probes = probe_parts[0]
     for p in probe_parts[1:]:
         probes = probes.unionByName(p)
     hits = (
-        probes.join(_F.broadcast(bloom), "word")
-        .filter(_F.col("bits").bitwiseAND(_F.col("mask")) != 0)
-        .groupBy(id_col, "h")
-        .agg(_F.count("*").alias("_k_hit"))
-        .filter(_F.col("_k_hit") == BLOOM_K)
+        probes.join(F.broadcast(bloom), "word")
+        .filter(F.col("bits").bitwiseAND(F.col("mask")) != 0)
+        .groupBy(ID_COL, "h")
+        .agg(F.count("*").alias("_k_hit"))
+        .filter(F.col("_k_hit") == BLOOM_K)
     )
     return (
-        hits.groupBy(id_col)
-        .agg(_F.count("*").alias("n_flagged"))
-        .filter(_F.col("n_flagged") >= min_overlap)
-        .select(_F.col(id_col).alias("train_id"), "n_flagged")
+        hits.groupBy(ID_COL)
+        .agg(F.count("*").alias("n_flagged"))
+        .filter(F.col("n_flagged") >= MIN_OVERLAP)
+        .select(F.col(ID_COL).alias("train_id"), "n_flagged")
     )
 
 
-def delete_from_index(
-    index: DataFrame, deletes: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def delete_from_index(index: DataFrame, deletes: DataFrame) -> DataFrame:
     """Right-to-be-forgotten maintenance for a persisted dedup index:
     drop every (band/text-hash) row belonging to a deleted document.
     One broadcast anti-join — the delete list is always small relative
     to a 100 TB index. The gold-standard correctness contract (checked
     by ``delete_propagate_index``): the result must EQUAL the index
     rebuilt from scratch on the surviving corpus."""
-    return index.join(
-        F.broadcast(deletes.select(id_col)), id_col, "left_anti"
-    )
+    return index.join(F.broadcast(deletes.select(ID_COL)), ID_COL, "left_anti")
 
 
-def duplicated_tile_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tile_len: int = 40,
-    stride: int = 20,
-) -> DataFrame:
+def duplicated_tile_spans(df: DataFrame) -> DataFrame:
     """Exact-substring duplication accounting (the distributed variant of
     Lee et al. 2022, "Deduplicating Training Data Makes Language Models
     Better": find byte ranges whose content recurs verbatim anywhere in
@@ -1018,9 +799,9 @@ def duplicated_tile_spans(
     relational algebra).
 
     Tile anchoring replaces the suffix array: every document is covered
-    by ``tile_len``-char windows at ``stride`` offsets (stride <
-    tile_len ⇒ overlapping, so any verbatim repeat of length ≥
-    tile_len + stride - 1 is guaranteed to contain at least one aligned
+    by ``TILE_LEN``-char windows at ``STRIDE`` offsets (STRIDE <
+    TILE_LEN ⇒ overlapping, so any verbatim repeat of length ≥
+    TILE_LEN + STRIDE - 1 is guaranteed to contain at least one aligned
     tile occurring ≥ 2× corpus-wide). A tile whose content occurs ≥ 2
     times ANYWHERE (other docs or self-repetition — both count, as in
     the paper) marks its range duplicated; overlapping marked ranges are
@@ -1032,26 +813,26 @@ def duplicated_tile_spans(
     (no text carried past the projection); duplicate detection is ONE
     hash aggregation on the tile content with map-side partial counts
     (a boilerplate tile repeated in millions of docs combines before the
-    shuffle); the island merge windows on ``id_col`` — per-document
+    shuffle); the island merge windows on ``ID_COL`` — per-document
     cardinality, never a hot key. Returns one row per input document
     (zero-duplication docs included, dup_frac = 0).
     """
     spans_src = df.select(
-        F.col(id_col),
-        F.length(text_col).alias("_n"),
+        F.col(ID_COL),
+        F.length(TEXT_COL).alias("_n"),
         F.when(
-            F.length(text_col) >= tile_len,
+            F.length(TEXT_COL) >= TILE_LEN,
             F.expr(
-                f"transform(sequence(1, length({text_col}) - {tile_len - 1},"
-                f" {stride}), i -> struct(i AS p,"
-                f" substring({text_col}, i, {tile_len}) AS tile))"
+                f"transform(sequence(1, length({TEXT_COL}) - {TILE_LEN - 1},"
+                f" {STRIDE}), i -> struct(i AS p,"
+                f" substring({TEXT_COL}, i, {TILE_LEN}) AS tile))"
             ),
         ).otherwise(F.array()).alias("_tiles"),
     )
     tiles = _cache(
         spans_src.select(
-            F.col(id_col), F.explode("_tiles").alias("t")
-        ).select(F.col(id_col), F.col("t.p").alias("p"), F.col("t.tile").alias("tile"))
+            F.col(ID_COL), F.explode("_tiles").alias("t")
+        ).select(F.col(ID_COL), F.col("t.p").alias("p"), F.col("t.tile").alias("tile"))
     )
     dup = (
         tiles.groupBy("tile")
@@ -1059,20 +840,20 @@ def duplicated_tile_spans(
         .filter(F.col("_cnt") >= 2)
         .select("tile")
     )
-    hits = tiles.join(dup, "tile").select(F.col(id_col), "p")
+    hits = tiles.join(dup, "tile").select(F.col(ID_COL), "p")
 
     w_prev = (
-        Window.partitionBy(id_col)
+        Window.partitionBy(ID_COL)
         .orderBy("p")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_cum = (
-        Window.partitionBy(id_col)
+        Window.partitionBy(ID_COL)
         .orderBy("p")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     islands = (
-        hits.withColumn("_prev_end", F.max(F.col("p") + tile_len).over(w_prev))
+        hits.withColumn("_prev_end", F.max(F.col("p") + TILE_LEN).over(w_prev))
         .withColumn(
             "_new",
             F.when(
@@ -1081,18 +862,18 @@ def duplicated_tile_spans(
         )
         .withColumn("_island", F.sum("_new").over(w_cum))
     )
-    spans = islands.groupBy(id_col, "_island").agg(
-        F.min("p").alias("_s"), (F.max("p") + tile_len).alias("_e")
+    spans = islands.groupBy(ID_COL, "_island").agg(
+        F.min("p").alias("_s"), (F.max("p") + TILE_LEN).alias("_e")
     )
-    per_doc = spans.groupBy(id_col).agg(
+    per_doc = spans.groupBy(ID_COL).agg(
         F.count("*").alias("n_dup_spans"),
         F.sum(F.col("_e") - F.col("_s")).alias("dup_chars"),
     )
     return (
-        df.select(F.col(id_col), F.length(text_col).alias("_n"))
-        .join(per_doc, id_col, "left")
+        df.select(F.col(ID_COL), F.length(TEXT_COL).alias("_n"))
+        .join(per_doc, ID_COL, "left")
         .select(
-            F.col(id_col),
+            F.col(ID_COL),
             F.coalesce("n_dup_spans", F.lit(0)).cast("long").alias("n_dup_spans"),
             F.coalesce("dup_chars", F.lit(0)).cast("long").alias("dup_chars"),
             F.round(
@@ -1102,13 +883,7 @@ def duplicated_tile_spans(
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.8,
-) -> DataFrame:
+def ngram_containment_pairs(df: DataFrame, threshold: float) -> DataFrame:
     """ASYMMETRIC near-duplication by shingle containment:
     C(A⊂B) = |A∩B| / |A| — the template/boilerplate relation Jaccard
     misses. A 50-shingle licence block fully embedded in a 5000-shingle
@@ -1127,18 +902,12 @@ def ngram_containment_pairs(
     candidates.
     """
     return containment_from_pair_counts(
-        shingle_pair_counts(shingles(df, id_col, text_col, n), id_col),
-        threshold,
+        shingle_pair_counts(shingles(df)), threshold
     )
 
 
 def containment_on_candidates(
-    df: DataFrame,
-    cand: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.8,
+    df: DataFrame, cand: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact shingle containment verified ONLY on a candidate pair
     relation ``cand`` (columns doc_a < doc_b) — the production
@@ -1162,13 +931,9 @@ def containment_on_candidates(
     list against those arrays, intersection sizes via array_intersect
     — all JVM Column expressions, candidate-bounded end to end.
     """
-    sets_ = (
-        shingles(df, id_col, text_col, n)
-        .groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("sh"))
-    )
-    a = sets_.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sets_.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
+    sets_ = shingles(df).groupBy(ID_COL).agg(F.collect_set("shingle").alias("sh"))
+    a = sets_.select(F.col(ID_COL).alias("doc_a"), F.col("sh").alias("sh_a"))
+    b = sets_.select(F.col(ID_COL).alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     c_ab = inter / F.size("sh_a").cast("double")
     c_ba = inter / F.size("sh_b").cast("double")

@@ -677,7 +677,7 @@ def dsir_doc_bucket_counts(
     relation for DSIR importance weighting (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"):
     lowercase whitespace tokens → adjacent-pair bigram strings → portable
-    char-fold hash (dedup._portable_token_hash_expr — bit-identical in
+    char-fold hash (dedup.char_fold_hash — bit-identical in
     any int64 engine) → bucket = h % DSIR_BUCKETS.
 
     ONE explode pass over the corpus and ONE doc-key shuffle; every
@@ -686,7 +686,8 @@ def dsir_doc_bucket_counts(
     n_docs × min(n_bigrams, B) rows.
     """
     from udacitydatawarehouseprj_spark.operators.dedup import (
-        _portable_token_hash_expr,
+        PORTABLE_HASH_MOD,
+        char_fold_hash,
     )
 
     base = df.select(id_col, *extra_cols, _toks(text_col).alias("_toks"))
@@ -701,7 +702,7 @@ def dsir_doc_bucket_counts(
     )
     exploded = (
         base.select(id_col, *extra_cols, F.explode(bigrams).alias("bg"))
-        .withColumn("h", _portable_token_hash_expr("bg"))
+        .withColumn("h", char_fold_hash("bg", PORTABLE_HASH_MOD))
         .withColumn("bucket", (F.col("h") % DSIR_BUCKETS).cast("int"))
     )
     return exploded.groupBy(id_col, *extra_cols, "bucket").agg(

@@ -87,9 +87,10 @@ def run_incremental_dedup_stream(
         index = _read_or_empty(sess, index_dir, index_schema).select(
             "doc_id", "band_id", "band_hash", "text_hash"
         )
-        surv_ids, surv_index = dedup.incremental_dedup_with_index(
-            docs, corpus, index
-        )
+        surv_ids, surv_index = dedup.incremental_dedup(docs, corpus, index)
+        # both writes below read the survivor ids: cache them so the
+        # kill-rule joins run once per batch
+        surv_ids = S.track_cache(surv_ids)
         survivors = (
             docs.join(surv_ids, "doc_id", "left_semi")
             .withColumn("batch_id", F.lit(batch_id))
